@@ -1223,9 +1223,10 @@ def read_delta_log(
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     pcols = list(meta.get("partitionColumns") or [])
     root = _local(path)
+    from aws_sdk_pandas_spark import lakehouse_shim as _ls
 
     if not adds:
-        df = spark.createDataFrame([], schema)
+        df = _ls._driver_frame(spark, [], schema)
         return df.select(*columns) if columns else df
 
     # group files by partition tuple: partition values live ONLY in the
@@ -1256,8 +1257,6 @@ def read_delta_log(
     # deletion vectors decode ON EXECUTORS (the driver ships O(files)
     # descriptors, never the row-index lists) and drop via one anti-join
     # — broadcast when small, shuffled past the cardinality threshold
-    from aws_sdk_pandas_spark import lakehouse_shim as _ls
-
     deletes, dv_card = _ls._dv_deletes_df(spark, root, dv_entries)
 
     data_fields = [f for f in schema.fields if f.name not in pcols]

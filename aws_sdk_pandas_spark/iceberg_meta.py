@@ -758,7 +758,8 @@ def export_snapshot(path: str, manifest: dict[str, Any]) -> bool:
     # holds: the delete carries this commit's seq, data files keep
     # their original adds').  The decode+write runs ON EXECUTORS when a
     # SparkSession is active (export fires inside lakelite commits, so
-    # it always is in practice) — the driver handles O(files)
+    # it always is in practice), one Python task per executor slot that
+    # writes its files one at a time — the driver handles O(files)
     # descriptors; the sessionless fallback streams each DV through a
     # bounded ParquetWriter, never holding more than one file's
     # positions.
@@ -777,12 +778,11 @@ def export_snapshot(path: str, manifest: dict[str, Any]) -> bool:
             )
         spark = SparkSession.getActiveSession()
         if spark is not None:
-            tdf = spark.createDataFrame(
+            tdf = ls._driver_frame(
+                spark,
                 [(dp, fp, dvj) for dp, fp, dvj, _p in tasks],
                 "__d string, __fp string, __dvj string",
             )
-            if len(tasks) > 1:
-                tdf = tdf.repartition(min(len(tasks), 64))
 
             def gen(batches):
                 import pandas as pd  # runs in the Python worker
@@ -1172,6 +1172,8 @@ def read_iceberg_meta(
     version-hint -> metadata.json -> manifest list -> manifests ->
     grouped parquet scans with identity-partition values injected as
     typed constants per Iceberg's constants rule."""
+    from aws_sdk_pandas_spark import lakehouse_shim as ls
+
     meta = _load_metadata(path)
     if int(meta.get("format-version", 1)) > 2:
         raise InvalidArgument(
@@ -1204,12 +1206,12 @@ def read_iceberg_meta(
         ]
     )
     if snap_id is None:
-        df = spark.createDataFrame([], st)
+        df = ls._driver_frame(spark, [], st)
         return df.select(*columns) if columns else df
 
     entries, del_entries = _live_entries(path, meta, snap_id)
     if not entries:
-        df = spark.createDataFrame([], st)
+        df = ls._driver_frame(spark, [], st)
         return df.select(*columns) if columns else df
 
     fields_by_id = {f["id"]: f for f in ice_schema["fields"]}
@@ -1293,7 +1295,8 @@ def read_iceberg_meta(
             deletes = dparts[0]
             for p in dparts[1:]:
                 deletes = deletes.unionByName(p)
-        seq_map = spark.createDataFrame(
+        seq_map = ls._driver_frame(
+            spark,
             [(p, s) for p, s in sorted(file_seq.items())],
             "__fp string, __fseq long",
         )

@@ -25,6 +25,14 @@ Design (the same shape as the real formats, scaled down to a shim):
   touching 0.1% of keys rewrites ~0.1% of the data, exactly like Delta
   CoW.  The touched-file list is collected on the driver (bounded by
   file count, the same driver-side set Delta's own commit builds).
+- ``use_deletion_vectors=True`` makes MERGE / DELETE merge-on-read:
+  touched files keep their data and gain a Delta-protocol deletion
+  vector (roaring bitmap of deleted row indexes) instead of a rewrite.
+  Reads decode the bitmaps on executors from O(files) descriptors the
+  driver ships, spread over ``min(files, defaultParallelism)``
+  partitions (:func:`_driver_frame`): one Python task per executor
+  slot, each decoding its files one at a time, so per-task memory is
+  one file's deleted-row list and the driver never holds row indexes.
 - ``merge_condition='ignore'`` is an insert-only fast path: unmatched
   source rows become a new commit, NO existing file is read or written.
 - Time travel = read an older manifest.  ``overwrite_partitions`` drops
@@ -644,7 +652,7 @@ def read(
         full_schema = full_schema.add("__lakelite_file", T.StringType())
 
     if not entries:
-        df = spark.createDataFrame([], full_schema)
+        df = _driver_frame(spark, [], full_schema)
         df = df.select(*columns) if columns else df
         return _cmap_to_logical_df(df, cmap) if cmap else df
 
@@ -768,17 +776,43 @@ def _touched_files(
 _DV_BROADCAST_MAX_ROWS = 4_000_000
 
 
+def _driver_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | T.StructType
+) -> DataFrame:
+    """A small driver-side frame (descriptors, one row per file) built
+    through Arrow into a local relation.  Spark scans a local relation
+    over ``min(len(rows), defaultParallelism)`` partitions, so a
+    ``mapInPandas`` over it runs at most one Python task per executor
+    slot, each handling its rows one at a time, and a broadcast of it
+    needs no job.  A list-built frame is a pickled Python RDD that
+    starts Python workers on every execution, one task per slice.
+    With no rows the frame is an ``emptyRDD`` (zero partitions, no
+    task runs), whatever the schema's types."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    if not rows:
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame.from_records(rows, columns=schema.fieldNames()), schema
+    )
+
+
 def _dv_deletes_df(
     spark: SparkSession, root: str, entries: list[dict[str, Any]]
 ) -> tuple[DataFrame | None, int]:
     """The (file, row_index) rows named by the entries' deletion vectors,
-    decoded ON EXECUTORS: the driver ships only O(files) descriptors;
-    each partition opens and decodes its own bitmaps (the DV bins live
-    next to the data on shared storage, like the parquet itself).
+    decoded ON EXECUTORS: the driver ships only O(files) descriptors
+    (:func:`_driver_frame`, one Python task per executor slot, not one
+    per file); each task opens and decodes its files' bitmaps one file
+    at a time (the DV bins live next to the data on shared storage,
+    like the parquet itself).
     Returns ``(DataFrame['__dfp','__dpos'], total_cardinality)`` with
     ``__dfp`` the absolute local path, or ``(None, 0)`` with no DVs.
     Peak per-task memory is ONE file's deleted-row list (bounded by
-    that file's row count), never the table-wide total."""
+    that file's row count, emitted in chunks of at most 2^20 rows),
+    never the task's or the table's total."""
     descs = [
         (os.path.abspath(os.path.join(root, e["path"])), json.dumps(e["dv"]))
         for e in entries
@@ -787,9 +821,7 @@ def _dv_deletes_df(
     if not descs:
         return None, 0
     total = sum(int((e["dv"].get("cardinality")) or 0) for e in entries if e.get("dv"))
-    desc_df = spark.createDataFrame(descs, "__dfp string, __dvj string")
-    if len(descs) > 1:
-        desc_df = desc_df.repartition(min(len(descs), 64))
+    desc_df = _driver_frame(spark, descs, "__dfp string, __dvj string")
 
     def decode(batches):
         import pandas as pd  # runs in the Python worker
@@ -883,7 +915,7 @@ def _write_dvs_distributed(
     ]
     if not desc_rows:
         return {}
-    desc = spark.createDataFrame(desc_rows, "__f string, __p string, __olddv string")
+    desc = _driver_frame(spark, desc_rows, "__f string, __p string, __olddv string")
     joined = doomed.join(F.broadcast(desc), "__f", "inner")
 
     def per_file(pdf):

@@ -271,8 +271,15 @@ def test_dv_compact_materializes(spark, tmp_path):
 def test_dv_vacuum_reclaims_dead_bins(spark, tmp_path):
     p = str(tmp_path / "t")
     _mk_table(spark, p, n=40)
-    shim.delete(spark, _keys(spark, [0]), p, ["k"], use_deletion_vectors=True)
-    shim.delete(spark, _keys(spark, [1]), p, ["k"], use_deletion_vectors=True)
+    # two keys from ONE data file, so the second delete supersedes the
+    # first one's DV (which keys share a file depends on the session's
+    # core count)
+    by_file: dict[str, list[int]] = {}
+    for r in shim.read(spark, p, with_file_path=True).collect():
+        by_file.setdefault(r["__lakelite_file"], []).append(r.k)
+    k0, k1 = sorted(next(ks for ks in by_file.values() if len(ks) >= 2))[:2]
+    shim.delete(spark, _keys(spark, [k0]), p, ["k"], use_deletion_vectors=True)
+    shim.delete(spark, _keys(spark, [k1]), p, ["k"], use_deletion_vectors=True)
     root = shim._local(p)
     dv_dir = os.path.join(root, "_dv")
     bins = sorted(os.listdir(dv_dir))
@@ -289,7 +296,72 @@ def test_dv_vacuum_reclaims_dead_bins(spark, tmp_path):
     assert set(live) == live_names
     assert any(r.startswith("_dv") for r in removed)
     got = sorted(r.k for r in shim.read(spark, p).select("k").collect())
-    assert got == list(range(2, 40))
+    assert got == [k for k in range(40) if k not in (k0, k1)]
+
+
+def test_dv_decode_runs_one_task_per_slot(spark, tmp_path):
+    """A table with 3x defaultParallelism DV-carrying files decodes its
+    deletion vectors in defaultParallelism tasks, not one per file (each
+    task decodes several files), and every read, a second DV delete and the
+    compaction still return exactly the expected rows."""
+    from aws_sdk_pandas_spark import lakehouse
+
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    n_files, per_file = 3 * slots, 10
+    p = str(tmp_path / "t")
+    # range slices are contiguous: file i holds keys [10i, 10i + 10)
+    df = spark.range(0, n_files * per_file, 1, n_files).selectExpr(
+        "CAST(id AS INT) AS k", "CAST(id % 7 AS INT) AS v"
+    )
+    shim.write(df, p, mode="overwrite")
+    assert len(shim._read_manifest(p, 0)["files"]) == n_files
+
+    def dv_files() -> list[dict]:
+        man = shim._read_manifest(p, shim.latest_version(p))
+        return [e for e in man["files"] if e.get("dv")]
+
+    def keys(frame) -> list[int]:
+        return sorted(r.k for r in frame.select("k").collect())
+
+    first = [i * per_file for i in range(n_files)]
+    res = shim.delete(spark, _keys(spark, first), p, ["k"], use_deletion_vectors=True)
+    assert res["rows_deleted"] == n_files
+    assert len(dv_files()) == n_files
+
+    group = f"dv-decode-{os.getpid()}-{id(tmp_path)}"
+    sc.setJobGroup(group, "dv decode task count")
+    try:
+        deletes, card = shim._dv_deletes_df(spark, shim._local(p), dv_files())
+        decoded = sorted((r["__dfp"], r["__dpos"]) for r in deletes.collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert card == n_files and len(decoded) == n_files
+    assert {pos for _f, pos in decoded} == {0}
+    tracker = sc.statusTracker()
+    stage_tasks = [
+        tracker.getStageInfo(sid).numTasks
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    assert stage_tasks and max(stage_tasks) == slots, stage_tasks
+
+    live = [k for k in range(n_files * per_file) if k not in first]
+    assert keys(shim.read(spark, p)) == live
+    assert keys(lakehouse.read_deltalake(spark, p)) == live
+
+    second = [i * per_file + 1 for i in range(n_files)]
+    res = shim.delete(spark, _keys(spark, second), p, ["k"], use_deletion_vectors=True)
+    assert res["rows_deleted"] == n_files and res["files_dv"] == n_files
+    live = [k for k in live if k not in second]
+    assert all(int(e["dv"]["cardinality"]) == 2 for e in dv_files())
+    assert keys(shim.read(spark, p)) == live
+    assert keys(lakehouse.read_deltalake(spark, p)) == live
+
+    shim.compact(spark, p, target_partitions=1)
+    assert dv_files() == []
+    assert keys(shim.read(spark, p)) == live
+    assert keys(lakehouse.read_deltalake(spark, p)) == live
 
 
 def test_dv_occ_same_file_conflicts_disjoint_rebases(spark, tmp_path):

@@ -17,8 +17,14 @@ Python list, several hundred MB as driver Row objects — the old
 implementation's cost), and the post-delete read returns the exact
 surviving count.
 
+The decode of the deleted table is also run once under a job group:
+``decode_stage_tasks`` lists its stages' task counts next to
+``default_parallelism`` (the decode runs at most one Python task per
+executor slot, not one per DV-carrying file).
+
 Usage: python tools/dv_scale_probe.py [n_rows] [table_dir]
-Prints one JSON line with phase timings and RSS deltas.
+Prints one JSON line with phase timings, RSS deltas and the decode
+stage's task counts.
 """
 
 from __future__ import annotations
@@ -31,13 +37,36 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def rss_mb() -> float:
     # linux: ru_maxrss is KiB.  High-water mark, so "flat" here means
     # the delete phases never PUSHED the peak past the write phase.
     return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
+
+
+def decode_stage_tasks(spark, shim, p: str) -> list[int]:
+    """Tasks per stage of one deletion-vector decode of the latest
+    snapshot, counted from a job group through ``statusTracker()``.
+    The decode stage is the ``mapInPandas`` one: its task count is the
+    number of Python tasks a read spends on deletion vectors."""
+    sc = spark.sparkContext
+    man = shim._read_manifest(p, shim.latest_version(p))
+    group = f"dv-probe-decode-{os.getpid()}"
+    sc.setJobGroup(group, "deletion-vector decode")
+    try:
+        deletes, _card = shim._dv_deletes_df(spark, shim._local(p), man["files"])
+        if deletes is not None:
+            deletes.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    return [
+        tracker.getStageInfo(sid).numTasks
+        for jid in sorted(tracker.getJobIdsForGroup(group))
+        for sid in sorted(tracker.getJobInfo(jid).stageIds)
+    ]
 
 
 def main() -> None:
@@ -75,6 +104,8 @@ def main() -> None:
         out["read_s"] = round(time.time() - t0, 2)
         out["survivors"] = survivors
         out["rss_after_read_mb"] = round(rss_mb(), 1)
+        out["default_parallelism"] = spark.sparkContext.defaultParallelism
+        out["decode_stage_tasks"] = decode_stage_tasks(spark, shim, p)
 
         # MoR merge re-upserting 1/16 of the DELETED keys (ghosts must
         # not block the reinsert) and superseding 1/16 of the live ones
