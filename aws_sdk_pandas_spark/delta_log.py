@@ -31,9 +31,12 @@ Scale notes: the exporter is driver-side metadata work proportional to
 the files TOUCHED by a commit (one ``os.stat`` + parquet-footer
 ``num_rows`` per added file), never to table size; the reader's plan is
 one parquet scan per distinct partition tuple, with column pruning and
-row-group pushdown intact because the files are plain parquet; deletion
-vectors decode ON EXECUTORS (the driver ships O(files) descriptors) and
-drop via one anti-join, broadcast when small.
+row-group pushdown intact because the files are plain parquet.  Every
+scan takes its schema from the log's ``metaData`` (authoritative under
+the protocol), so building a read opens no footer and runs no Spark
+job; the fetch is the only job.  Deletion vectors decode ON EXECUTORS
+(the driver ships O(files) descriptors) and drop via one anti-join,
+broadcast when small.
 """
 
 from __future__ import annotations
@@ -1147,7 +1150,11 @@ def read_delta_log(
     delta-rs / Delta Spark, with reader protocol 1.  When older JSON
     commits have been cleaned up, the newest parquet CHECKPOINT at or
     below the requested version seeds the replay (the protocol's
-    recovery path), and only the JSON commits after it are applied."""
+    recovery path), and only the JSON commits after it are applied.
+    The scans take their schema from the ``metaData`` action (physical
+    names in column-mapping mode 'name', parquet field ids in mode
+    'id'), so building the read runs no Spark job, and files that
+    predate a column read it as null."""
     vs = delta_versions(path)
     ckpts = checkpoint_versions(path)
     if not vs and not ckpts:
@@ -1196,32 +1203,40 @@ def read_delta_log(
         )
     schema_json = json.loads(meta["schemaString"])
     schema = T.StructType.fromJson(schema_json)
-    # column mapping: files store PHYSICAL column names; 'name' mode
-    # renames them back from the schemaString metadata, 'id' mode reads
-    # through Spark's native parquet field-id resolution (the files
-    # carry parquet field ids equal to delta.columnMapping.id)
+    pcols = list(meta.get("partitionColumns") or [])
+    # column mapping: files store PHYSICAL column names.  'name' mode
+    # scans by physical name and renames back; 'id' mode resolves the
+    # columns by parquet field id (the files carry ids equal to
+    # delta.columnMapping.id).  phys stays populated in BOTH modes
+    # (partitionValues are keyed by physical name whenever column
+    # mapping is on).
     phys: dict[str, str] = {}
-    field_ids: dict[str, int] = {}
-    for f in schema_json.get("fields", []):
-        md = f.get("metadata") or {}
+    read_fields: list[T.StructField] = []
+    for fj, f in zip(schema_json.get("fields", []), schema.fields):
+        md = fj.get("metadata") or {}
         if md.get("delta.columnMapping.physicalName"):
-            phys[f["name"]] = md["delta.columnMapping.physicalName"]
-        if md.get("delta.columnMapping.id") is not None:
-            field_ids[f["name"]] = int(md["delta.columnMapping.id"])
-    # phys stays populated in BOTH modes (partitionValues are keyed by
-    # physical name whenever column mapping is on); renames apply only
-    # in 'name' mode, id-mode scans resolve by field id below
-    if cm_mode == "id":
-        missing_ids = [
-            f.name for f in schema.fields if f.name not in field_ids
-        ]
-        if missing_ids:
+            phys[f.name] = md["delta.columnMapping.physicalName"]
+        if cm_mode == "id" and md.get("delta.columnMapping.id") is None:
             raise InvalidArgument(
-                f"columnMapping mode 'id' but fields {missing_ids} carry "
+                f"columnMapping mode 'id' but field {f.name!r} carries "
                 "no delta.columnMapping.id"
             )
+        if f.name in pcols:
+            continue
+        if cm_mode == "id":
+            read_fields.append(
+                T.StructField(
+                    f.name, f.dataType, True,
+                    {"parquet.field.id": int(md["delta.columnMapping.id"])},
+                )
+            )
+        elif cm_mode == "name":
+            read_fields.append(T.StructField.fromJson(_physical_field(fj)))
+        else:
+            read_fields.append(f)
+    read_schema = T.StructType(read_fields)
+    if cm_mode == "id":
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    pcols = list(meta.get("partitionColumns") or [])
     root = _local(path)
     from aws_sdk_pandas_spark import lakehouse_shim as _ls
 
@@ -1259,39 +1274,22 @@ def read_delta_log(
     # — broadcast when small, shuffled past the cardinality threshold
     deletes, dv_card = _ls._dv_deletes_df(spark, root, dv_entries)
 
-    data_fields = [f for f in schema.fields if f.name not in pcols]
     parts = []
     for key, files in sorted(
         groups.items(), key=lambda kv: tuple("" if x is None else str(x) for x in kv[0])
     ):
-        # mergeSchema: schema evolution leaves older files without the
-        # newer columns; the metaData schema is authoritative and the
-        # per-file gaps read as nulls
-        if cm_mode == "id":
-            read_schema = T.StructType(
-                [
-                    T.StructField(
-                        f.name, f.dataType, True,
-                        {"parquet.field.id": field_ids[f.name]},
-                    )
-                    for f in schema.fields
-                    if f.name not in pcols
-                ]
-            )
-            part = spark.read.schema(read_schema).parquet(*sorted(files))
-        else:
-            part = spark.read.option("mergeSchema", "true").parquet(*sorted(files))
-        if cm_mode == "name" and phys:
-            for logical, physical in phys.items():
-                if physical in part.columns and logical not in part.columns:
-                    part = part.withColumnRenamed(physical, logical)
+        # the metaData schema is authoritative: the scan takes it, runs
+        # no footer-inference job, and files that predate a column read
+        # it as null
+        part = _ls._scan_files(spark, sorted(files), read_schema)
         if deletes is not None:
             part = part.withColumn("__fp", F.col("_metadata.file_path")).withColumn(
                 "__ri", F.col("_metadata.row_index")
             )
-        for f in data_fields:
-            if f.name not in part.columns:
-                part = part.withColumn(f.name, F.lit(None).cast(f.dataType))
+        if cm_mode == "name":
+            for logical, physical in phys.items():
+                if physical in part.columns and logical not in part.columns:
+                    part = part.withColumnRenamed(physical, logical)
         for c, val in zip(pcols, key):
             dt = schema[c].dataType
             part = part.withColumn(

@@ -1160,6 +1160,12 @@ def _live_entries(
     return data_out, del_out
 
 
+# the spec's positional-delete file layout (field ids 2147483546/5)
+_POS_DELETE_SCHEMA = T.StructType(
+    [T.StructField("file_path", T.StringType()), T.StructField("pos", T.LongType())]
+)
+
+
 def read_iceberg_meta(
     spark: SparkSession,
     path: str,
@@ -1250,6 +1256,43 @@ def read_iceberg_meta(
             f"data file(s), e.g. {sorted(missing)[:2]}"
         )
 
+    pcol_names = {c for parts in group_parts.values() for c, _t, _v in parts}
+
+    # the Iceberg spec resolves parquet columns BY FIELD ID, not name —
+    # engine-written files always carry ids, so renamed columns still
+    # read correctly; lakelite's own files carry none and resolve by
+    # name.  Sniff one footer to pick the mode.  Either way the scans
+    # take the snapshot's schema: no footer-inference job runs.
+    by_field_id = False
+    try:
+        import pyarrow.parquet as pq
+
+        first = next(iter(sorted(next(iter(groups.values())))))
+        arrow_schema = pq.ParquetFile(first).schema_arrow
+        by_field_id = any(
+            (f.metadata or {}).get(b"PARQUET:field_id") is not None
+            for f in arrow_schema
+        )
+    except Exception:  # pragma: no cover - defensive
+        by_field_id = False
+    if by_field_id:
+        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+        spark.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
+    name_to_id = {f["name"]: f["id"] for f in ice_schema["fields"]}
+
+    def read_schema(names: list[str]) -> T.StructType:
+        return T.StructType(
+            [
+                T.StructField(
+                    c, st[c].dataType, True,
+                    {"parquet.field.id": name_to_id[c]} if by_field_id else {},
+                )
+                for c in names
+            ]
+        )
+
+    data_schema = read_schema([f.name for f in st.fields if f.name not in pcol_names])
+
     # v2 merge-on-read POSITIONAL deletes (content=1 delete files, the
     # kind Athena/Flink row-level DELETE writes): each delete file is
     # parquet of (file_path, pos) and applies to data files whose data
@@ -1281,13 +1324,13 @@ def read_iceberg_meta(
                         f"equality_ids {ids!r}"
                     )
                 eq_deletes.append(
-                    (cols, spark.read.parquet(dpath).select(*cols), dseq)
+                    (cols, ls._scan_files(spark, [dpath], read_schema(cols)), dseq)
                 )
                 continue
             dparts.append(
-                spark.read.parquet(dpath).select(
+                ls._scan_files(spark, [dpath], _POS_DELETE_SCHEMA).select(
                     norm(F.col("file_path")).alias("__dfp"),
-                    F.col("pos").cast("long").alias("__dpos"),
+                    F.col("pos").alias("__dpos"),
                     F.lit(dseq).alias("__dseq"),
                 )
             )
@@ -1301,48 +1344,9 @@ def read_iceberg_meta(
             "__fp string, __fseq long",
         )
 
-    pcol_names = {c for parts in group_parts.values() for c, _t, _v in parts}
-    data_fields = [f for f in st.fields if f.name not in pcol_names]
-
-    # the Iceberg spec resolves parquet columns BY FIELD ID, not name —
-    # engine-written files always carry ids, so renamed columns still
-    # read correctly; lakelite's own files carry none and resolve by
-    # name.  Sniff one footer to pick the mode.
-    by_field_id = False
-    try:
-        import pyarrow.parquet as pq
-
-        first = next(iter(sorted(next(iter(groups.values())))))
-        arrow_schema = pq.ParquetFile(first).schema_arrow
-        by_field_id = any(
-            (f.metadata or {}).get(b"PARQUET:field_id") is not None
-            for f in arrow_schema
-        )
-    except Exception:  # pragma: no cover - defensive
-        by_field_id = False
-    if by_field_id:
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        spark.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
-        name_to_id = {f["name"]: f["id"] for f in ice_schema["fields"]}
-        read_schema = T.StructType(
-            [
-                T.StructField(
-                    f.name, f.dataType, True,
-                    {"parquet.field.id": name_to_id[f.name]},
-                )
-                for f in st.fields
-                if f.name not in pcol_names
-            ]
-        )
-
     scans = []
     for key in sorted(groups, key=lambda k: tuple(str(x) for x in k)):
-        if by_field_id:
-            part = spark.read.schema(read_schema).parquet(*sorted(groups[key]))
-        else:
-            part = spark.read.option("mergeSchema", "true").parquet(
-                *sorted(groups[key])
-            )
+        part = ls._scan_files(spark, sorted(groups[key]), data_schema)
         if deletes is not None or eq_deletes:
             part = (
                 part.withColumn("__fp", norm(F.col("_metadata.file_path")))
@@ -1357,9 +1361,6 @@ def read_iceberg_meta(
                 & (F.col("__dseq") >= F.coalesce(F.col("__fseq"), F.lit(0))),
                 "left_anti",
             )
-        for f in data_fields:
-            if f.name not in part.columns:
-                part = part.withColumn(f.name, F.lit(None).cast(f.dataType))
         for col, ice_t, val in group_parts[key]:
             dt = st[col].dataType if col in st.fieldNames() else T.StringType()
             lit = _partition_literal(ice_t, val)

@@ -260,35 +260,125 @@ def _write_commit(
     return commit_rel, entries
 
 
+def _table_schema(man: dict[str, Any]) -> T.StructType:
+    """The snapshot's full read schema: the manifest schema plus any
+    partition column it does not list (read as a string)."""
+    schema = T.StructType.fromJson(json.loads(man["schema"]))
+    for c in man["partition_cols"]:
+        if c not in schema.fieldNames():
+            schema = schema.add(c, T.StringType())
+    return schema
+
+
+def _scan_files(
+    spark: SparkSession,
+    files: list[str],
+    schema: T.StructType,
+    base_path: str | None = None,
+) -> DataFrame:
+    """The one scan of data files a table log lists.  The schema comes
+    from the log, which is authoritative for the table, so building the
+    scan opens no footer and runs no Spark job; a file that predates a
+    column reads it as null.  With ``base_path``, hive ``k=v``
+    directories below it supply the partition columns, typed by
+    ``schema``."""
+    reader = spark.read.schema(schema)
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
+    return reader.parquet(*files)
+
+
+def _scan_commits(
+    spark: SparkSession,
+    root: str,
+    entries: list[dict[str, Any]],
+    schema: T.StructType,
+    meta: dict[str, str] | None = None,
+) -> DataFrame:
+    """Scan manifest entries, one :func:`_scan_files` per commit dir
+    (the commit dir is the partition-discovery base), unioned by name.
+    ``meta`` maps output column -> ``_metadata`` field, added per scan
+    because ``_metadata`` does not survive a union."""
+    by_commit: dict[str, list[str]] = {}
+    for e in entries:
+        by_commit.setdefault(e["commit"], []).append(os.path.join(root, e["path"]))
+    parts = []
+    for commit_rel, files in sorted(by_commit.items()):
+        part = _scan_files(spark, files, schema, os.path.join(root, commit_rel))
+        for name, field in (meta or {}).items():
+            part = part.withColumn(name, F.col(f"_metadata.{field}"))
+        parts.append(part)
+    df = parts[0]
+    for p in parts[1:]:
+        df = df.unionByName(p)
+    return df
+
+
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _widens(src: T.DataType, dst: T.DataType) -> bool:
+    if isinstance(src, _INTEGRAL) and isinstance(dst, _INTEGRAL):
+        return _INTEGRAL.index(type(src)) < _INTEGRAL.index(type(dst))
+    return isinstance(src, T.FloatType) and isinstance(dst, T.DoubleType)
+
+
+def _conform(df: DataFrame, schema_json: str) -> DataFrame:
+    """Write-time schema enforcement (Delta's rule): every column the
+    frame shares with the table must carry the table's type.  A lossless
+    widening (integral widening, float -> double) is cast; any other
+    type change raises before a data file is written, because reads scan
+    with the table's schema and a disagreeing file would break them.
+    Returns ``df`` itself when nothing needs a cast."""
+    table = {
+        f.name: f.dataType
+        for f in T.StructType.fromJson(json.loads(schema_json)).fields
+    }
+    casts: dict[str, T.DataType] = {}
+    for f in df.schema.fields:
+        want = table.get(f.name)
+        # simpleString ignores nullability, which a write does not change
+        if want is None or want.simpleString() == f.dataType.simpleString():
+            continue
+        if not _widens(f.dataType, want):
+            raise InvalidArgument(
+                f"column {f.name!r} is {want.simpleString()} in the table but "
+                f"{f.dataType.simpleString()} in the incoming frame; only a "
+                "lossless widening (integral, float -> double) is cast on write"
+            )
+        casts[f.name] = want
+    if not casts:
+        return df
+    return df.withColumns({c: df[c].cast(t) for c, t in casts.items()})
+
+
 def _collect_stats(
     spark: SparkSession,
     root: str,
     entries: list[dict[str, Any]],
     stats_cols: list[str],
+    table: dict[str, Any],
 ) -> None:
     """Attach per-file min/max for ``stats_cols`` to the manifest entries
     (Delta-style data skipping stats) — one scan of ONLY the new commit's
-    files, numeric and string columns only (JSON-representable and
-    order-comparable)."""
+    files, numeric and string data columns only (JSON-representable and
+    order-comparable).  ``table`` holds the ``schema`` and
+    ``partition_cols`` the files were written with."""
     if not entries or not stats_cols:
         return
     files = [os.path.join(root, e["path"]) for e in entries]
-    df = spark.read.parquet(*files)
-    usable = [
-        f.name
-        for f in df.schema.fields
+    fields = [
+        f
+        for f in _table_schema(table).fields
         if f.name in stats_cols
-        and (
-            isinstance(f.dataType, T.StringType)
-            or isinstance(
-                f.dataType,
-                (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-                 T.FloatType, T.DoubleType, T.DecimalType),
-            )
-        )
+        and f.name not in table["partition_cols"]
+        and isinstance(f.dataType, (T.StringType, T.DecimalType, T.FloatType,
+                                    T.DoubleType) + _INTEGRAL)
     ]
-    if not usable:
+    if not fields:
         return
+    usable = [f.name for f in fields]
+    df = _scan_files(spark, files, T.StructType(fields))
     aggs = []
     for c in usable:
         aggs.append(F.min(c).alias(f"__mn_{c}"))
@@ -496,10 +586,13 @@ def write(
                 "pass schema_mode='merge' or 'overwrite'"
             )
 
+    if prev is not None and mode != "overwrite":
+        df = _conform(df, prev["schema"])
     _, entries = _write_commit(df, path, partition_cols)
+    written = {"schema": df.schema.json(), "partition_cols": partition_cols or []}
     effective_stats = stats_cols or ((prev or {}).get("stats_cols") or [])
     if effective_stats:
-        _collect_stats(df.sparkSession, _local(path), entries, effective_stats)
+        _collect_stats(df.sparkSession, _local(path), entries, effective_stats, written)
 
     # commit with optimistic-concurrency retry: the data files above are
     # immutable and already durable, so a manifest-version collision just
@@ -569,10 +662,15 @@ def write(
                         f"schema (now {sorted(old_cols)} vs incoming "
                         f"{sorted(df.columns)}); pass schema_mode='merge'"
                     )
+            if _conform(df, prev["schema"]) is not df:
+                raise InvalidArgument(
+                    "append lost a commit race and the winner changed column "
+                    "types; re-run the append against the new snapshot"
+                )
             rebased_stats = stats_cols or (prev.get("stats_cols") or [])
             missing = [c for c in rebased_stats if c not in effective_stats]
             if missing:
-                _collect_stats(df.sparkSession, _local(path), entries, rebased_stats)
+                _collect_stats(df.sparkSession, _local(path), entries, rebased_stats, written)
             effective_stats = rebased_stats
     raise InvalidArgument(
         f"append to {path!r} lost {6} consecutive commit races; giving up"
@@ -604,8 +702,9 @@ def read(
     manifest entries on the DRIVER before any scan is planned — the log
     replaces a storage LIST + footer reads, exactly the benefit the real
     formats buy.  One parquet scan per surviving commit dir (partition
-    columns recovered via basePath discovery), unioned by name so schema
-    evolution reads old files with nulls in new columns.
+    columns recovered via basePath discovery), unioned by name.  Every
+    scan takes its schema from the manifest, so building the read runs
+    no Spark job, and files that predate a column read it as null.
 
     ``predicates`` is a list of ``(col, op, value)`` with op in
     ``< <= > >= =``: files whose manifest min/max stats PROVE no match
@@ -643,22 +742,13 @@ def read(
                 raise InvalidArgument(f"unsupported predicate op {op!r}")
         entries = [e for e in entries if _entry_may_match(e, predicates)]
 
-    schema = T.StructType.fromJson(json.loads(man["schema"]))
-    full_schema = schema
-    for c in man["partition_cols"]:
-        if c not in schema.fieldNames():
-            full_schema = full_schema.add(c, T.StringType())
-    if with_file_path and "__lakelite_file" not in full_schema.fieldNames():
-        full_schema = full_schema.add("__lakelite_file", T.StringType())
-
+    schema = _table_schema(man)
     if not entries:
-        df = _driver_frame(spark, [], full_schema)
+        if with_file_path:
+            schema = schema.add("__lakelite_file", T.StringType())
+        df = _driver_frame(spark, [], schema)
         df = df.select(*columns) if columns else df
         return _cmap_to_logical_df(df, cmap) if cmap else df
-
-    by_commit: dict[str, list[str]] = {}
-    for e in entries:
-        by_commit.setdefault(e["commit"], []).append(os.path.join(root, e["path"]))
 
     # deletion vectors (MoR deletes): the driver ships O(files) DV
     # descriptors; executors decode each file's bitmap into (file,
@@ -666,26 +756,16 @@ def read(
     # (broadcast when small, shuffled past _DV_BROADCAST_MAX_ROWS —
     # the driver never materializes the deleted-row list)
     dv_deletes, dv_card = _dv_deletes_df(spark, root, entries)
-
-    parts = []
-    for commit_rel, files in sorted(by_commit.items()):
-        part = (
-            spark.read.option("basePath", os.path.join(root, commit_rel)).parquet(*files)
-        )
-        if with_file_path:
-            # RAW URI as Spark reports it — matching against manifest
-            # paths happens driver-side with real URI decoding, never by
-            # string surgery on the column (percent-encoded or relative
-            # paths silently failed to match otherwise)
-            part = part.withColumn("__lakelite_file", F.col("_metadata.file_path"))
-        if dv_deletes is not None:
-            part = part.withColumn(
-                "__dv_fp", F.col("_metadata.file_path")
-            ).withColumn("__dv_ri", F.col("_metadata.row_index"))
-        parts.append(part)
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p, allowMissingColumns=True)
+    meta: dict[str, str] = {}
+    if with_file_path:
+        # RAW URI as Spark reports it — matching against manifest
+        # paths happens driver-side with real URI decoding, never by
+        # string surgery on the column (percent-encoded or relative
+        # paths silently failed to match otherwise)
+        meta["__lakelite_file"] = "file_path"
+    if dv_deletes is not None:
+        meta.update(__dv_fp="file_path", __dv_ri="row_index")
+    df = _scan_commits(spark, root, entries, schema, meta)
     if dv_deletes is not None:
         df = _drop_dv_rows(df, dv_deletes, dv_card, "__dv_fp", "__dv_ri").drop(
             "__dv_fp", "__dv_ri"
@@ -860,29 +940,19 @@ def _drop_dv_rows(
 
 
 def _mor_scan(
-    spark: SparkSession, root: str, entries: list[dict[str, Any]]
+    spark: SparkSession, root: str, man: dict[str, Any], entries: list[dict[str, Any]]
 ) -> DataFrame:
-    """Raw per-commit scan of the given manifest entries with ``__f``
-    (raw file URI) and ``__ri`` (row index) columns, MINUS rows already
-    deleted by the entries' existing deletion vectors — the live-row
-    view the MoR write paths must reason over.  Without the DV
+    """Per-commit scan of the given entries of manifest ``man`` with
+    ``__f`` (raw file URI) and ``__ri`` (row index) columns, MINUS rows
+    already deleted by the entries' existing deletion vectors — the
+    live-row view the MoR write paths must reason over.  Without the DV
     anti-join, a previously-deleted 'ghost' row re-enters the
     precombine window and can out-rank (silently drop) a source row
     that should be inserted."""
-    by_commit: dict[str, list[str]] = {}
-    for e in entries:
-        by_commit.setdefault(e["commit"], []).append(os.path.join(root, e["path"]))
-    parts = []
-    for commit_rel, files in sorted(by_commit.items()):
-        parts.append(
-            spark.read.option("basePath", os.path.join(root, commit_rel))
-            .parquet(*files)
-            .withColumn("__f", F.col("_metadata.file_path"))
-            .withColumn("__ri", F.col("_metadata.row_index"))
-        )
-    scan = parts[0]
-    for p in parts[1:]:
-        scan = scan.unionByName(p, allowMissingColumns=True)
+    scan = _scan_commits(
+        spark, root, entries, _table_schema(man),
+        {"__f": "file_path", "__ri": "row_index"},
+    )
     deletes, card = _dv_deletes_df(spark, root, entries)
     if deletes is not None:
         scan = _drop_dv_rows(scan, deletes, card, "__f", "__ri")
@@ -1014,19 +1084,7 @@ def _commit_or_rebase(
                 )
             added = [e for e in winner["files"] if e["path"] not in base_paths]
             if added and source_keys is not None and keys:
-                root = _local(path)
-                by_commit: dict[str, list[str]] = {}
-                for e in added:
-                    by_commit.setdefault(e["commit"], []).append(
-                        os.path.join(root, e["path"])
-                    )
-                parts = [
-                    spark.read.option("basePath", os.path.join(root, c)).parquet(*fs)
-                    for c, fs in sorted(by_commit.items())
-                ]
-                adf = parts[0]
-                for p2 in parts[1:]:
-                    adf = adf.unionByName(p2, allowMissingColumns=True)
+                adf = _scan_commits(spark, _local(path), added, _table_schema(winner))
                 hit = (
                     adf.join(
                         F.broadcast(source_keys),
@@ -1048,7 +1106,7 @@ def _commit_or_rebase(
             win_stats = winner.get("stats_cols") or []
             missing_stats = [c for c in win_stats if c not in (man.get("stats_cols") or [])]
             if missing_stats and new_entries:
-                _collect_stats(spark, _local(path), new_entries, win_stats)
+                _collect_stats(spark, _local(path), new_entries, win_stats, winner)
             man = dict(man)
             man["version"] = winner["version"] + 1
             man["files"] = [
@@ -1113,6 +1171,8 @@ def merge(
 
     man = _read_manifest(path, latest_version(path))
     pcols = man["partition_cols"]
+    # every write path below (insert-only, CoW, MoR) lands source rows
+    source = _conform(source, man["schema"])
 
     if merge_condition == "ignore":
         # insert-only fast path: no existing file read or rewritten
@@ -1123,7 +1183,7 @@ def merge(
         target_cols = [f["name"] for f in json.loads(man["schema"])["fields"]]
         _, entries = _write_commit(inserts.select(*target_cols), path, pcols)
         if man.get("stats_cols"):
-            _collect_stats(spark, _local(path), entries, man["stats_cols"])
+            _collect_stats(spark, _local(path), entries, man["stats_cols"], man)
         _commit_or_rebase(
             spark,
             path,
@@ -1177,7 +1237,7 @@ def merge(
         )
     _, entries = _write_commit(merged, path, pcols)
     if man.get("stats_cols"):
-        _collect_stats(spark, _local(path), entries, man["stats_cols"])
+        _collect_stats(spark, _local(path), entries, man["stats_cols"], man)
     _commit_or_rebase(
         spark,
         path,
@@ -1241,7 +1301,7 @@ def delete(
     if touched:
         _, entries = _write_commit(survivors, path, man["partition_cols"])
         if man.get("stats_cols"):
-            _collect_stats(spark, _local(path), entries, man["stats_cols"])
+            _collect_stats(spark, _local(path), entries, man["stats_cols"], man)
     _commit_or_rebase(
         spark,
         path,
@@ -1300,7 +1360,7 @@ def _merge_mor(
     dv_results: dict[str, tuple[dict[str, Any], int]] = {}
     to_write = src
     if touched:
-        scan = _mor_scan(spark, root, touched)
+        scan = _mor_scan(spark, root, man, touched)
         matched = scan.join(
             F.broadcast(src_keys),
             _key_cond(scan, src_keys, keys, match_nulls),
@@ -1345,7 +1405,7 @@ def _merge_mor(
 
     _, new_entries = _write_commit(to_write, path, pcols)
     if man.get("stats_cols"):
-        _collect_stats(spark, _local(path), new_entries, man["stats_cols"])
+        _collect_stats(spark, _local(path), new_entries, man["stats_cols"], man)
     _commit_or_rebase(
         spark,
         path,
@@ -1401,7 +1461,7 @@ def _delete_mor(
     kept_touched: list[dict[str, Any]] = []
     rows_deleted = 0
     if touched:
-        scan = _mor_scan(spark, root, touched)
+        scan = _mor_scan(spark, root, man, touched)
         hits = scan.join(
             F.broadcast(src_keys),
             _key_cond(scan, src_keys, keys, match_nulls),
@@ -1504,7 +1564,7 @@ def compact(
         df = df.repartition(target_partitions)
     _, entries = _write_commit(df, path, man["partition_cols"])
     if stats_cols:
-        _collect_stats(spark, _local(path), entries, stats_cols)
+        _collect_stats(spark, _local(path), entries, stats_cols, man)
     _commit_manifest(
         path,
         {

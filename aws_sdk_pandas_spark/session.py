@@ -39,6 +39,16 @@ _DEFAULTS: dict[str, str] = {
 }
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, capped at 48g (the driver shares the host
+    with its Python workers and the OS page cache)."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{max(1, min(48 * 1024, total // 2 // (1 << 20)))}m"
+
+
 def get_spark(
     app_name: str = "aws_sdk_pandas_spark",
     master: str | None = None,
@@ -59,7 +69,10 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+    builder = builder.config(
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+    )
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():

@@ -70,6 +70,138 @@ def test_schema_enforcement_and_merge(spark, tmp_path):
     assert got.where("k = 2").first().score == 9.5
 
 
+def _both_readers(spark, p):
+    """(dtypes, sorted rows) from the lakelite manifest reader and from
+    the Delta-log reader behind read_deltalake, columns in one order."""
+    from aws_sdk_pandas_spark import delta_log
+
+    out = []
+    for df in (shim.read(spark, p), delta_log.read_delta_log(spark, p)):
+        df = df.select(*sorted(df.columns))
+        out.append((df.dtypes, sorted(tuple(r) for r in df.collect())))
+    assert out[0] == out[1]
+    return out[0]
+
+
+def _data_dirs(p):
+    return sorted(os.listdir(os.path.join(p, "data")))
+
+
+def test_append_widens_int_into_bigint_table(spark, tmp_path):
+    p = str(tmp_path / "t")
+    shim.write(_df(spark, [(1, "a", 10)], "k int, name string, v bigint"), p, mode="overwrite")
+    shim.write(_df(spark, [(2, "b", 20)], "k int, name string, v int"), p)
+    dtypes, rows = _both_readers(spark, p)
+    assert dict(dtypes)["v"] == "bigint"
+    assert rows == [(1, "a", 10), (2, "b", 20)]
+
+
+def test_append_string_into_bigint_table_raises_before_writing(spark, tmp_path):
+    p = str(tmp_path / "t")
+    shim.write(_df(spark, [(1, "a", 10)], "k int, name string, v bigint"), p, mode="overwrite")
+    dirs = _data_dirs(p)
+    with pytest.raises(InvalidArgument, match="'v' is bigint in the table but string"):
+        shim.write(_df(spark, [(2, "b", "x")], "k int, name string, v string"), p)
+    assert _data_dirs(p) == dirs and shim.latest_version(p) == 0
+    dtypes, rows = _both_readers(spark, p)
+    assert dict(dtypes)["v"] == "bigint" and rows == [(1, "a", 10)]
+
+
+def test_narrowing_writes_are_refused(spark, tmp_path):
+    p = str(tmp_path / "t")
+    shim.write(_df(spark, [(1, "a", 10)], "k int, name string, v int"), p, mode="overwrite")
+    dirs = _data_dirs(p)
+    wide = _df(spark, [(1, "a", 11), (2, "b", 2**40)], "k int, name string, v bigint")
+    with pytest.raises(InvalidArgument, match="'v' is int in the table but bigint"):
+        shim.write(wide, p)
+    # every merge path lands source rows, so each refuses the same way
+    for kw in ({"merge_condition": "ignore"}, {}, {"use_deletion_vectors": True}):
+        with pytest.raises(InvalidArgument, match="'v' is int in the table but bigint"):
+            shim.merge(spark, wide, p, ["k"], **kw)
+    assert _data_dirs(p) == dirs and shim.latest_version(p) == 0
+    dtypes, rows = _both_readers(spark, p)
+    assert dict(dtypes)["v"] == "int" and rows == [(1, "a", 10)]
+
+
+def test_merge_and_partition_overwrite_widen_to_table_types(spark, tmp_path):
+    p = str(tmp_path / "t")
+    shim.write(
+        _df(spark, [(1, "a", 10, 1.5), (2, "b", 20, 2.5)], "k bigint, g string, v bigint, x double"),
+        p, mode="overwrite", partition_cols=["g"],
+    )
+    narrow = "k int, g string, v int, x float"
+    shim.merge(spark, _df(spark, [(1, "a", 11, 0.5)], narrow), p, ["k"])
+    shim.merge(spark, _df(spark, [(2, "b", 21, 0.25)], narrow), p, ["k"], use_deletion_vectors=True)
+    shim.merge(spark, _df(spark, [(3, "a", 30, 3.5)], narrow), p, ["k"], merge_condition="ignore")
+    shim.write(_df(spark, [(4, "c", 40, 4.5)], narrow), p, mode="overwrite_partitions")
+    dtypes, rows = _both_readers(spark, p)
+    assert dtypes == [("g", "string"), ("k", "bigint"), ("v", "bigint"), ("x", "double")]
+    assert rows == [("a", 1, 11, 0.5), ("a", 3, 30, 3.5), ("b", 2, 21, 0.25), ("c", 4, 40, 4.5)]
+
+
+def test_schema_merge_reads_new_column_as_null_in_older_files(spark, tmp_path):
+    p = str(tmp_path / "t")
+    shim.write(_df(spark, [(1, "a", 10)], "k int, name string, v bigint"), p, mode="overwrite")
+    shim.write(
+        _df(spark, [(2, "b", 20, "new")], "k int, name string, v int, w string"),
+        p, schema_mode="merge",
+    )
+    dtypes, rows = _both_readers(spark, p)
+    assert dtypes == [("k", "int"), ("name", "string"), ("v", "bigint"), ("w", "string")]
+    assert rows == [(1, "a", 10, None), (2, "b", 20, "new")]
+
+
+def _jobs(spark, group, action):
+    """(result, number of Spark jobs ``action`` ran) via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_building_a_read_runs_no_spark_job(spark, tmp_path):
+    """Scans take their schema from the table log, so building a read of
+    a table with 2 partitions, 3 commits and a deletion vector runs no
+    Spark job in any of the three readers: the only jobs are the fetch's.
+    A footer-inference scan ran one job per commit or partition group."""
+    from aws_sdk_pandas_spark import iceberg_meta
+
+    p = str(tmp_path / "t")
+    schema = "k int, part string, v bigint"
+    for i, mode in enumerate(("overwrite", "append", "append")):
+        rows = [(2 * i + 1, "a", 10 * (2 * i + 1)), (2 * i + 2, "b", 10 * (2 * i + 2))]
+        shim.write(_df(spark, rows, schema), p, mode=mode, partition_cols=["part"])
+    lakehouse.convert_to_iceberg(p)
+    before_dv = shim.latest_version(p)
+    shim.delete(spark, _df(spark, [(3,)], "k int"), p, ["k"], use_deletion_vectors=True)
+    all_rows = [(k, "ab"[(k - 1) % 2], 10 * k) for k in range(1, 7)]
+    live = [r for r in all_rows if r[0] != 3]
+    tag = f"{os.getpid()}-{id(tmp_path)}"
+    # (reader, rows, jobs per fetch): the pre-delete snapshot is one scan
+    # job; a deletion vector adds the job that builds the broadcast side
+    # of its anti-join (Iceberg: the positional-delete scan and its
+    # sequence-number join)
+    cases = [
+        ("delta_v", lambda: lakehouse.read_deltalake(spark, p, version=before_dv), all_rows, 1),
+        ("lakelite_v", lambda: shim.read(spark, p, version=before_dv), all_rows, 1),
+        ("delta", lambda: lakehouse.read_deltalake(spark, p), live, 2),
+        ("lakelite", lambda: shim.read(spark, p), live, 2),
+        ("iceberg", lambda: iceberg_meta.read_iceberg_meta(spark, p), live, 3),
+    ]
+    for name, build, want, fetch_jobs in cases:
+        df, jobs = _jobs(spark, f"build-{name}-{tag}", build)
+        assert jobs == 0, (name, jobs)
+        got, jobs = _jobs(
+            spark, f"fetch-{name}-{tag}",
+            lambda: sorted(tuple(r) for r in df.select("k", "part", "v").collect()),
+        )
+        assert got == want, name
+        assert jobs == fetch_jobs, (name, jobs)
+
+
 def test_partitioned_write_pruning_and_overwrite_partitions(spark, tmp_path):
     p = str(tmp_path / "t")
     df = spark.range(0, 40).selectExpr("id AS k", "CAST(id % 4 AS INT) AS g")
