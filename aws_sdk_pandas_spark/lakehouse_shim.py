@@ -863,8 +863,9 @@ def _driver_frame(
     through Arrow into a local relation.  Spark scans a local relation
     over ``min(len(rows), defaultParallelism)`` partitions, so a
     ``mapInPandas`` over it runs at most one Python task per executor
-    slot, each handling its rows one at a time, and a broadcast of it
-    needs no job.  A list-built frame is a pickled Python RDD that
+    slot, each handling its rows one at a time.  Broadcasting it still
+    runs one job of that many tasks (the exchange collects its rows).
+    A list-built frame is a pickled Python RDD that
     starts Python workers on every execution, one task per slice.
     With no rows the frame is an ``emptyRDD`` (zero partitions, no
     task runs), whatever the schema's types."""

@@ -141,6 +141,9 @@ def main() -> None:
             if round_i == 0:
                 first[name] = elapsed
             best[name] = min(best[name], elapsed)
+        # operators leave persisted intermediates behind; drop them so
+        # the next round recomputes instead of re-caching the same data
+        spark.catalog.clearCache()
 
     timings: dict[str, float] = {}
     total = 0.0
@@ -167,6 +170,8 @@ def main() -> None:
                 # fixed-work host-speed reference: compare rounds via
                 # value / calibration_s to cancel host drift
                 "calibration_s": round(calibration_s, 3),
+                # calibration does not carry across core counts
+                "cpus": spark.sparkContext.defaultParallelism,
                 "value_per_calibration": round(total / calibration_s, 2),
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
             }

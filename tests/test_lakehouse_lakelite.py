@@ -182,8 +182,11 @@ def test_building_a_read_runs_no_spark_job(spark, tmp_path):
     tag = f"{os.getpid()}-{id(tmp_path)}"
     # (reader, rows, jobs per fetch): the pre-delete snapshot is one scan
     # job; a deletion vector adds the job that builds the broadcast side
-    # of its anti-join (Iceberg: the positional-delete scan and its
-    # sequence-number join)
+    # of its anti-join, run once for both partition groups (exchange
+    # reuse).  The Iceberg reader adds a third: the broadcast of its
+    # data-file sequence-number map, a local relation that Spark
+    # collects with a job of min(files, slots) tasks, once for both
+    # groups; its positional-delete scan is the second job
     cases = [
         ("delta_v", lambda: lakehouse.read_deltalake(spark, p, version=before_dv), all_rows, 1),
         ("lakelite_v", lambda: shim.read(spark, p, version=before_dv), all_rows, 1),

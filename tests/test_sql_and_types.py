@@ -221,3 +221,28 @@ def test_sql_formatter_literal_grammar(spark):
         format_sql("SELECT :missing", {"v": 1})
     with pytest.raises(InvalidArgument):
         format_literal(object())
+
+
+def test_recurring_queries_compile_once(spark):
+    """A recurring mix of more distinct generated classes than Spark's
+    default codegen cache (100) compiles each class once per JVM: the
+    second pass over the mix is all cache hits.  Integer literals are
+    inlined into the generated source, so each ``k`` is a distinct plan
+    (two classes each: the stage and its output projection)."""
+    from pyspark.sql import Row
+
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    compiles = metrics.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run_mix() -> list[list[Row]]:
+        return [
+            spark.range(8).selectExpr(f"id * {k} + {k} AS x").collect()
+            for k in range(60)
+        ]
+
+    first = run_mix()
+    before = compiles.getCount()
+    second = run_mix()
+    assert compiles.getCount() == before
+    assert second == first
+    assert first[7] == [Row(x=7 * i + 7) for i in range(8)]

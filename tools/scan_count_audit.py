@@ -149,7 +149,12 @@ def main() -> int:
             continue
         try:
             df = qs[name](spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            # run the frame's own plan and discard the rows: AQE finalizes
+            # an executed plan only by running it (a noop write would plan
+            # and run a copy, leaving this plan initial)
+            executed = df._jdf.queryExecution().executedPlan()
+            executed.execute().count()
+            plan = executed.toString()
         except Exception as exc:  # noqa: BLE001
             errors[name] = str(exc).splitlines()[0][:120]
             continue
