@@ -1,41 +1,55 @@
-"""Jar-free Delta Lake transaction-log interop for lakelite tables.
+"""The Delta Lake transaction log, jar-free: lakelite's only commit log.
 
 The Delta log protocol (https://github.com/delta-io/delta/blob/master/
 PROTOCOL.md) is newline-delimited JSON actions under ``_delta_log/`` —
-no jar is needed to READ or WRITE it.  This module gives lakelite
-(``lakehouse_shim``) real on-disk format interop in a container that
-ships neither delta-spark nor delta-rs:
+no jar is needed to READ or WRITE it.  A lakelite table
+(``lakehouse_shim``) keeps no other log, so a table written here is a
+Delta table that delta-rs / Delta Spark read, and a Delta table written
+elsewhere is a table lakelite reads and writes in place:
 
-- **Exporter** (:func:`export_commit` / :func:`export_table`): every
-  lakelite commit also lands a protocol-valid Delta commit file
-  ``_delta_log/{version:020d}.json`` with ``commitInfo`` / ``protocol``
-  / ``metaData`` / ``txn`` / ``add`` / ``remove`` actions, so a table
-  written here is readable by delta-rs / PyIceberg-era tooling / Spark
-  with the real jar.  Lakelite manifests are full snapshots; the Delta
-  actions are the DIFF of consecutive manifests.  Version numbers match
-  1:1 (reference behavior: awswrangler ``s3/_write_deltalake.py:129-133``
-  writes the same log through delta-rs).
-- **Reader** (:func:`read_delta_log`): replays a Delta log — including
-  one written by delta-rs or Delta Spark elsewhere, checkpoint-seeded
-  or not — into the same union-of-parquet-scans plan lakelite reads
-  use.  Partition values come from the log's ``partitionValues`` (the
-  protocol's rule: partition columns are NOT stored in data files),
-  cast to the ``metaData`` schema types.  Deletion vectors (reader 3)
-  and column mapping ('name' and 'id', reader 2/3) are supported;
-  anything beyond is refused loudly rather than mis-read.
-- **Adoption** (:func:`convert_from_delta`): a foreign table — DV-
-  bearing and/or name-column-mapped — imports as lakelite manifest v0
-  and later lakelite commits continue the SAME ``_delta_log`` chain.
+- **Commits** (:func:`commit`): a lakelite commit is ONE Delta commit
+  file ``_delta_log/{version:020d}.json`` with ``commitInfo`` /
+  ``protocol`` / ``metaData`` / ``txn`` / ``remove`` / ``add`` actions,
+  created exclusively (``os.link``), so two writers racing for a
+  version cannot both win it — the protocol's mutual-exclusion rule.
+  Every 10th version also lands a parquet checkpoint, written from the
+  in-memory state (reference behavior: awswrangler
+  ``s3/_write_deltalake.py:129-133`` writes the same log through
+  delta-rs).
+- **Snapshots** (:func:`snapshot`): every lakelite reader and writer
+  replays the log once per call — JSON from version 0 while the log is
+  contiguous, seeded from the newest usable checkpoint only across a
+  gap — into the manifest dict the lakelite operations work on:
+  ``schema``/``partition_cols`` from ``metaData``, the files from the
+  live ``add`` actions (their stats, deletion vectors and ``numRecords``
+  0 for an empty file), ``stats_cols`` from the
+  ``delta.dataSkippingStatsColumns`` table property, ``txns`` from the
+  ``txn`` actions and the commit ``mode`` from ``commitInfo``.
+- **Reader** (:func:`read_delta_log`): replays the same log — or one
+  written by delta-rs or Delta Spark elsewhere, checkpoint-seeded or
+  not — into the plan behind ``read_deltalake``.  Partition values come
+  from the log's ``partitionValues`` (the protocol's rule: partition
+  columns are NOT stored in data files), cast to the ``metaData``
+  schema types.  Deletion vectors (reader 3) and column mapping ('name'
+  and 'id', reader 2/3) are supported; anything beyond is refused
+  loudly rather than mis-read.
+- **Foreign tables**: every write into an existing table first runs the
+  refusals of :func:`check_writable` (features this engine cannot keep
+  intact), so a DV-bearing or NAME-column-mapped table another engine
+  wrote takes lakelite writes that continue its own log.  A name-mapped
+  table runs on PHYSICAL column names inside lakelite; the logical <->
+  physical map is the ``metaData`` schema's
+  ``delta.columnMapping.physicalName``.
 
-Scale notes: the exporter is driver-side metadata work proportional to
-the files TOUCHED by a commit (one ``os.stat`` + parquet-footer
-``num_rows`` per added file), never to table size; the reader's plan is
-one parquet scan per distinct partition tuple, with column pruning and
-row-group pushdown intact because the files are plain parquet.  Every
-scan takes its schema from the log's ``metaData`` (authoritative under
-the protocol), so building a read opens no footer and runs no Spark
-job; the fetch is the only job.  Deletion vectors decode ON EXECUTORS
-(the driver ships O(files) descriptors) and drop via one anti-join,
+Scale notes: a commit is driver-side metadata work proportional to the
+files it TOUCHES (one ``os.stat`` + parquet-footer ``num_rows`` per
+added file), never to table size; the reader's plan is one parquet scan
+per distinct partition tuple, with column pruning and row-group
+pushdown intact because the files are plain parquet.  Every scan takes
+its schema from the log's ``metaData`` (authoritative under the
+protocol), so building a read opens no footer and runs no Spark job;
+the fetch is the only job.  Deletion vectors decode ON EXECUTORS (the
+driver ships O(files) descriptors) and drop via one anti-join,
 broadcast when small.
 """
 
@@ -56,6 +70,12 @@ from pyspark.sql import types as T
 from aws_sdk_pandas_spark.exceptions import InvalidArgument
 
 _DELTA_DIR = "_delta_log"
+_ENGINE = "aws_sdk_pandas_spark-lakelite"
+_CHECKPOINT_INTERVAL = 10
+# the table property that lists the columns lakelite keeps min/max for
+_STATS_COLS = "delta.dataSkippingStatsColumns"
+_PHYSICAL = "delta.columnMapping.physicalName"
+_CHECKPOINT_RE = re.compile(r"^(\d{20})\.checkpoint(\.\d{10}\.\d{10})?\.parquet$")
 
 # lakelite commit modes -> Delta commitInfo operation names
 _OPS = {
@@ -68,52 +88,46 @@ _OPS = {
     "compact": "OPTIMIZE",
 }
 
-# table protocol once any file carries a deletion vector: DV reads need
-# reader 3 + the readerFeatures entry, DV writes writer 7 + writerFeatures
-_DV_PROTOCOL_ACTION = {
-    "protocol": {
-        "minReaderVersion": 3,
-        "minWriterVersion": 7,
-        "readerFeatures": ["deletionVectors"],
-        "writerFeatures": ["deletionVectors"],
+# the features each legacy writer version implies (PROTOCOL.md, table
+# features): a legacy table upgraded to writer 7 must list them
+_LEGACY_WRITER_FEATURES = (
+    (2, {"appendOnly", "invariants"}),
+    (3, {"checkConstraints"}),
+    (4, {"changeDataFeed", "generatedColumns"}),
+    (5, {"columnMapping"}),
+    (6, {"identityColumns"}),
+)
+
+
+def _legacy_writer_features(min_writer_version: int) -> set[str]:
+    return {
+        f
+        for v, feats in _LEGACY_WRITER_FEATURES
+        if min_writer_version >= v
+        for f in feats
     }
-}
 
 
 def _dv_upgrade_protocol(base: dict[str, Any] | None) -> dict[str, Any]:
-    """The protocol action for the first DV-bearing commit.  Upgrading a
-    LEGACY protocol to table features must enumerate every feature the
-    legacy reader/writer versions implied (PROTOCOL.md's upgrade rule)
-    — an adopted column-mapped table (reader 2 / writer 5) keeps its
-    columnMapping capability listed next to deletionVectors."""
-    if not base:
-        return {"protocol": dict(_DV_PROTOCOL_ACTION["protocol"])}
-    mrv = int(base.get("minReaderVersion", 1))
-    mwv = int(base.get("minWriterVersion", 1))
-    rfeat = set(base.get("readerFeatures") or [])
-    wfeat = set(base.get("writerFeatures") or [])
-    if mrv == 2:
+    """The protocol of the first DV-bearing commit (reader 3 / writer 7
+    with the deletionVectors feature).  Upgrading a LEGACY protocol to
+    table features must enumerate every feature the legacy reader/writer
+    versions implied (PROTOCOL.md's upgrade rule) — a column-mapped
+    table (reader 2 / writer 5) keeps its columnMapping capability
+    listed next to deletionVectors."""
+    base = base or {}
+    rfeat = set(base.get("readerFeatures") or []) | {"deletionVectors"}
+    wfeat = set(base.get("writerFeatures") or []) | {"deletionVectors"}
+    if int(base.get("minReaderVersion", 1)) == 2:
         rfeat.add("columnMapping")
+    mwv = int(base.get("minWriterVersion", 1))
     if mwv < 7:
-        if mwv >= 2:
-            wfeat |= {"appendOnly", "invariants"}
-        if mwv >= 3:
-            wfeat.add("checkConstraints")
-        if mwv >= 4:
-            wfeat |= {"changeDataFeed", "generatedColumns"}
-        if mwv >= 5:
-            wfeat.add("columnMapping")
-        if mwv >= 6:
-            wfeat.add("identityColumns")
-    rfeat.add("deletionVectors")
-    wfeat.add("deletionVectors")
+        wfeat |= _legacy_writer_features(mwv)
     return {
-        "protocol": {
-            "minReaderVersion": 3,
-            "minWriterVersion": 7,
-            "readerFeatures": sorted(rfeat),
-            "writerFeatures": sorted(wfeat),
-        }
+        "minReaderVersion": 3,
+        "minWriterVersion": 7,
+        "readerFeatures": sorted(rfeat),
+        "writerFeatures": sorted(wfeat),
     }
 
 
@@ -131,21 +145,45 @@ def _commit_file(path: str, version: int) -> str:
     return os.path.join(_delta_dir(path), f"{version:020d}.json")
 
 
-def has_delta_log(path: str) -> bool:
+def _listing(path: str) -> tuple[list[int], list[int]]:
+    """(JSON commit versions, checkpoint versions) from one listing of
+    the log directory; checkpoints may be single- or multi-part."""
     d = _delta_dir(path)
-    return os.path.isdir(d) and any(
-        (f.endswith(".json") and f[:-5].isdigit()) or ".checkpoint" in f
-        for f in os.listdir(d)
-    )
+    if not os.path.isdir(d):
+        return [], []
+    commits, ckpts = set(), set()
+    for f in os.listdir(d):
+        if f.endswith(".json") and f[:-5].isdigit():
+            commits.add(int(f[:-5]))
+        elif m := _CHECKPOINT_RE.match(f):
+            ckpts.add(int(m.group(1)))
+    return sorted(commits), sorted(ckpts)
+
+
+def has_delta_log(path: str) -> bool:
+    return any(_listing(path))
 
 
 def delta_versions(path: str) -> list[int]:
-    d = _delta_dir(path)
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(f[:-5]) for f in os.listdir(d) if f.endswith(".json") and f[:-5].isdigit()
-    )
+    return _listing(path)[0]
+
+
+def checkpoint_versions(path: str) -> list[int]:
+    """Versions that have a parquet checkpoint (single-part or
+    multi-part per the protocol's file-name patterns)."""
+    return _listing(path)[1]
+
+
+def readable_versions(path: str) -> list[int]:
+    """The versions a snapshot can be built for: a checkpoint, or a JSON
+    commit on top of a readable version (version 0 on nothing)."""
+    commits, ckpts = _listing(path)
+    json_set, ck_set = set(commits), set(ckpts)
+    out: list[int] = []
+    for v in sorted(json_set | ck_set):
+        if v in ck_set or (v in json_set and (v == 0 or (out and out[-1] == v - 1))):
+            out.append(v)
+    return out
 
 
 def _read_actions(path: str, version: int) -> list[dict[str, Any]]:
@@ -158,73 +196,87 @@ def _read_actions(path: str, version: int) -> list[dict[str, Any]]:
     return out
 
 
-def _current_table_id(path: str) -> str | None:
-    """The stable table id from the newest metaData action already in
-    the log (Delta requires the id to survive schema changes)."""
-    for v in reversed(delta_versions(path)):
+def _replay(
+    path: str, version: int, *, start: int = 0, seed=None
+) -> tuple[dict[str, dict], dict, dict, dict[str, int], dict]:
+    """Replay JSON actions start..version on top of ``seed`` (a
+    checkpoint's state) -> (live add actions by path, metaData,
+    protocol, txn versions by app id, ``version``'s commitInfo)."""
+    adds: dict[str, dict] = dict(seed[0]) if seed else {}
+    meta: dict | None = seed[1] if seed else None
+    protocol: dict | None = seed[2] if seed else None
+    txns: dict[str, int] = dict(seed[3]) if seed else {}
+    info: dict = {}
+    for v in range(start, version + 1):
         for a in _read_actions(path, v):
-            if "metaData" in a:
-                return a["metaData"]["id"]
-    return None
+            if "add" in a:
+                adds[a["add"]["path"]] = a["add"]
+            elif "remove" in a:
+                adds.pop(a["remove"]["path"], None)
+            elif "metaData" in a:
+                meta = a["metaData"]
+            elif "protocol" in a:
+                protocol = a["protocol"]
+            elif "txn" in a:
+                txns[a["txn"]["appId"]] = int(a["txn"]["version"])
+            elif "commitInfo" in a and v == version:
+                info = a["commitInfo"]
+    if meta is None:
+        raise InvalidArgument(f"Delta log at {path!r} has no metaData action")
+    return adds, meta, protocol or {"minReaderVersion": 1}, txns, info
 
 
-def _num_records(abs_file: str) -> int | None:
-    """Row count from the parquet footer only (no data pages read)."""
-    try:
-        import pyarrow.parquet as pq
-
-        return int(pq.ParquetFile(abs_file).metadata.num_rows)
-    except Exception:
-        return None
-
-
-def _add_action(root: str, entry: dict[str, Any]) -> dict[str, Any]:
-    abs_file = os.path.join(root, entry["path"])
-    st = os.stat(abs_file)
-    stats: dict[str, Any] = {}
-    n = 0 if entry.get("empty") else _num_records(abs_file)
-    if n is not None:
-        stats["numRecords"] = n
-    if entry.get("stats"):
-        stats["minValues"] = {c: b[0] for c, b in entry["stats"].items() if b[0] is not None}
-        stats["maxValues"] = {c: b[1] for c, b in entry["stats"].items() if b[1] is not None}
-    add = {
-        # the protocol wants an RFC 2396 relative URI
-        "path": urllib.parse.quote(entry["path"].replace(os.sep, "/"), safe="/=%"),
-        "partitionValues": dict(entry.get("partition_values") or {}),
-        "size": st.st_size,
-        "modificationTime": int(st.st_mtime * 1000),
-        "dataChange": True,
-    }
-    if stats:
-        add["stats"] = json.dumps(stats)
-    if entry.get("dv"):
-        add["deletionVector"] = dict(entry["dv"])
-    return {"add": add}
-
-
-def _remove_action(entry: dict[str, Any], ts_ms: int) -> dict[str, Any]:
-    remove: dict[str, Any] = {
-        "path": urllib.parse.quote(entry["path"].replace(os.sep, "/"), safe="/=%"),
-        "deletionTimestamp": ts_ms,
-        "dataChange": True,
-    }
-    if entry.get("dv"):
-        # the remove names the LOGICAL file it retires: (path, dv)
-        remove["deletionVector"] = dict(entry["dv"])
-    return {"remove": remove}
+def _state(
+    path: str, version: int | None = None
+) -> tuple[int, dict[str, dict], dict, dict, dict[str, int], dict]:
+    """The table state at ``version`` (default latest): (version, live
+    adds, metaData, protocol, txns, commitInfo).  JSON commits replay
+    from version 0 while the log is contiguous; across a gap (history
+    cleaned up) the newest parquet checkpoint at or below ``version``
+    that the later JSON commits reach seeds the replay — the protocol's
+    recovery path."""
+    commits, ckpts = _listing(path)
+    if not commits and not ckpts:
+        raise InvalidArgument(f"no Delta log under {path!r}")
+    latest = max(commits[-1] if commits else -1, ckpts[-1] if ckpts else -1)
+    v = latest if version is None else int(version)
+    if v < 0 or v > latest:
+        raise InvalidArgument(
+            f"Delta version {v} not found at {path!r} (have up to {latest})"
+        )
+    json_set = set(commits)
+    if all(i in json_set for i in range(v + 1)):
+        return (v, *_replay(path, v))
+    usable = [
+        c for c in ckpts if c <= v and all(i in json_set for i in range(c + 1, v + 1))
+    ]
+    if not usable:
+        raise InvalidArgument(
+            f"Delta version {v} at {path!r} is not reachable: the log is "
+            "not contiguous from version 0 and no parquet checkpoint "
+            "covers the gap (history cleaned up past this version)"
+        )
+    c = max(usable)
+    seed = (*_load_checkpoint(path, c), _checkpoint_txns(path, c))
+    return (v, *_replay(path, v, start=c + 1, seed=seed))
 
 
-def _export_offset(path: str) -> int:
-    """Delta-version offset for tables imported with
-    :func:`convert_from_delta` (0 otherwise)."""
-    from aws_sdk_pandas_spark import lakehouse_shim as ls
-
-    f = os.path.join(ls._log_dir(path), "delta_offset")
-    if os.path.exists(f):
-        with open(f) as fh:
-            return int(fh.read().strip())
-    return 0
+def _check_readable(protocol: dict[str, Any], meta: dict[str, Any]) -> str | None:
+    """Refuse reader features this reader does not implement; returns
+    the table's column-mapping mode."""
+    mrv = int(protocol.get("minReaderVersion", 1))
+    features = set(protocol.get("readerFeatures") or [])
+    if not (mrv in (1, 2) or (mrv == 3 and features <= {"deletionVectors", "columnMapping"})):
+        raise InvalidArgument(
+            f"unsupported Delta reader protocol {protocol}: this jar-free "
+            "reader supports minReaderVersion 1, 2 (column mapping mode "
+            "'name'), or 3 with the deletionVectors/columnMapping features "
+            "only (no v2 checkpoints / timestampNtz)"
+        )
+    cm_mode = (meta.get("configuration") or {}).get("delta.columnMapping.mode")
+    if cm_mode not in (None, "none", "name", "id"):
+        raise InvalidArgument(f"unknown delta.columnMapping.mode {cm_mode!r}")
+    return cm_mode
 
 
 def _physical_type(t: Any) -> Any:
@@ -252,9 +304,7 @@ def _nested_renames(t: Any) -> list[str]:
     if isinstance(t, dict):
         if t.get("type") == "struct":
             for f in t.get("fields", []):
-                pn = (f.get("metadata") or {}).get(
-                    "delta.columnMapping.physicalName"
-                )
+                pn = (f.get("metadata") or {}).get(_PHYSICAL)
                 if pn and pn != f["name"]:
                     out.append(f"{f['name']}->{pn}")
                 out.extend(_nested_renames(f["type"]))
@@ -271,387 +321,395 @@ def _physical_field(f: dict[str, Any]) -> dict[str, Any]:
     parquet files actually carry), columnMapping metadata stripped."""
     md = f.get("metadata") or {}
     return {
-        "name": md.get("delta.columnMapping.physicalName", f["name"]),
+        "name": md.get(_PHYSICAL, f["name"]),
         "type": _physical_type(f["type"]),
         "nullable": f.get("nullable", True),
         "metadata": {},
     }
 
 
-def convert_from_delta(path: str) -> dict[str, Any]:
-    """Adopt a FOREIGN Delta table (delta-rs / Delta Spark — including
-    deletion-vector-bearing and NAME-column-mapped tables) for lakelite
-    WRITES: the latest snapshot imports as lakelite manifest v0 (files
-    by reference, deletionVector descriptors carried verbatim —
-    lakelite speaks the same DV format) and a recorded version offset
-    makes every later lakelite commit continue the SAME ``_delta_log``
-    chain, so foreign readers keep following the table.  This is the
-    migration direction the round-4 boundary refused.
+def _entry(add: dict[str, Any], pcols: list[str]) -> dict[str, Any]:
+    """One live ``add`` as a lakelite manifest entry."""
+    rel = urllib.parse.unquote(add["path"])
+    seg = rel.split("/")
+    pv = add.get("partitionValues") or {}
+    entry: dict[str, Any] = {
+        "path": rel,
+        # lakelite writes each commit under its own data/<commit> dir, the
+        # partition-discovery base of its scan; another engine's file
+        # scans from the table root
+        "commit": "/".join(seg[:2])
+        if len(seg) > 2 and seg[0] == "data" and "=" not in seg[1]
+        else "",
+        "partition_values": {c: pv.get(c) for c in pcols},
+    }
+    stats = add.get("stats")
+    if stats:
+        st = json.loads(stats) if isinstance(stats, str) else stats
+        if st.get("numRecords") == 0:
+            entry["empty"] = True
+        mins, maxs = st.get("minValues") or {}, st.get("maxValues") or {}
+        bounds = {c: [mins.get(c), maxs.get(c)] for c in sorted(set(mins) | set(maxs))}
+        if bounds:
+            entry["stats"] = bounds
+    if add.get("deletionVector"):
+        entry["dv"] = dict(add["deletionVector"])
+    return entry
 
-    ``delta.columnMapping.mode = 'name'`` (the delta-rs / Delta Spark
-    default for new tables) adopts via a column-mapping sidecar: inside
-    lakelite the table runs entirely on PHYSICAL column names (manifest
-    schema, partition values, stats — matching what the parquet files
-    and the protocol's physical-name rule for partitionValues/stats
-    already use), the lakelite entry points translate logical<->physical
-    at the boundary, and the exporter emits the original logical
-    ``schemaString``/``partitionColumns``/``configuration`` so foreign
-    readers keep resolving the mapping.  Schema evolution on adopted
-    mapped tables is refused (new columns need fresh physical names and
-    a ``maxColumnId`` bump).
 
-    Loud refusals (writing blind would corrupt the table for the
-    features' readers): column mapping mode 'id' (field-id resolution),
-    NESTED physical renames (both readers translate top-level only —
-    surfacing physical inner names would be a silent wrong answer),
-    writer features beyond deletionVectors/columnMapping (e.g.
-    invariants/checkConstraints — we can't enforce them), declared
-    ``delta.invariants``, ``delta.enableChangeDataFeed`` (we don't
-    write ``_change_data``), ``delta.appendOnly`` tables, and
-    non-hive-layout partitioned files (lakelite reads recover partition
-    values from ``k=v`` directory names).
+def snapshot(path: str, version: int | None = None) -> dict[str, Any]:
+    """The lakelite manifest of ``version`` (default latest), replayed
+    from the log once: ``version``, ``mode``, ``schema`` (Spark JSON in
+    PHYSICAL names), ``partition_cols``, ``files`` (``path``, ``commit``
+    — the ``data/<commit>`` dir lakelite wrote the file to, ``""`` for
+    another engine's —, ``partition_values`` and, when known, ``stats``,
+    ``dv`` and ``empty``), ``stats_cols``, ``txns``, ``log2phys`` (a
+    name-mapped table's logical -> physical columns, else empty) and the
+    raw ``meta``/``protocol``/``adds`` the next commit builds on.
 
-    Returns ``{"delta_version": N, "files": n, "dv_files": m}``."""
-    from aws_sdk_pandas_spark import lakehouse_shim as ls
-
-    if ls.table_exists(path):
-        raise InvalidArgument(f"{path!r} is already a lakelite table")
-    vs = delta_versions(path)
-    ckpts = checkpoint_versions(path)
-    if not vs and not ckpts:
-        raise InvalidArgument(f"no Delta log under {path!r}")
-    latest = max(vs[-1] if vs else -1, ckpts[-1] if ckpts else -1)
-    json_set = set(vs)
-    if all(i in json_set for i in range(latest + 1)):
-        adds, meta, protocol = _replay(path, latest)
-    else:
-        usable = [
-            c
-            for c in ckpts
-            if all(i in json_set for i in range(c + 1, latest + 1))
-        ]
-        if not usable:
-            raise InvalidArgument(
-                f"Delta log at {path!r} is not contiguous and no checkpoint "
-                "covers the gap — cannot import a consistent snapshot"
-            )
-        c = max(usable)
-        adds, meta, protocol = _replay(
-            path, latest, start=c + 1, seed=_load_checkpoint(path, c)
+    Lakelite reads a column-mapped table by physical name, so mapping
+    mode 'id' (field-id resolution) and NESTED physical renames (the
+    translation is top-level only — physical inner names would be a
+    silent wrong answer) are refused here; ``read_delta_log`` reads
+    both."""
+    v, adds, meta, protocol, txns, info = _state(path, version)
+    cm_mode = _check_readable(protocol, meta)
+    fields = json.loads(meta["schemaString"]).get("fields", [])
+    log2phys: dict[str, str] = {}
+    schema = meta["schemaString"]
+    if cm_mode == "id":
+        raise InvalidArgument(
+            f"cannot use column-mapped Delta table at {path!r} (mode 'id'): "
+            "only mode 'name' is supported (mode 'id' resolves parquet "
+            "columns by field id, which lakelite's writers don't stamp); "
+            "read_delta_log reads it"
         )
-
-    config = meta.get("configuration") or {}
-    cm_mode = config.get("delta.columnMapping.mode")
-    schema_json = json.loads(meta["schemaString"])
-    cmap_sidecar: dict[str, Any] | None = None
     if cm_mode == "name":
-        log2phys: dict[str, str] = {}
-        for f in schema_json.get("fields", []):
-            md = f.get("metadata") or {}
-            pn = md.get("delta.columnMapping.physicalName")
+        for f in fields:
+            pn = (f.get("metadata") or {}).get(_PHYSICAL)
             if not pn:
                 raise InvalidArgument(
-                    f"column-mapped table field {f['name']!r} carries no "
-                    "delta.columnMapping.physicalName"
+                    f"column-mapped table field {f['name']!r} carries no {_PHYSICAL}"
                 )
-            log2phys[f["name"]] = pn
             nested = _nested_renames(f["type"])
             if nested:
-                # the boundary translation (and read_delta_log's rename)
-                # is top-level: silently exposing physical INNER names
-                # would be a wrong answer, so refuse loudly
                 raise InvalidArgument(
                     f"column-mapped table field {f['name']!r} renames NESTED "
                     f"fields (e.g. {nested[0]}): only top-level name mapping "
-                    "is supported for adoption"
+                    "is supported"
                 )
-        cmap_sidecar = {
-            "mode": "name",
-            "schemaString": meta["schemaString"],
-            "partitionColumns": list(meta.get("partitionColumns") or []),
-            "configuration": dict(config),
-            "protocol": dict(protocol),
-            "log2phys": log2phys,
-        }
-    elif cm_mode not in (None, "none"):
-        raise InvalidArgument(
-            f"cannot adopt column-mapped Delta table (mode {cm_mode!r}): "
-            "only mode 'name' is supported (mode 'id' resolves parquet "
-            "columns by field id, which lakelite's writers don't stamp)"
-        )
+            log2phys[f["name"]] = pn
+        schema = T.StructType.fromJson(
+            {"type": "struct", "fields": [_physical_field(f) for f in fields]}
+        ).json()
+    config = meta.get("configuration") or {}
+    pcols = [log2phys.get(c, c) for c in meta.get("partitionColumns") or []]
+    return {
+        "version": v,
+        "mode": (info.get("operationParameters") or {}).get("mode", ""),
+        "schema": schema,
+        "partition_cols": pcols,
+        "files": [_entry(a, pcols) for a in adds.values()],
+        "stats_cols": [
+            log2phys.get(c, c) for c in (config.get(_STATS_COLS) or "").split(",") if c
+        ],
+        "txns": txns,
+        "log2phys": log2phys,
+        "meta": meta,
+        "protocol": protocol,
+        "adds": adds,
+    }
+
+
+def check_writable(man: dict[str, Any]) -> None:
+    """Refuse to write a table this engine cannot keep intact for its
+    other readers and writers: declared ``delta.invariants`` and check
+    features (not enforced here), ``delta.enableChangeDataFeed`` (no
+    ``_change_data`` files are written), ``delta.appendOnly`` (merge and
+    delete would break it), writer features beyond deletionVectors and
+    name-mode columnMapping, and data files at absolute paths or outside
+    a hive ``k=v`` layout (lakelite scans recover partition values from
+    the directory names).  ``man`` is a :func:`snapshot`; every write
+    into an existing table runs this before it writes a data file."""
+    meta, protocol = man["meta"], man["protocol"]
+    config = meta.get("configuration") or {}
     if any(
         (f.get("metadata") or {}).get("delta.invariants")
-        for f in schema_json.get("fields", [])
+        for f in json.loads(meta["schemaString"]).get("fields", [])
     ):
         raise InvalidArgument(
-            "cannot adopt table with delta.invariants: lakelite writes "
+            "cannot write table with delta.invariants: lakelite writes "
             "don't enforce them"
         )
     if str(config.get("delta.enableChangeDataFeed", "")).lower() == "true":
         raise InvalidArgument(
-            "cannot adopt table with delta.enableChangeDataFeed: lakelite "
+            "cannot write table with delta.enableChangeDataFeed: lakelite "
             "writes don't produce _change_data files"
         )
     if str(config.get("delta.appendOnly", "")).lower() == "true":
         raise InvalidArgument(
-            "cannot adopt delta.appendOnly table: lakelite merge/delete "
+            "cannot write delta.appendOnly table: lakelite merge/delete "
             "would violate the table contract"
         )
     mwv = int(protocol.get("minWriterVersion", 1))
-    wfeat = set(protocol.get("writerFeatures") or [])
-    allowed_feat = {"deletionVectors"} | (
-        {"columnMapping"} if cm_mode == "name" else set()
-    )
+    extra = set(protocol.get("writerFeatures") or []) - {"deletionVectors"}
+    mapped = bool(man["log2phys"])
+    # writer 7 lists its features: none beyond deletionVectors, or on a
+    # name-mapped table columnMapping alone or exactly the set a legacy
+    # writer-5 table lists once its first DV commit upgrades it
     if not (
         mwv <= 2
-        or (mwv == 5 and cm_mode == "name")
-        or (mwv == 7 and wfeat <= allowed_feat)
+        or (mwv == 5 and mapped)
+        or (
+            mwv == 7
+            and (
+                not extra
+                or (mapped and extra in ({"columnMapping"}, _legacy_writer_features(5)))
+            )
+        )
     ):
         raise InvalidArgument(
-            f"cannot adopt Delta table with writer protocol {protocol}: "
+            f"cannot write Delta table with writer protocol {protocol}: "
             "unsupported writer features (only deletionVectors and "
             "name-mode columnMapping are)"
         )
-
-    root = _local(path)
-    pcols = list(meta.get("partitionColumns") or [])
-    if cmap_sidecar is not None:
-        # lakelite runs the adopted table on PHYSICAL names throughout
-        pcols = [cmap_sidecar["log2phys"].get(c, c) for c in pcols]
-    entries: list[dict[str, Any]] = []
-    n_dv = 0
-    for a in adds.values():
-        rel = urllib.parse.unquote(a["path"])
-        if os.path.isabs(rel):
+    for e in man["files"]:
+        if os.path.isabs(e["path"]):
             raise InvalidArgument(
-                f"cannot adopt table with absolute file path {rel!r}"
+                f"cannot write table with absolute file path {e['path']!r}"
             )
-        pv = dict(a.get("partitionValues") or {})
-        if pv:
-            segs = rel.split("/")
-            missing = [
-                k for k in pv if not any(s.startswith(f"{k}=") for s in segs)
-            ]
-            if missing:
-                raise InvalidArgument(
-                    f"cannot adopt non-hive-layout partitioned table: file "
-                    f"{rel!r} carries partition values for {missing} only in "
-                    "the log"
-                )
-        if not os.path.exists(os.path.join(root, rel)):
+        segs = e["path"].split("/")
+        missing = [
+            k for k in e["partition_values"] if not any(s.startswith(f"{k}=") for s in segs)
+        ]
+        if missing:
             raise InvalidArgument(
-                f"Delta snapshot references missing data file {rel!r}"
+                f"cannot write non-hive-layout partitioned table: file "
+                f"{e['path']!r} carries partition values for {missing} only in "
+                "the log"
             )
-        entry: dict[str, Any] = {
-            "path": rel,
-            # basePath = table root: hive k=v dirs under it resolve the
-            # partition columns through Spark's partition discovery
-            "commit": "",
-            "partition_values": {k: pv.get(k) for k in pcols},
-        }
-        stats_raw = a.get("stats")
-        if stats_raw:
-            st = json.loads(stats_raw) if isinstance(stats_raw, str) else stats_raw
-            mins, maxs = st.get("minValues") or {}, st.get("maxValues") or {}
-            bounds = {
-                c: [mins.get(c), maxs.get(c)]
-                for c in set(mins) | set(maxs)
-            }
-            if bounds:
-                entry["stats"] = bounds
-        if a.get("deletionVector"):
-            entry["dv"] = dict(a["deletionVector"])
-            n_dv += 1
-        entries.append(entry)
 
-    os.makedirs(ls._log_dir(path), exist_ok=True)
-    # lakelite version v maps to Delta version v + latest: manifest v0
-    # IS the imported snapshot (its export is a no-op — that Delta
-    # commit already exists), v1 continues the chain at latest + 1
-    with open(os.path.join(ls._log_dir(path), "delta_offset"), "w") as fh:
-        fh.write(str(latest))
-    if cmap_sidecar is not None:
-        with open(os.path.join(ls._log_dir(path), ls._CMAP_FILE), "w") as fh:
-            json.dump(cmap_sidecar, fh)
-        manifest_schema = json.dumps(
-            {
-                "type": "struct",
-                "fields": [
-                    _physical_field(f) for f in schema_json.get("fields", [])
-                ],
-            }
-        )
-    else:
-        manifest_schema = meta["schemaString"]
-    ls._commit_manifest(
-        path,
-        {
-            "version": 0,
-            "mode": "convert",
-            "schema": manifest_schema,
-            "partition_cols": pcols,
-            "files": entries,
-            "stats_cols": [],
-            "txns": {},
-        },
+
+def _created_here(path: str) -> bool:
+    """True when this engine wrote the table's version 0."""
+    return os.path.exists(_commit_file(path, 0)) and any(
+        (a.get("commitInfo") or {}).get("engineInfo") == _ENGINE
+        for a in _read_actions(path, 0)
     )
-    return {"delta_version": latest, "files": len(entries), "dv_files": n_dv}
 
 
-def export_commit(path: str, manifest: dict[str, Any]) -> bool:
-    """Write the Delta commit file for one lakelite manifest (idempotent;
-    returns True when a file was written).  A valid Delta log must be
-    contiguous from version 0, so a gap is backfilled from the lakelite
-    manifests when they still exist; if older manifests were vacuumed
-    away before the first export, the export is skipped (a truncated log
-    would be worse than none — delta readers would refuse or misread)."""
-    from aws_sdk_pandas_spark import lakehouse_shim as ls
+def convert_from_delta(path: str) -> dict[str, Any]:
+    """Check that a FOREIGN Delta table (delta-rs / Delta Spark —
+    including deletion-vector-bearing and NAME-column-mapped tables)
+    takes lakelite writes, and describe its latest snapshot.  Nothing is
+    written: every lakelite write into an existing table runs the same
+    refusals (:func:`snapshot`'s column-mapping rules and
+    :func:`check_writable`) and continues the table's own log.  Also
+    refuses a snapshot that lists a missing data file, and a table this
+    engine created (it needs no adoption).
 
+    Returns ``{"delta_version": N, "files": n, "dv_files": m}``."""
+    if _created_here(path):
+        raise InvalidArgument(f"{path!r} is already a lakelite table")
+    man = snapshot(path)
+    check_writable(man)
+    root = _local(path)
+    missing = [
+        e["path"] for e in man["files"] if not os.path.exists(os.path.join(root, e["path"]))
+    ]
+    if missing:
+        raise InvalidArgument(
+            f"Delta snapshot references missing data file {missing[0]!r}"
+        )
+    return {
+        "delta_version": man["version"],
+        "files": len(man["files"]),
+        "dv_files": sum(1 for e in man["files"] if e.get("dv")),
+    }
+
+
+def _num_records(abs_file: str) -> int | None:
+    """Row count from the parquet footer only (no data pages read)."""
+    try:
+        import pyarrow.parquet as pq
+
+        return int(pq.ParquetFile(abs_file).metadata.num_rows)
+    except Exception:
+        return None
+
+
+def _add_action(root: str, entry: dict[str, Any], uri: str) -> dict[str, Any]:
+    abs_file = os.path.join(root, entry["path"])
+    st = os.stat(abs_file)
+    stats: dict[str, Any] = {}
+    n = 0 if entry.get("empty") else _num_records(abs_file)
+    if n is not None:
+        stats["numRecords"] = n
+    if entry.get("stats"):
+        stats["minValues"] = {c: b[0] for c, b in entry["stats"].items() if b[0] is not None}
+        stats["maxValues"] = {c: b[1] for c, b in entry["stats"].items() if b[1] is not None}
+    add = {
+        "path": uri,
+        "partitionValues": dict(entry.get("partition_values") or {}),
+        "size": st.st_size,
+        "modificationTime": int(st.st_mtime * 1000),
+        "dataChange": True,
+    }
+    if stats:
+        add["stats"] = json.dumps(stats)
+    if entry.get("dv"):
+        add["deletionVector"] = dict(entry["dv"])
+    return {"add": add}
+
+
+def _remove_action(entry: dict[str, Any], uri: str, ts_ms: int) -> dict[str, Any]:
+    remove: dict[str, Any] = {"path": uri, "deletionTimestamp": ts_ms, "dataChange": True}
+    if entry.get("dv"):
+        # the remove names the LOGICAL file it retires: (path, dv)
+        remove["deletionVector"] = dict(entry["dv"])
+    return {"remove": remove}
+
+
+def _metadata(
+    base: dict[str, Any] | None, manifest: dict[str, Any], ts_ms: int
+) -> dict[str, Any]:
+    """The table's ``metaData`` after a commit: the base's own while the
+    schema, partition columns and stats columns stay the same, else a
+    new one under the same table id.  A name-mapped table keeps its
+    logical schemaString and names its partitionColumns logically
+    (lakelite runs it on the physical names)."""
+    stats_cols = list(manifest.get("stats_cols") or [])
+    if base is not None and (
+        manifest["schema"], list(manifest["partition_cols"]), stats_cols
+    ) == (base["schema"], base["partition_cols"], base["stats_cols"]):
+        return base["meta"]
+    old = base["meta"] if base else {}
+    log2phys = base["log2phys"] if base else {}
+    phys2log = {p: l for l, p in log2phys.items()}  # noqa: E741
+    config = {k: v for k, v in (old.get("configuration") or {}).items() if k != _STATS_COLS}
+    if stats_cols:
+        config[_STATS_COLS] = ",".join(phys2log.get(c, c) for c in stats_cols)
+    return {
+        "id": old.get("id") or str(uuid.uuid4()),
+        "format": old.get("format") or {"provider": "parquet", "options": {}},
+        # a name-mapped table's columns and types never change
+        "schemaString": old["schemaString"] if log2phys else manifest["schema"],
+        "partitionColumns": [phys2log.get(c, c) for c in manifest["partition_cols"]],
+        "configuration": config,
+        "createdTime": old.get("createdTime", ts_ms),
+    }
+
+
+def commit(path: str, manifest: dict[str, Any]) -> None:
+    """Commit a lakelite manifest as the Delta commit of its
+    ``version``: the actions that turn the snapshot it was built on
+    (``manifest["base"]``, replayed here when absent) into it — files
+    gone are removed, files new are added, and a file whose deletion
+    vector changed is a remove(path, old dv) + add(path, new dv) pair.
+    The commit file is created exclusively, so a version another writer
+    holds raises ``concurrent write detected`` and the caller rebases.
+    Every ``_CHECKPOINT_INTERVAL``-th version also writes a checkpoint
+    from the in-memory state; its failure is raised with a note that the
+    version itself is committed."""
     v = int(manifest["version"])
-    # a table imported from a foreign Delta log (convert_from_delta)
-    # continues that log: lakelite version v maps to Delta version
-    # v + offset (offset = the imported snapshot's Delta version)
-    off = _export_offset(path)
-    final = _commit_file(path, v + off)
-    if os.path.exists(final):
-        return False
-    if v > 0 and not os.path.exists(_commit_file(path, v - 1 + off)):
-        have = set(ls._versions(path))
-        if not all(i in have for i in range(v)):
-            return False  # history vacuumed before first export
-        for i in range(v):
-            export_commit(path, ls._read_manifest(path, i))
-
-    root = ls._local(path)
+    base = manifest.get("base")
+    if base is None and v > 0:
+        base = snapshot(path, v - 1)
+    root = _local(path)
     ts = int(time.time() * 1000)
-    prev = ls._read_manifest(path, v - 1) if v > 0 else None
-    prev_files = {e["path"]: e for e in (prev["files"] if prev else [])}
-    cur_files = {e["path"]: e for e in manifest["files"]}
-
+    mode = manifest.get("mode", "")
     actions: list[dict[str, Any]] = [
         {
             "commitInfo": {
                 "timestamp": ts,
-                "operation": _OPS.get(manifest.get("mode", ""), "WRITE"),
-                "operationParameters": {"mode": manifest.get("mode", "")},
-                "engineInfo": "aws_sdk_pandas_spark-lakelite",
+                "operation": _OPS.get(mode, "WRITE"),
+                "operationParameters": {"mode": mode},
+                "engineInfo": _ENGINE,
             }
         }
     ]
-    # adopted column-mapped tables export the original LOGICAL
-    # schemaString/partitionColumns/configuration and preserve the
-    # foreign protocol — the manifest's physical names appear only
-    # where the protocol wants them (add/remove partitionValues, stats)
-    cmap = ls._cmap_load(path)
-    has_dv = any(e.get("dv") for e in manifest["files"])
-    prev_had_dv = any(e.get("dv") for e in (prev["files"] if prev else []))
-    if v == 0:
-        if has_dv:
-            actions.append(_dv_upgrade_protocol(cmap["protocol"] if cmap else None))
-        elif cmap:
-            actions.append({"protocol": dict(cmap["protocol"])})
-        else:
-            actions.append(
-                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-            )
-    elif has_dv and not prev_had_dv:
-        # first DV-bearing commit upgrades the table protocol in place —
-        # sticky thereafter (replays keep the highest protocol seen)
-        actions.append(_dv_upgrade_protocol(cmap["protocol"] if cmap else None))
-    schema_changed = prev is not None and (
-        prev["schema"] != manifest["schema"]
-        or prev["partition_cols"] != manifest["partition_cols"]
-    )
-    if v == 0 or schema_changed:
-        actions.append(
-            {
-                "metaData": {
-                    "id": _current_table_id(path) or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": (
-                        cmap["schemaString"] if cmap else manifest["schema"]
-                    ),
-                    "partitionColumns": (
-                        list(cmap["partitionColumns"])
-                        if cmap
-                        else list(manifest["partition_cols"])
-                    ),
-                    "configuration": dict(cmap["configuration"]) if cmap else {},
-                    "createdTime": ts,
-                }
-            }
-        )
-    if manifest.get("txn"):
-        actions.append(
-            {"txn": {"appId": str(manifest["txn"][0]), "version": int(manifest["txn"][1])}}
-        )
-    for p in sorted(set(prev_files) - set(cur_files)):
-        actions.append(_remove_action(prev_files[p], ts))
-    for p in sorted(set(cur_files) - set(prev_files)):
-        actions.append(_add_action(root, cur_files[p]))
-    # a file whose deletion vector changed is a LOGICAL replace: the
-    # spec'd pattern is remove(path, old dv) + add(path, new dv) in one
-    # commit (the remove precedes the add, so replay nets to the new dv)
-    for p in sorted(set(prev_files) & set(cur_files)):
-        if (prev_files[p].get("dv") or None) != (cur_files[p].get("dv") or None):
-            actions.append(_remove_action(prev_files[p], ts))
-            actions.append(_add_action(root, cur_files[p]))
+    protocol = base["protocol"] if base else {"minReaderVersion": 1, "minWriterVersion": 2}
+    if any(e.get("dv") for e in manifest["files"]) and "deletionVectors" not in (
+        protocol.get("readerFeatures") or []
+    ):
+        # the first DV-bearing commit upgrades the protocol in place
+        protocol = _dv_upgrade_protocol(protocol if base and base["log2phys"] else None)
+    if base is None or protocol is not base["protocol"]:
+        actions.append({"protocol": protocol})
+    meta = _metadata(base, manifest, ts)
+    if base is None or meta is not base["meta"]:
+        actions.append({"metaData": meta})
+    # a txn stamp only ever advances its app's high-water mark
+    txns = dict(base["txns"]) if base else {}
+    for app, batch in sorted((manifest.get("txns") or {}).items()):
+        if int(batch) > txns.get(app, -1):
+            txns[app] = int(batch)
+            actions.append({"txn": {"appId": app, "version": int(batch)}})
+
+    prev = {e["path"]: e for e in base["files"]} if base else {}
+    cur = {e["path"]: e for e in manifest["files"]}
+    # a kept file is named by the exact path string its add carried, so
+    # the remove (or re-add) matches the key every replay uses
+    raw = {urllib.parse.unquote(p): p for p in base["adds"]} if base else {}
+
+    def uri(p: str) -> str:
+        # the protocol wants an RFC 2396 relative URI
+        return raw.get(p) or urllib.parse.quote(p.replace(os.sep, "/"), safe="/=%")
+
+    files: list[dict[str, Any]] = []
+    for p in sorted(prev.keys() - cur.keys()):
+        files.append(_remove_action(prev[p], uri(p), ts))
+    for p in sorted(cur.keys() - prev.keys()):
+        files.append(_add_action(root, cur[p], uri(p)))
+    for p in sorted(prev.keys() & cur.keys()):
+        if (prev[p].get("dv") or None) != (cur[p].get("dv") or None):
+            files.append(_remove_action(prev[p], uri(p), ts))
+            files.append(_add_action(root, cur[p], uri(p)))
 
     d = _delta_dir(path)
     os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".{v + off:020d}.{uuid.uuid4().hex[:8]}.tmp")
+    tmp = os.path.join(d, f".{v:020d}.{uuid.uuid4().hex[:8]}.tmp")
     with open(tmp, "w") as fh:
-        for a in actions:
-            fh.write(json.dumps(a) + "\n")
+        fh.writelines(json.dumps(a) + "\n" for a in actions + files)
     try:
-        os.link(tmp, final)  # same atomic create-exclusive as the manifest
+        # a hard link is an atomic create-exclusive: two racing writers
+        # cannot both win the version (a rename would clobber the winner)
+        os.link(tmp, _commit_file(path, v))
     except FileExistsError:
-        pass  # a racing exporter of the same version wrote the same diff
-    os.unlink(tmp)
-    # real Delta writers checkpoint every 10 commits so readers (and log
-    # cleanup) never need the full JSON chain; best-effort sidecar
-    if (v + off + 1) % _CHECKPOINT_INTERVAL == 0:
-        try:
-            write_checkpoint(path, v + off)
-        except Exception as exc:  # pragma: no cover - defensive
-            import warnings
-
-            warnings.warn(f"Delta checkpoint skipped: {exc}", stacklevel=2)
-    return True
-
-
-def export_table(path: str) -> int:
-    """Backfill the whole Delta log for an existing lakelite table;
-    returns the number of commit files written."""
-    from aws_sdk_pandas_spark import lakehouse_shim as ls
-
-    n = 0
-    for v in ls._versions(path):
-        if export_commit(path, ls._read_manifest(path, v)):
-            n += 1
-    return n
+        raise InvalidArgument(
+            f"concurrent write detected: version {v} already committed at {path!r}"
+        ) from None
+    finally:
+        os.unlink(tmp)
+    if (v + 1) % _CHECKPOINT_INTERVAL:
+        return
+    adds = dict(base["adds"]) if base else {}
+    for a in files:
+        if "remove" in a:
+            adds.pop(a["remove"]["path"], None)
+        else:
+            adds[a["add"]["path"]] = a["add"]
+    try:
+        _write_checkpoint(path, v, adds, meta, protocol, txns)
+    except Exception as exc:
+        exc.add_note(f"Delta version {v} is committed at {path!r}; only its checkpoint failed")
+        raise
 
 
-_CHECKPOINT_INTERVAL = 10
-
-
-def write_checkpoint(path: str, version: int | None = None) -> str:
-    """Write a protocol-valid parquet CHECKPOINT of the table state at
-    ``version`` (default latest) plus the ``_last_checkpoint`` pointer —
-    the recovery file real Delta readers use to skip replaying old JSON
-    commits (and to keep reading after log cleanup).  One row per
-    action, exactly one non-null action column per row; row count is
-    bounded by the live FILE count, never rows.  ``txn`` app versions
-    are not checkpointed (lakelite keeps exactly-once stamps in its own
-    manifests)."""
+def _write_checkpoint(
+    path: str,
+    version: int,
+    adds: dict[str, dict],
+    meta: dict[str, Any],
+    protocol: dict[str, Any],
+    txns: dict[str, int],
+) -> str:
+    """Write the parquet CHECKPOINT of one table state plus the
+    ``_last_checkpoint`` pointer (unless that names a newer version).
+    One row per action, exactly one non-null action column per row; the
+    row count is bounded by the live FILE count, never rows."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    vs = delta_versions(path)
-    if not vs:
-        raise InvalidArgument(f"no Delta log under {path!r}")
-    v = vs[-1] if version is None else int(version)
-    adds, meta, protocol = _replay(path, v)
 
     dv_t = pa.struct(
         [
@@ -697,6 +755,16 @@ def write_checkpoint(path: str, version: int | None = None) -> str:
                 ),
             ),
             (
+                "txn",
+                pa.struct(
+                    [
+                        ("appId", pa.string()),
+                        ("version", pa.int64()),
+                        ("lastUpdated", pa.int64()),
+                    ]
+                ),
+            ),
+            (
                 "add",
                 pa.struct(
                     [
@@ -712,33 +780,52 @@ def write_checkpoint(path: str, version: int | None = None) -> str:
             ),
         ]
     )
-    rows: list[dict] = [{"protocol": protocol, "metaData": None, "add": None}]
-    if meta:
-        m = dict(meta)
-        m["format"] = m.get("format") or {"provider": "parquet", "options": {}}
-        m["format"].setdefault("options", {})
-        m["configuration"] = m.get("configuration") or {}
-        m["partitionColumns"] = list(m.get("partitionColumns") or [])
-        rows.append({"protocol": None, "metaData": m, "add": None})
+    m = dict(meta)
+    m["format"] = dict(m.get("format") or {"provider": "parquet", "options": {}})
+    m["format"].setdefault("options", {})
+    m["configuration"] = m.get("configuration") or {}
+    m["partitionColumns"] = list(m.get("partitionColumns") or [])
+    rows: list[dict] = [{"protocol": protocol}, {"metaData": m}]
+    rows += [
+        {"txn": {"appId": app, "version": batch}} for app, batch in sorted(txns.items())
+    ]
     for a in adds.values():
-        add = {
-            "path": a["path"],
-            "partitionValues": dict(a.get("partitionValues") or {}),
-            "size": a.get("size"),
-            "modificationTime": a.get("modificationTime"),
-            "dataChange": False,
-            "stats": a.get("stats"),
-            "deletionVector": a.get("deletionVector"),
-        }
-        rows.append({"protocol": None, "metaData": None, "add": add})
-    table = pa.Table.from_pylist(rows, schema=schema)
+        rows.append(
+            {
+                "add": {
+                    "path": a["path"],
+                    "partitionValues": dict(a.get("partitionValues") or {}),
+                    "size": a.get("size"),
+                    "modificationTime": a.get("modificationTime"),
+                    "dataChange": False,
+                    "stats": a.get("stats"),
+                    "deletionVector": a.get("deletionVector"),
+                }
+            }
+        )
     d = _delta_dir(path)
     os.makedirs(d, exist_ok=True)
-    out = os.path.join(d, f"{v:020d}.checkpoint.parquet")
-    pq.write_table(table, out)
-    with open(os.path.join(d, "_last_checkpoint"), "w") as fh:
-        json.dump({"version": v, "size": len(rows)}, fh)
+    out = os.path.join(d, f"{version:020d}.checkpoint.parquet")
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), out)
+    pointer = os.path.join(d, "_last_checkpoint")
+    if os.path.exists(pointer):
+        with open(pointer) as fh:
+            if int(json.load(fh)["version"]) > version:
+                return out
+    with open(pointer, "w") as fh:
+        json.dump({"version": version, "size": len(rows)}, fh)
     return out
+
+
+def write_checkpoint(path: str, version: int | None = None) -> str:
+    """Write a protocol-valid parquet CHECKPOINT of the table state at
+    ``version`` (default latest) plus the ``_last_checkpoint`` pointer —
+    the recovery file real Delta readers use to skip replaying old JSON
+    commits (and to keep reading after log cleanup).  It carries the
+    live files (with their deletion vectors), the protocol, the
+    ``metaData`` with its configuration and every app's ``txn``."""
+    v, adds, meta, protocol, txns, _info = _state(path, version)
+    return _write_checkpoint(path, v, adds, meta, protocol, txns)
 
 
 def clean_log(path: str, *, keep_versions: int = 0) -> list[int]:
@@ -746,37 +833,49 @@ def clean_log(path: str, *, keep_versions: int = 0) -> list[int]:
     commit files fully covered by the newest parquet checkpoint — the
     cleanup real Delta writers run so the log does not grow without
     bound.  Readers recover through the checkpoint (the protocol's
-    recovery path, which :func:`read_delta_log` already follows);
+    recovery path, which every replay follows);
     ``keep_versions`` retains that many JSON commits BELOW the
     checkpoint for extra time-travel headroom.  Returns the removed
     versions.  No checkpoint -> nothing is removed (a truncated log
     without a checkpoint would strand readers)."""
-    ckpts = checkpoint_versions(path)
+    commits, ckpts = _listing(path)
     if not ckpts:
         return []
     cut = ckpts[-1] - int(keep_versions)
-    removed = []
-    for v in delta_versions(path):
-        # the checkpoint itself covers version ckpt; JSON commits at or
-        # below (cut - ... ) are redundant for every supported read
-        if v < cut:
-            os.remove(_commit_file(path, v))
-            removed.append(v)
+    removed = [v for v in commits if v < cut]
+    for v in removed:
+        os.remove(_commit_file(path, v))
     return removed
 
 
-def checkpoint_versions(path: str) -> list[int]:
-    """Versions that have a parquet checkpoint (single-part or
-    multi-part per the protocol's file-name patterns)."""
-    d = _delta_dir(path)
-    if not os.path.isdir(d):
-        return []
-    out = set()
-    for f in os.listdir(d):
-        m = re.match(r"^(\d{20})\.checkpoint(\.\d{10}\.\d{10})?\.parquet$", f)
-        if m:
-            out.add(int(m.group(1)))
-    return sorted(out)
+def truncate(path: str, keep_versions: int) -> list[dict[str, Any]]:
+    """Keep only the newest ``keep_versions`` readable versions of the
+    log: write a checkpoint at the oldest kept version, delete every
+    JSON commit and checkpoint below it, and return the ``add`` actions
+    live at any kept version (the files VACUUM must keep)."""
+    if keep_versions < 1:
+        raise InvalidArgument("keep_versions must be >= 1")
+    kept = readable_versions(path)[-keep_versions:]
+    if not kept:
+        raise InvalidArgument(f"no Delta log under {path!r}")
+    oldest = kept[0]
+    _v, adds, meta, protocol, txns, _info = _state(path, oldest)
+    _write_checkpoint(path, oldest, adds, meta, protocol, txns)
+    live = list(adds.values())
+    commits, ckpts = _listing(path)
+    for v in kept[1:]:
+        if v in commits:
+            live += [a["add"] for a in _read_actions(path, v) if "add" in a]
+        else:
+            live += list(_load_checkpoint(path, v)[0].values())
+    for c in ckpts:
+        if c < oldest:
+            for f in _checkpoint_files(path, c):
+                os.remove(f)
+    for v in commits:
+        if v < oldest:
+            os.remove(_commit_file(path, v))
+    return live
 
 
 def _checkpoint_files(path: str, version: int) -> list[str]:
@@ -817,26 +916,26 @@ def _load_checkpoint(path: str, version: int) -> tuple[dict[str, dict], dict | N
     row with exactly one non-null action column.  Driver-side via
     pyarrow: checkpoint row count == file count, the same bounded set
     every Delta client materializes to plan a scan."""
-    try:
-        import pyarrow.parquet as pq
-    except Exception as exc:  # pragma: no cover - pyarrow is baked in
-        raise InvalidArgument(f"checkpoint replay needs pyarrow: {exc}")
+    import pyarrow.parquet as pq
+
     adds: dict[str, dict] = {}
     meta: dict | None = None
     protocol: dict | None = None
     for f in _checkpoint_files(path, version):
         tbl = pq.read_table(f)
         cols = set(tbl.column_names)
-        rows = tbl.to_pylist()
-        for r in rows:
+        for r in tbl.to_pylist():
             a = r.get("add") if "add" in cols else None
             if a and a.get("path"):
                 entry = {
                     "path": a["path"],
                     "partitionValues": _mapish(a.get("partitionValues")),
                     "size": a.get("size"),
+                    "modificationTime": a.get("modificationTime"),
                     "dataChange": False,
                 }
+                if a.get("stats"):
+                    entry["stats"] = a["stats"]
                 # a checkpointed file may carry live deletion vectors —
                 # dropping them would silently RESURRECT deleted rows
                 dv = a.get("deletionVector")
@@ -855,11 +954,27 @@ def _load_checkpoint(path: str, version: int) -> tuple[dict[str, dict], dict | N
                     "partitionColumns": list(m.get("partitionColumns") or []),
                     "configuration": _mapish(m.get("configuration")),
                 }
+                if m.get("createdTime") is not None:
+                    meta["createdTime"] = m["createdTime"]
                 continue
             p = r.get("protocol") if "protocol" in cols else None
             if p and p.get("minReaderVersion") is not None:
                 protocol = {k: v for k, v in p.items() if v is not None}
     return adds, meta, protocol
+
+
+def _checkpoint_txns(path: str, version: int) -> dict[str, int]:
+    """The ``txn`` actions of a checkpoint (only that column is read)."""
+    import pyarrow.parquet as pq
+
+    txns: dict[str, int] = {}
+    for f in _checkpoint_files(path, version):
+        if "txn" not in pq.read_schema(f).names:
+            continue
+        for t in pq.read_table(f, columns=["txn"]).column("txn").to_pylist():
+            if t and t.get("appId") is not None:
+                txns[t["appId"]] = int(t["version"])
+    return txns
 
 
 # --------------------------------------------------- deletion vectors (v3)
@@ -1117,27 +1232,6 @@ def _dv_row_indexes(root: str, dv: dict) -> list[int]:
     return _rbarray_decode(data)
 
 
-def _replay(path: str, version: int, *, start: int = 0, seed=None) -> tuple[dict[str, dict], dict, dict]:
-    """Replay JSON actions start..version (optionally seeded from a
-    checkpoint) -> (live add actions by path, metaData, protocol)."""
-    adds: dict[str, dict] = dict(seed[0]) if seed else {}
-    meta: dict | None = seed[1] if seed else None
-    protocol: dict | None = seed[2] if seed else None
-    for v in range(start, version + 1):
-        for a in _read_actions(path, v):
-            if "protocol" in a:
-                protocol = a["protocol"]
-            elif "metaData" in a:
-                meta = a["metaData"]
-            elif "add" in a:
-                adds[a["add"]["path"]] = a["add"]
-            elif "remove" in a:
-                adds.pop(a["remove"]["path"], None)
-    if meta is None:
-        raise InvalidArgument(f"Delta log at {path!r} has no metaData action")
-    return adds, meta, protocol or {"minReaderVersion": 1}
-
-
 def read_delta_log(
     spark: SparkSession,
     path: str,
@@ -1146,61 +1240,17 @@ def read_delta_log(
     columns: list[str] | None = None,
 ) -> DataFrame:
     """Read a Delta table by replaying its transaction log — works on
-    tables written by this exporter AND on tables written elsewhere by
-    delta-rs / Delta Spark, with reader protocol 1.  When older JSON
-    commits have been cleaned up, the newest parquet CHECKPOINT at or
-    below the requested version seeds the replay (the protocol's
-    recovery path), and only the JSON commits after it are applied.
-    The scans take their schema from the ``metaData`` action (physical
-    names in column-mapping mode 'name', parquet field ids in mode
-    'id'), so building the read runs no Spark job, and files that
-    predate a column read it as null."""
-    vs = delta_versions(path)
-    ckpts = checkpoint_versions(path)
-    if not vs and not ckpts:
-        raise InvalidArgument(f"no Delta log under {path!r}")
-    latest = max(vs[-1] if vs else -1, ckpts[-1] if ckpts else -1)
-    v = latest if version is None else int(version)
-    if v < 0 or v > latest:
-        raise InvalidArgument(
-            f"Delta version {v} not found at {path!r} (have up to {latest})"
-        )
-    json_set = set(vs)
-    if all(i in json_set for i in range(v + 1)):
-        adds, meta, protocol = _replay(path, v)
-    else:
-        usable = [
-            c
-            for c in ckpts
-            if c <= v and all(i in json_set for i in range(c + 1, v + 1))
-        ]
-        if not usable:
-            raise InvalidArgument(
-                f"Delta version {v} at {path!r} is not reachable: the log is "
-                "not contiguous from version 0 and no parquet checkpoint "
-                "covers the gap (history cleaned up past this version)"
-            )
-        c = max(usable)
-        adds, meta, protocol = _replay(
-            path, v, start=c + 1, seed=_load_checkpoint(path, c)
-        )
-    mrv = int(protocol.get("minReaderVersion", 1))
-    features = set(protocol.get("readerFeatures") or [])
-    cm_mode = (meta.get("configuration") or {}).get("delta.columnMapping.mode")
-    supported = mrv == 1 or mrv == 2 or (
-        mrv == 3 and features <= {"deletionVectors", "columnMapping"}
-    )
-    if not supported:
-        raise InvalidArgument(
-            f"unsupported Delta reader protocol {protocol}: this jar-free "
-            "reader supports minReaderVersion 1, 2 (column mapping mode "
-            "'name'), or 3 with the deletionVectors/columnMapping features "
-            "only (no v2 checkpoints / timestampNtz)"
-        )
-    if cm_mode not in (None, "none", "name", "id"):
-        raise InvalidArgument(
-            f"unknown delta.columnMapping.mode {cm_mode!r}"
-        )
+    tables lakelite writes AND on tables written elsewhere by delta-rs /
+    Delta Spark, with reader protocol 1-3.  When older JSON commits
+    have been cleaned up, the newest parquet CHECKPOINT at or below the
+    requested version seeds the replay (the protocol's recovery path),
+    and only the JSON commits after it are applied.  The scans take
+    their schema from the ``metaData`` action (physical names in
+    column-mapping mode 'name', parquet field ids in mode 'id'), so
+    building the read runs no Spark job, and files that predate a
+    column read it as null."""
+    v, adds, meta, protocol, _txns, _info = _state(path, version)
+    cm_mode = _check_readable(protocol, meta)
     schema_json = json.loads(meta["schemaString"])
     schema = T.StructType.fromJson(schema_json)
     pcols = list(meta.get("partitionColumns") or [])

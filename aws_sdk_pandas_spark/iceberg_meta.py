@@ -581,10 +581,11 @@ def _write_pos_delete_parquet(
 
 def export_snapshot(path: str, manifest: dict[str, Any]) -> bool:
     """Write the Iceberg snapshot for one lakelite manifest (idempotent;
-    returns True when metadata was written).  Gaps are backfilled from
-    the lakelite manifests so the snapshot chain stays contiguous; if
-    history was vacuumed before the first export, the export is skipped
-    (a snapshot log with holes would misrepresent parentage)."""
+    returns True when metadata was written).  Missing earlier snapshots
+    are backfilled from the Delta log so the snapshot chain stays
+    contiguous; if that history was vacuumed before the first export,
+    the export is skipped (a snapshot log with holes would misrepresent
+    parentage)."""
     from aws_sdk_pandas_spark import lakehouse_shim as ls
 
     v = int(manifest["version"])
@@ -596,7 +597,8 @@ def export_snapshot(path: str, manifest: dict[str, Any]) -> bool:
         if not all(i in have for i in range(v)):
             return False
         for i in range(v):
-            export_snapshot(path, ls._read_manifest(path, i))
+            if not os.path.exists(_metadata_file(path, i)):
+                export_snapshot(path, ls._read_manifest(path, i))
 
     root = _local(path)
     d = _meta_dir(path)
@@ -1080,16 +1082,17 @@ def expire_snapshots(path: str, *, keep_last: int = 1) -> dict[str, int]:
 
 
 def export_table(path: str) -> int:
-    """Backfill Iceberg metadata for every lakelite version; returns the
-    number of snapshots written.  The ``convert_to_iceberg`` analog of
-    delta_log.export_table."""
+    """Backfill Iceberg metadata for every lakelite version not yet
+    exported; returns the number of snapshots written (the
+    ``convert_to_iceberg`` backend)."""
     from aws_sdk_pandas_spark import lakehouse_shim as ls
 
-    n = 0
-    for v in ls._versions(path):
-        if export_snapshot(path, ls._read_manifest(path, v)):
-            n += 1
-    return n
+    have = set(iceberg_versions(path))
+    return sum(
+        export_snapshot(path, ls._read_manifest(path, v))
+        for v in ls._versions(path)
+        if v not in have
+    )
 
 
 # -------------------------------------------------------------------- read

@@ -7,9 +7,10 @@ Delta/Iceberg need their runtime jars on the Spark classpath (delta-spark
 / iceberg-spark-runtime).  When the probe finds them, every entry point
 here is a plain native Spark write/read.  When they are absent (as in
 this container), the entry points FALL BACK to ``lakehouse_shim`` — an
-in-repo versioned parquet+manifest format with file-level copy-on-write
-— so append/overwrite/time-travel/MERGE/DELETE semantics are executable
-and tested rather than a classpath-probe error branch.  Pass
+in-repo versioned parquet table format whose only commit log is a Delta
+``_delta_log/``, with file-level copy-on-write — so append/overwrite/
+time-travel/MERGE/DELETE semantics are executable and tested rather
+than a classpath-probe error branch.  Pass
 ``require_native=True`` (or set ``lakehouse.ALLOW_SHIM = False``) to get
 the old raise-if-no-jar behavior.
 """
@@ -121,18 +122,13 @@ def read_deltalake(
 ) -> DataFrame:
     """reference: s3/_read_deltalake.py:38 — ``version`` = time travel.
 
-    Without the delta jar, a ``_delta_log/`` on disk is preferred (the
-    jar-free replay reader handles tables written HERE by the lakelite
-    exporter AND tables written elsewhere by delta-rs / Delta Spark);
-    lakelite manifests are the fallback for pre-export tables."""
+    Without the delta jar, the jar-free replay reader reads the
+    ``_delta_log/`` — of tables lakelite wrote here AND of tables
+    written elsewhere by delta-rs / Delta Spark."""
     if not _use_native(spark, "delta", require_native):
-        from aws_sdk_pandas_spark import delta_log, lakehouse_shim
+        from aws_sdk_pandas_spark import delta_log
 
-        if delta_log.has_delta_log(path):
-            return delta_log.read_delta_log(
-                spark, path, version=version, columns=columns
-            )
-        return lakehouse_shim.read(spark, path, version=version, columns=columns)
+        return delta_log.read_delta_log(spark, path, version=version, columns=columns)
     reader = spark.read.format("delta")
     if version is not None:
         reader = reader.option("versionAsOf", str(version))
@@ -140,30 +136,18 @@ def read_deltalake(
     return df.select(*columns) if columns else df
 
 
-def convert_to_delta(path: str) -> int:
-    """Backfill a protocol-valid Delta transaction log for an existing
-    lakelite table (tables written from this round on carry one
-    automatically) — the ``deltalake.convert_to_deltalake`` analog,
-    jar-free.  Returns the number of commit files written.  After this,
-    the table is readable by delta-rs / Delta Spark AND by
-    :func:`read_deltalake`'s log-replay path."""
-    from aws_sdk_pandas_spark import delta_log
-
-    return delta_log.export_table(path)
-
-
 def convert_to_iceberg(path: str) -> int:
     """Backfill spec-valid Iceberg v2 metadata (metadata.json + Avro
     manifests, jar-free) for an existing lakelite table — the
-    ``add_files``/migrate analog of :func:`convert_to_delta`.  Returns
+    ``add_files``/migrate analog.  Returns
     the number of snapshots written.  After this, every subsequent
     lakelite commit keeps the Iceberg metadata current (sticky sidecar)
     and :func:`read_iceberg` reads through it.
 
-    There is deliberately no ``convert_FROM_iceberg`` adoption
-    counterpart to :func:`delta_log.convert_from_delta`: foreign Delta
-    tables are path-addressed (continuing their ``_delta_log`` chain in
-    place is the correct contract, and this repo does), but foreign
+    There is deliberately no ``convert_FROM_iceberg`` counterpart to
+    lakelite's in-place writes of foreign Delta tables: those are
+    path-addressed (continuing their ``_delta_log`` chain in place is
+    the correct contract, and this repo does), but foreign
     Iceberg tables are CATALOG-managed — their current-metadata pointer
     lives in the catalog, not the directory, so directory-level
     adoption either orphans the catalog's view or silently races it.
@@ -268,7 +252,8 @@ def read_iceberg(
     manifest reader — tables written here carry it, and tables written
     elsewhere with v1/v2 data scans work too); ``snapshot_id`` accepts a
     real Iceberg snapshot-id or, back-compat, a small lakelite version
-    index.  Lakelite manifests are the fallback for pre-export tables."""
+    index.  A lakelite table without Iceberg metadata reads through its
+    Delta log."""
     if not _use_native(spark, "iceberg", require_native):
         from aws_sdk_pandas_spark import iceberg_meta, lakehouse_shim
 

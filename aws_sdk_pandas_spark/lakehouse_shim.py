@@ -1,4 +1,4 @@
-"""Lakelite: an in-repo versioned parquet table format (manifest log +
+"""Lakelite: an in-repo versioned parquet table format (Delta commit log +
 file-level copy-on-write) that gives the lakehouse entry points
 (`to_deltalake`/`read_deltalake`/`to_iceberg`/`read_iceberg`/MERGE/
 DELETE, reference: awswrangler/s3/_write_deltalake.py:51,
@@ -10,17 +10,23 @@ code paths exist only as classpath-probe error branches.
 Design (the same shape as the real formats, scaled down to a shim):
 
 - A table is a directory: immutable data files under ``data/<commit>/``
-  plus a JSON manifest log under ``_lakelite/v{N}.json``.  Each manifest
-  is the COMPLETE file list of that snapshot (Iceberg-style snapshot
-  manifests rather than Delta-style action deltas — replay-free reads).
-- Commits are atomic: data files land first, then the manifest is
-  written to a temp name and ``os.rename``d into place.  A crash between
-  the two leaves orphan data files (harmless, vacuum-able), never a
-  corrupt table — the same guarantee the Delta log protocol gives.
+  plus a Delta transaction log under ``_delta_log/`` — the table's only
+  commit log (``delta_log``), so every lakelite table is a Delta table
+  and every Delta table another engine wrote is a lakelite table.
+  Each public call replays the log ONCE into an in-memory manifest
+  (schema, partition columns, the live files with their stats and
+  deletion vectors, stats columns, txn stamps) and passes it down.
+- Commits are atomic: data files land first, then ONE Delta commit file
+  for the next version is created exclusively (``os.link``).  A crash
+  between the two leaves orphan data files (harmless, vacuum-able),
+  never a corrupt table; a writer that loses the version to another
+  rebases or raises.  The Delta checkpoint (every 10th version) and the
+  optional Iceberg export run after the commit, and a failure of either
+  is raised with a note naming the version that did commit.
 - MERGE / DELETE are file-level copy-on-write: a semi-join of the
   snapshot's hidden ``_metadata.file_path`` column against the source
   keys finds the files that contain matching rows; ONLY those files are
-  rewritten, every other file is carried into the new manifest by
+  rewritten, every other file is carried into the new snapshot by
   reference.  At 100 TB this is the property that matters — an upsert
   touching 0.1% of keys rewrites ~0.1% of the data, exactly like Delta
   CoW.  The touched-file list is collected on the driver (bounded by
@@ -35,11 +41,12 @@ Design (the same shape as the real formats, scaled down to a shim):
   one file's deleted-row list and the driver never holds row indexes.
 - ``merge_condition='ignore'`` is an insert-only fast path: unmatched
   source rows become a new commit, NO existing file is read or written.
-- Time travel = read an older manifest.  ``overwrite_partitions`` drops
-  manifest entries whose partition values match the incoming frame's
-  (dynamic partition overwrite).  ``compact`` rewrites the snapshot as
-  one commit (the OPTIMIZE analog) and ``vacuum`` deletes data dirs no
-  kept manifest references.
+- Time travel = replay the log to an older version.
+  ``overwrite_partitions`` drops the files whose partition values match
+  the incoming frame's (dynamic partition overwrite).  ``compact``
+  rewrites the snapshot as one commit (the OPTIMIZE analog) and
+  ``vacuum`` truncates the log and deletes the data no kept version
+  references.
 
 Honest limits vs the real formats (documented, deliberate): APPENDS,
 MERGEs, and DELETEs all get optimistic-concurrency retry (version
@@ -63,6 +70,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import urllib.parse
 import uuid
 from typing import Any, Callable
@@ -71,14 +79,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_sdk_pandas_spark import delta_log as dl
+from aws_sdk_pandas_spark import iceberg_meta
 from aws_sdk_pandas_spark.exceptions import InvalidArgument
 
-_LOG_DIR = "_lakelite"
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _local(path: str) -> str:
-    """Strip a file: scheme so os-level manifest IO and Spark's
+    """Strip a file: scheme so os-level file IO and Spark's
     ``_metadata.file_path`` URIs compare equal."""
     if path.startswith("file:"):
         return urllib.parse.unquote(urllib.parse.urlparse(path).path)
@@ -91,129 +100,76 @@ def _normalize_uri(uri: str) -> str:
     return os.path.abspath(_local(uri))
 
 
-def _log_dir(path: str) -> str:
-    return os.path.join(_local(path), _LOG_DIR)
+# A name-column-mapped table runs on PHYSICAL column names inside
+# lakelite (schema, partition dirs, stats, data files), and the public
+# entry points translate with the snapshot's ``log2phys`` map.
 
 
-_CMAP_FILE = "column_mapping.json"
-
-
-def _cmap_load(path: str) -> dict[str, Any] | None:
-    """Column-mapping sidecar written by ``convert_from_delta`` when
-    adopting a name-mapped foreign Delta table.  Inside lakelite the
-    table runs entirely on PHYSICAL column names (manifest schema,
-    partition dirs, stats, data files — so every internal path is
-    untouched); the sidecar carries the logical<->physical map, the
-    original logical schemaString (with its columnMapping metadata),
-    partitionColumns, configuration and protocol for the Delta-log
-    exporter, and the public entry points translate at the boundary."""
-    f = os.path.join(_log_dir(path), _CMAP_FILE)
-    if not os.path.exists(f):
-        return None
-    with open(f) as fh:
-        return json.load(fh)
-
-
-def _cmap_to_physical_df(df: DataFrame, cmap: dict[str, Any]) -> DataFrame:
+def _to_physical(df: DataFrame, log2phys: dict[str, str]) -> DataFrame:
     """Rename any LOGICAL column present in the frame to its physical
-    name (unambiguous: physical names are col-<uuid>, never colliding
-    with logical ones; columns already physical pass through)."""
-    for logical, physical in cmap["log2phys"].items():
+    name (columns already physical pass through)."""
+    for logical, physical in log2phys.items():
         if logical in df.columns:
             df = df.withColumnRenamed(logical, physical)
     return df
 
 
-def _cmap_to_logical_df(df: DataFrame, cmap: dict[str, Any]) -> DataFrame:
-    for logical, physical in cmap["log2phys"].items():
+def _to_logical(df: DataFrame, log2phys: dict[str, str]) -> DataFrame:
+    for logical, physical in log2phys.items():
         if physical in df.columns:
             df = df.withColumnRenamed(physical, logical)
     return df
 
 
-def _cmap_names(names: list[str] | None, cmap: dict[str, Any]) -> list[str] | None:
-    if names is None:
-        return None
-    m = cmap["log2phys"]
-    return [m.get(n, n) for n in names]
+def _phys_names(names: list[str] | None, log2phys: dict[str, str]) -> list[str] | None:
+    return None if names is None else [log2phys.get(n, n) for n in names]
 
 
 def table_exists(path: str) -> bool:
-    d = _log_dir(path)
-    return os.path.isdir(d) and any(
-        f.startswith("v") and f.endswith(".json") for f in os.listdir(d)
-    )
+    return dl.has_delta_log(path)
 
 
 def _versions(path: str) -> list[int]:
-    d = _log_dir(path)
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for f in os.listdir(d):
-        if f.startswith("v") and f.endswith(".json"):
-            out.append(int(f[1:-5]))
-    return sorted(out)
+    return dl.readable_versions(path)
 
 
 def latest_version(path: str) -> int:
     vs = _versions(path)
     if not vs:
-        raise InvalidArgument(f"not a lakelite table: no manifest log under {path!r}")
+        raise InvalidArgument(f"not a lakelite table: no Delta log under {path!r}")
     return vs[-1]
 
 
-def _read_manifest(path: str, version: int) -> dict[str, Any]:
-    with open(os.path.join(_log_dir(path), f"v{version:08d}.json")) as fh:
-        return json.load(fh)
+def _read_manifest(path: str, version: int | None = None) -> dict[str, Any]:
+    """The snapshot at ``version`` (default latest), replayed from the
+    Delta log (:func:`delta_log.snapshot`)."""
+    return dl.snapshot(path, version)
+
+
+def _writable(man: dict[str, Any]) -> dict[str, Any]:
+    """``man`` after the refusals every write into an existing table
+    runs before it writes a data file (:func:`delta_log.check_writable`)."""
+    dl.check_writable(man)
+    return man
 
 
 def _commit_manifest(path: str, manifest: dict[str, Any]) -> None:
-    """Atomic commit: temp write + rename.  Data files referenced by the
-    manifest are already durable; visibility flips with the rename."""
-    d = _log_dir(path)
-    os.makedirs(d, exist_ok=True)
-    version = manifest["version"]
-    tmp = os.path.join(d, f".v{version:08d}.{uuid.uuid4().hex[:8]}.tmp")
-    final = os.path.join(d, f"v{version:08d}.json")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    try:
-        # hardlink is atomic create-exclusive: two racing writers cannot
-        # both win the version — os.rename would silently clobber the
-        # first winner's manifest (exists() + rename is a TOCTOU hole)
-        os.link(tmp, final)
-    except FileExistsError:
-        os.unlink(tmp)
-        raise InvalidArgument(
-            f"concurrent write detected: version {version} already committed at {path!r}"
-        )
-    os.unlink(tmp)
-    # sidecar Delta-protocol log (plain JSON — no jar needed), so the
-    # table is readable by delta-rs / Delta Spark; best-effort because
-    # the lakelite commit above is already durable and a sidecar failure
-    # must not make the caller believe the commit itself failed
-    try:
-        from aws_sdk_pandas_spark import delta_log
-
-        delta_log.export_commit(path, manifest)
-    except Exception as exc:  # pragma: no cover - defensive
-        import warnings
-
-        warnings.warn(f"lakelite Delta-log export skipped: {exc}", stacklevel=2)
-    # sidecar Iceberg metadata is STICKY rather than default: tables
-    # created via to_iceberg / convert_to_iceberg carry it, and every
-    # later commit keeps it current; plain lakelite/Delta tables don't
-    # pay the extra metadata writes
-    try:
-        from aws_sdk_pandas_spark import iceberg_meta
-
-        if iceberg_meta.has_iceberg_meta(path):
+    """Commit ``manifest`` as the next Delta version (built on
+    ``manifest["base"]``); raises ``concurrent write detected`` when
+    another writer holds that version.  A table created through
+    to_iceberg / convert_to_iceberg also exports every commit as an
+    Iceberg snapshot; that export runs after the commit, and its failure
+    is raised with a note (the next commit backfills the snapshot)."""
+    dl.commit(path, manifest)
+    if iceberg_meta.has_iceberg_meta(path):
+        try:
             iceberg_meta.export_snapshot(path, manifest)
-    except Exception as exc:  # pragma: no cover - defensive
-        import warnings
-
-        warnings.warn(f"lakelite Iceberg export skipped: {exc}", stacklevel=2)
+        except Exception as exc:
+            exc.add_note(
+                f"Delta version {manifest['version']} is committed at {path!r}; "
+                "only its Iceberg export failed"
+            )
+            raise
 
 
 def _parse_partition_values(rel_file: str, commit_rel: str) -> dict[str, str | None]:
@@ -451,8 +407,7 @@ def _entry_may_match(entry: dict[str, Any], predicates) -> bool:
 def files_scanned(path: str, predicates, *, version: int | None = None) -> tuple[int, int]:
     """(files kept after stat pruning, total files) for a predicate list
     — the data-skipping effectiveness probe tests assert on."""
-    v = latest_version(path) if version is None else version
-    man = _read_manifest(path, v)
+    man = _read_manifest(path, version)
     kept = sum(1 for e in man["files"] if _entry_may_match(e, predicates))
     return kept, len(man["files"])
 
@@ -463,32 +418,13 @@ def _carry_txns(
     *,
     path: str | None = None,
 ) -> dict[str, int]:
-    """Cumulative per-app transaction high-water marks, carried forward
-    into EVERY commit (merge/delete/compact included) so the documented
-    maintenance ops — compact + vacuum of old manifests — can never
-    erase the idempotence state a replayed streaming batch depends on.
-
-    Migration: a pre-cumulative-map table stored one ``txn`` stamp PER
-    MANIFEST; the first commit that builds the map must fold in the
-    stamps of EVERY older manifest (pass ``path``), not just the
-    previous one, or older apps' high-water marks silently reset."""
-    if prev is not None and "txns" in prev:
-        txns: dict[str, int] = dict(prev["txns"])
-        if prev.get("txn"):
-            app0, b0 = str(prev["txn"][0]), int(prev["txn"][1])
-            txns[app0] = max(txns.get(app0, -1), b0)
-    elif prev is not None and path is not None:
-        txns = {}
-        for v in _versions(path):
-            legacy = _read_manifest(path, v).get("txn")
-            if legacy:
-                app0, b0 = str(legacy[0]), int(legacy[1])
-                txns[app0] = max(txns.get(app0, -1), b0)
-    elif prev is not None and prev.get("txn"):
-        app0, b0 = str(prev["txn"][0]), int(prev["txn"][1])
-        txns = {app0: b0}
-    else:
-        txns = {}
+    """Per-app transaction high-water marks after a commit stamped
+    ``txn`` on top of snapshot ``prev``.  The snapshot's map is the
+    log's ``txn`` actions (checkpoints carry them), so merge, delete,
+    compact and vacuum can never erase the idempotence state a replayed
+    streaming batch depends on.  ``path`` is unused: the snapshot holds
+    the whole map."""
+    txns: dict[str, int] = dict(prev["txns"]) if prev is not None else {}
     if txn is not None:
         app, batch = str(txn[0]), int(txn[1])
         txns[app] = max(txns.get(app, -1), batch)
@@ -498,25 +434,10 @@ def _carry_txns(
 def txn_version(path: str, app_id: str) -> int:
     """Highest transaction/batch id committed for ``app_id`` (-1 when
     none) — the Delta ``txn`` action's idempotent-sink protocol: a
-    streaming writer stamps each commit and skips replays.  Reads the
-    latest manifest's cumulative map; legacy per-commit stamps are
-    folded in by scanning only when the map is absent."""
-    vs = _versions(path)
-    if not vs:
+    streaming writer stamps each commit and skips replays."""
+    if not table_exists(path):
         return -1
-    latest = _read_manifest(path, vs[-1])
-    if "txns" in latest:
-        best = int(latest["txns"].get(app_id, -1))
-        txn = latest.get("txn")
-        if txn and txn[0] == app_id:
-            best = max(best, int(txn[1]))
-        return best
-    best = -1
-    for v in vs:
-        txn = _read_manifest(path, v).get("txn")
-        if txn and txn[0] == app_id:
-            best = max(best, int(txn[1]))
-    return best
+    return int(_read_manifest(path)["txns"].get(app_id, -1))
 
 
 def write(
@@ -536,18 +457,20 @@ def write(
     (None, 'merge', 'overwrite') applies Delta's schema-enforcement
     contract: a column-set change is rejected unless merge/overwrite.
 
-    ``stats_cols`` records per-file min/max in the manifest (Delta-style
-    data skipping); once set it is REMEMBERED in the manifest and every
-    later commit (append/merge/delete/compact) keeps collecting stats
-    for those columns automatically.
+    ``stats_cols`` records per-file min/max in the log (Delta-style
+    data skipping); once set it is REMEMBERED as the table property
+    ``delta.dataSkippingStatsColumns`` and every later commit
+    (append/merge/delete/compact) keeps collecting stats for those
+    columns automatically.
 
     ``txn=(app_id, batch_id)`` makes the write IDEMPOTENT (Delta's txn
     action): if a commit with the same app and an equal-or-higher batch
     id already exists, the write is skipped and False is returned — the
     contract that makes a replayed foreachBatch micro-batch safe.
     Returns True when a commit happened."""
-    exists = table_exists(path)
-    if txn is not None and exists and txn_version(path, txn[0]) >= int(txn[1]):
+    prev = _writable(_read_manifest(path)) if table_exists(path) else None
+    exists = prev is not None
+    if txn is not None and exists and prev["txns"].get(str(txn[0]), -1) >= int(txn[1]):
         return False
     if mode in ("error", "errorifexists") and exists:
         raise InvalidArgument(f"lakelite table already exists at {path!r}")
@@ -556,23 +479,23 @@ def write(
     if mode in ("error", "errorifexists", "ignore"):
         mode = "append" if not exists else mode
 
-    cmap = _cmap_load(path) if exists else None
-    if cmap is not None:
-        df = _cmap_to_physical_df(df, cmap)
-        partition_cols = _cmap_names(partition_cols, cmap)
-        stats_cols = _cmap_names(stats_cols, cmap)
-
-    prev = _read_manifest(path, latest_version(path)) if exists else None
-    if cmap is not None and prev is not None:
+    log2phys = prev["log2phys"] if exists else {}
+    if log2phys:
+        df = _to_physical(df, log2phys)
+        partition_cols = _phys_names(partition_cols, log2phys)
+        stats_cols = _phys_names(stats_cols, log2phys)
         phys_cols = {f["name"] for f in json.loads(prev["schema"])["fields"]}
         if set(df.columns) != phys_cols:
             raise InvalidArgument(
                 "schema change on a column-mapped table is not supported: "
                 "new columns need fresh physical names and a maxColumnId "
-                "bump in the foreign metaData "
+                "bump in the table's metaData "
                 f"(existing physical {sorted(phys_cols)} vs incoming "
                 f"{sorted(df.columns)})"
             )
+        # nor is a type change, even by an overwrite: the log keeps the
+        # table's one logical schemaString
+        df = _conform(df, prev["schema"])
     if prev is not None and partition_cols is None:
         partition_cols = prev["partition_cols"]
 
@@ -595,11 +518,11 @@ def write(
         _collect_stats(df.sparkSession, _local(path), entries, effective_stats, written)
 
     # commit with optimistic-concurrency retry: the data files above are
-    # immutable and already durable, so a manifest-version collision just
-    # means another writer landed first — an APPEND commutes with any
-    # winner (its files union in on top of the NEW snapshot, exactly
-    # Delta's append rebase), so re-read the log and retry; every other
-    # mode is a genuine conflict and raises
+    # immutable and already durable, so a version collision just means
+    # another writer landed first — an APPEND commutes with any winner
+    # (its files union in on top of the NEW snapshot, exactly Delta's
+    # append rebase), so replay the log and retry; every other mode is a
+    # genuine conflict and raises
     for _attempt in range(6):
         if mode == "overwrite" or prev is None:
             files = entries
@@ -636,20 +559,17 @@ def write(
             "partition_cols": partition_cols or [],
             "files": files,
             "stats_cols": effective_stats,
-            "txns": _carry_txns(prev, txn, path=path),
+            "txns": _carry_txns(prev, txn),
+            "base": prev,
         }
-        if txn is not None:
-            manifest["txn"] = [str(txn[0]), int(txn[1])]
         try:
             _commit_manifest(path, manifest)
             return True
         except InvalidArgument as exc:
             if "concurrent write detected" not in str(exc) or mode != "append":
                 raise
-            prev = _read_manifest(path, latest_version(path))
-            if txn is not None and int(
-                _carry_txns(prev, None, path=path).get(str(txn[0]), -1)
-            ) >= int(txn[1]):
+            prev = _writable(_read_manifest(path))
+            if txn is not None and prev["txns"].get(str(txn[0]), -1) >= int(txn[1]):
                 return False  # the winner already committed this batch
             # re-validate against the WINNER's snapshot before rebasing:
             # schema compatibility and remembered stats_cols may both
@@ -696,36 +616,27 @@ def read(
     partition_filter: Callable[[dict[str, str | None]], bool] | None = None,
     predicates: list[tuple[str, str, Any]] | None = None,
     with_file_path: bool = False,
-    _raw_names: bool = False,
 ) -> DataFrame:
-    """Snapshot (or time-travel) read.  ``partition_filter`` prunes
-    manifest entries on the DRIVER before any scan is planned — the log
+    """Snapshot (or time-travel) read.  ``partition_filter`` prunes the
+    snapshot's files on the DRIVER before any scan is planned — the log
     replaces a storage LIST + footer reads, exactly the benefit the real
     formats buy.  One parquet scan per surviving commit dir (partition
     columns recovered via basePath discovery), unioned by name.  Every
-    scan takes its schema from the manifest, so building the read runs
-    no Spark job, and files that predate a column read it as null.
+    scan takes its schema from the log, so building the read runs no
+    Spark job, and files that predate a column read it as null.
 
     ``predicates`` is a list of ``(col, op, value)`` with op in
-    ``< <= > >= =``: files whose manifest min/max stats PROVE no match
-    are dropped from the plan (Delta data skipping), and the predicates
-    are also applied as a residual row filter, so results are exact even
+    ``< <= > >= =``: files whose min/max stats PROVE no match are
+    dropped from the plan (Delta data skipping), and the predicates are
+    also applied as a residual row filter, so results are exact even
     for files without stats."""
-    v = latest_version(path) if version is None else version
-    if version is not None and version not in _versions(path):
-        raise InvalidArgument(
-            f"version {version} not found at {path!r} (have {_versions(path)})"
-        )
-    man = _read_manifest(path, v)
-    root = _local(path)
-    entries = man["files"]
-    # adopted name-mapped tables run on PHYSICAL names internally; the
-    # public read speaks logical — translate inputs here, outputs at
-    # the end (_raw_names=True is the internal callers' view)
-    cmap = None if _raw_names else _cmap_load(path)
-    if cmap is not None:
-        m = cmap["log2phys"]
-        columns = _cmap_names(columns, cmap)
+    man = _read_manifest(path, version)
+    m = man["log2phys"]
+    if m:
+        # a name-mapped table runs on PHYSICAL names internally; the
+        # public read speaks logical — translate inputs here, outputs at
+        # the end
+        columns = _phys_names(columns, m)
         if predicates:
             predicates = [(m.get(c, c), op, val) for c, op, val in predicates]
         if partition_filter is not None:
@@ -734,21 +645,43 @@ def read(
             partition_filter = lambda pv: user_filter(  # noqa: E731
                 {phys2log.get(k, k): v2 for k, v2 in pv.items()}
             )
+    df = _scan_snapshot(
+        spark, path, man, columns=columns, partition_filter=partition_filter,
+        predicates=predicates, with_file_path=with_file_path,
+    )
+    return _to_logical(df, m)
+
+
+def _scan_snapshot(
+    spark: SparkSession,
+    path: str,
+    man: dict[str, Any],
+    *,
+    columns: list[str] | None = None,
+    partition_filter: Callable[[dict[str, str | None]], bool] | None = None,
+    predicates: list[tuple[str, str, Any]] | None = None,
+    with_file_path: bool = False,
+) -> DataFrame:
+    """The read plan of snapshot ``man`` in its PHYSICAL column names
+    (:func:`read`'s plan; the write paths call it with the snapshot
+    they already replayed)."""
+    root = _local(path)
+    entries = man["files"]
     if partition_filter is not None:
         entries = [e for e in entries if partition_filter(e["partition_values"])]
     if predicates:
         for _c, op, _v2 in predicates:
             if op not in _SKIP_OPS:
                 raise InvalidArgument(f"unsupported predicate op {op!r}")
-        entries = [e for e in entries if _entry_may_match(e, predicates)]
+    # an empty file (numRecords 0 in the log) never contributes a row
+    entries = [e for e in entries if _entry_may_match(e, predicates or [])]
 
     schema = _table_schema(man)
     if not entries:
         if with_file_path:
             schema = schema.add("__lakelite_file", T.StringType())
         df = _driver_frame(spark, [], schema)
-        df = df.select(*columns) if columns else df
-        return _cmap_to_logical_df(df, cmap) if cmap else df
+        return df.select(*columns) if columns else df
 
     # deletion vectors (MoR deletes): the driver ships O(files) DV
     # descriptors; executors decode each file's bitmap into (file,
@@ -777,12 +710,11 @@ def read(
                 {"<": col < val, "<=": col <= val, ">": col > val,
                  ">=": col >= val, "=": col == val}[op]
             )
-    df = df.select(*columns) if columns else df
-    return _cmap_to_logical_df(df, cmap) if cmap else df
+    return df.select(*columns) if columns else df
 
 
 def history(path: str) -> list[dict[str, Any]]:
-    """The DESCRIBE HISTORY analog: one row per committed version."""
+    """The DESCRIBE HISTORY analog: one row per readable version."""
     out = []
     for v in _versions(path):
         m = _read_manifest(path, v)
@@ -806,14 +738,20 @@ def _key_cond(left: DataFrame, right: DataFrame, keys: list[str], match_nulls: b
 
 
 def _touched_files(
-    spark: SparkSession, path: str, source: DataFrame, keys: list[str], match_nulls: bool
+    spark: SparkSession,
+    path: str,
+    source: DataFrame,
+    keys: list[str],
+    match_nulls: bool,
+    man: dict[str, Any] | None = None,
 ) -> tuple[list[dict[str, Any]], list[dict[str, Any]], DataFrame, dict[str, str]]:
-    """Split the current manifest into (touched, untouched) by semi-joining
-    the snapshot's _metadata.file_path against the source keys; return the
-    rewrite input (rows of touched files only)."""
-    man = _read_manifest(path, latest_version(path))
+    """Split snapshot ``man`` (default: the latest) into (touched,
+    untouched) by semi-joining its _metadata.file_path against the
+    source keys; return the rewrite input (rows of touched files only)."""
+    if man is None:
+        man = _read_manifest(path)
     root = _local(path)
-    snap = read(spark, path, with_file_path=True, _raw_names=True)
+    snap = _scan_snapshot(spark, path, man, with_file_path=True)
     src_keys = source.select(*keys).distinct()
     hit = (
         snap.join(F.broadcast(src_keys), _key_cond(snap, src_keys, keys, match_nulls), "leftsemi")
@@ -1045,7 +983,7 @@ def _commit_or_rebase(
     The winner's added-file key probe is bounded by the files the
     winner ADDED (not table size), read once and semi-joined against
     the source keys."""
-    man = manifest
+    man = dict(manifest, base=base_man)
     base = base_man
     for _attempt in range(6):
         try:
@@ -1054,7 +992,7 @@ def _commit_or_rebase(
         except InvalidArgument as exc:
             if "concurrent write detected" not in str(exc):
                 raise
-            winner = _read_manifest(path, latest_version(path))
+            winner = _writable(_read_manifest(path))
             if (
                 winner["schema"] != base["schema"]
                 or winner["partition_cols"] != base["partition_cols"]
@@ -1108,13 +1046,14 @@ def _commit_or_rebase(
             missing_stats = [c for c in win_stats if c not in (man.get("stats_cols") or [])]
             if missing_stats and new_entries:
                 _collect_stats(spark, _local(path), new_entries, win_stats, winner)
-            man = dict(man)
-            man["version"] = winner["version"] + 1
-            man["files"] = [
-                e for e in winner["files"] if e["path"] not in touched_paths
-            ] + new_entries
-            man["stats_cols"] = sorted(set(man.get("stats_cols") or []) | set(win_stats))
-            man["txns"] = _carry_txns(winner, None, path=path)
+            man = dict(
+                man,
+                version=winner["version"] + 1,
+                base=winner,
+                files=[e for e in winner["files"] if e["path"] not in touched_paths]
+                + new_entries,
+                stats_cols=sorted(set(man.get("stats_cols") or []) | set(win_stats)),
+            )
             base = winner
     raise InvalidArgument(
         f"{mode_desc} at {path!r} lost 6 consecutive commit races; giving up"
@@ -1154,30 +1093,30 @@ def merge(
 
     from aws_sdk_pandas_spark.operators.merge import _precombine_latest
 
-    cmap = _cmap_load(path) if table_exists(path) else None
-    if cmap is not None:
-        # adopted name-mapped table: internals run on physical names
-        source = _cmap_to_physical_df(source, cmap)
-        keys = _cmap_names(keys, cmap)
+    man = _writable(_read_manifest(path)) if table_exists(path) else None
+    m = man["log2phys"] if man is not None else {}
+    if m:
+        # name-mapped table: internals run on physical names
+        source = _to_physical(source, m)
+        keys = _phys_names(keys, m)
         if precombine_key is not None:
-            precombine_key = cmap["log2phys"].get(precombine_key, precombine_key)
+            precombine_key = m.get(precombine_key, precombine_key)
     if precombine_key is not None:
         # applied BEFORE any write path — a first merge into a fresh
         # table must not be born with duplicate keys the same call would
         # have collapsed against an existing table
         source = _precombine_latest(source, keys, precombine_key)
-    if not table_exists(path):
+    if man is None:
         write(source, path, mode="overwrite")
         return {"files_rewritten": 0, "files_kept": 0}
 
-    man = _read_manifest(path, latest_version(path))
     pcols = man["partition_cols"]
     # every write path below (insert-only, CoW, MoR) lands source rows
     source = _conform(source, man["schema"])
 
     if merge_condition == "ignore":
         # insert-only fast path: no existing file read or rewritten
-        snap_keys = read(spark, path, columns=keys, _raw_names=True).distinct()
+        snap_keys = _scan_snapshot(spark, path, man, columns=keys).distinct()
         inserts = source.join(
             snap_keys, _key_cond(source, snap_keys, keys, match_nulls), "left_anti"
         )
@@ -1194,8 +1133,7 @@ def merge(
                 "schema": man["schema"],
                 "partition_cols": pcols,
                 "files": man["files"] + entries,
-                "stats_cols": man.get("stats_cols") or [],
-                "txns": _carry_txns(man, None, path=path),
+                "stats_cols": man["stats_cols"],
             },
             man,
             entries,
@@ -1212,7 +1150,9 @@ def merge(
             spark, source, path, keys, man, match_nulls, precombine_key
         )
 
-    touched, untouched, rewrite_input, _raw = _touched_files(spark, path, source, keys, match_nulls)
+    touched, untouched, rewrite_input, _raw = _touched_files(
+        spark, path, source, keys, match_nulls, man
+    )
     target_cols = [f["name"] for f in json.loads(man["schema"])["fields"]]
     src = source.select(*target_cols)
     if precombine_key is None:
@@ -1248,8 +1188,7 @@ def merge(
             "schema": man["schema"],
             "partition_cols": pcols,
             "files": untouched + entries,
-            "stats_cols": man.get("stats_cols") or [],
-            "txns": _carry_txns(man, None, path=path),
+            "stats_cols": man["stats_cols"],
         },
         man,
         entries,
@@ -1278,22 +1217,22 @@ def delete(
     ``use_deletion_vectors=True`` switches to MERGE-ON-READ: touched
     files are NOT rewritten — each gets a Delta-protocol deletion
     vector (roaring bitmap of deleted row indexes, written in Delta's
-    on-disk DV layout) and survives by reference.  The sidecar Delta
-    log exports the DV descriptors with the reader-3/writer-7 protocol
+    on-disk DV layout) and survives by reference.  The Delta commit
+    carries the DV descriptors with the reader-3/writer-7 protocol
     upgrade, so delta-rs / Delta Spark read the delete; the sticky
     Iceberg sidecar exports the same rows as v2 positional-delete
     files.  Reads, CDF, and compaction apply DVs transparently
     (compaction materializes them).  Choose DVs when deletes are small
     relative to file sizes — O(deleted rows) metadata instead of
     O(touched bytes) rewrite."""
-    cmap = _cmap_load(path) if table_exists(path) else None
-    if cmap is not None:
-        source = _cmap_to_physical_df(source, cmap)
-        keys = _cmap_names(keys, cmap)
-    man = _read_manifest(path, latest_version(path))
+    man = _writable(_read_manifest(path))
+    source = _to_physical(source, man["log2phys"])
+    keys = _phys_names(keys, man["log2phys"])
     if use_deletion_vectors:
         return _delete_mor(spark, source, path, keys, man, match_nulls)
-    touched, untouched, rewrite_input, _raw = _touched_files(spark, path, source, keys, match_nulls)
+    touched, untouched, rewrite_input, _raw = _touched_files(
+        spark, path, source, keys, match_nulls, man
+    )
     src_keys = source.select(*keys).distinct()
     survivors = rewrite_input.join(
         F.broadcast(src_keys), _key_cond(rewrite_input, src_keys, keys, match_nulls), "left_anti"
@@ -1312,8 +1251,7 @@ def delete(
             "schema": man["schema"],
             "partition_cols": man["partition_cols"],
             "files": untouched + entries,
-            "stats_cols": man.get("stats_cols") or [],
-            "txns": _carry_txns(man, None, path=path),
+            "stats_cols": man["stats_cols"],
         },
         man,
         entries,
@@ -1352,7 +1290,7 @@ def _merge_mor(
     root = _local(path)
     pcols = man["partition_cols"]
     touched, untouched, _, raw_by_path = _touched_files(
-        spark, path, source, keys, match_nulls
+        spark, path, source, keys, match_nulls, man
     )
     target_cols = [f["name"] for f in json.loads(man["schema"])["fields"]]
     src = source.select(*target_cols)
@@ -1416,8 +1354,7 @@ def _merge_mor(
             "schema": man["schema"],
             "partition_cols": pcols,
             "files": untouched + kept_touched + dv_entries + new_entries,
-            "stats_cols": man.get("stats_cols") or [],
-            "txns": _carry_txns(man, None, path=path),
+            "stats_cols": man["stats_cols"],
         },
         man,
         # kept_touched rides along: on a rebase the touched paths are
@@ -1455,7 +1392,7 @@ def _delete_mor(
     the driver handles O(files) descriptors, never O(deleted rows)."""
     root = _local(path)
     touched, untouched, _rewrite, raw_by_path = _touched_files(
-        spark, path, source, keys, match_nulls
+        spark, path, source, keys, match_nulls, man
     )
     src_keys = source.select(*keys).distinct()
     new_entries: list[dict[str, Any]] = []
@@ -1487,8 +1424,7 @@ def _delete_mor(
             "schema": man["schema"],
             "partition_cols": man["partition_cols"],
             "files": untouched + kept_touched + new_entries,
-            "stats_cols": man.get("stats_cols") or [],
-            "txns": _carry_txns(man, None, path=path),
+            "stats_cols": man["stats_cols"],
         },
         man,
         # kept_touched rides along: on a rebase the touched paths are
@@ -1528,12 +1464,10 @@ def compact(
     EVERY listed dimension at once and ``predicates`` skipping prunes on
     any of them — a linear sort only ever skips on its leading column.
     Z-ordered compaction automatically records stats for those columns."""
-    man = _read_manifest(path, latest_version(path))
-    cmap = _cmap_load(path)
-    if cmap is not None and zorder_by:
-        zorder_by = _cmap_names(zorder_by, cmap)
-    df = read(spark, path, _raw_names=True)
-    stats_cols = list(man.get("stats_cols") or [])
+    man = _writable(_read_manifest(path))
+    zorder_by = _phys_names(zorder_by, man["log2phys"])
+    df = _scan_snapshot(spark, path, man)
+    stats_cols = list(man["stats_cols"])
     if zorder_by:
         from aws_sdk_pandas_spark.functions.zorder import zorder_key
 
@@ -1575,40 +1509,35 @@ def compact(
             "partition_cols": man["partition_cols"],
             "files": entries,
             "stats_cols": stats_cols,
-            "txns": _carry_txns(man, None, path=path),
+            "base": man,
         },
     )
 
 
 def vacuum(path: str, *, keep_versions: int = 1) -> list[str]:
-    """Delete data commit dirs referenced by NO kept manifest (the
-    VACUUM analog; also reclaims orphans from crashed writes).  Keeping
-    fewer versions truncates time travel, exactly as in Delta."""
-    from aws_sdk_pandas_spark import delta_log as _dl
-
-    vs = _versions(path)
-    kept = vs[-keep_versions:] if keep_versions > 0 else []
+    """Keep the newest ``keep_versions`` versions (the VACUUM analog):
+    truncate the Delta log to them (a checkpoint at the oldest kept
+    version, every commit and checkpoint below it deleted), then delete
+    every data commit dir and deletion-vector bin no kept version
+    references — which also reclaims orphans from crashed writes.  Time
+    travel before the oldest kept version ends, exactly as in Delta.
+    Returns the deleted data dirs and DV bins."""
     root = _local(path)
     referenced: set[str] = set()
     referenced_dv: set[str] = set()
-    for v in kept:
-        for e in _read_manifest(path, v)["files"]:
-            referenced.add(e["commit"])
-            if e.get("dv"):
-                p = _dl.dv_file_path(root, e["dv"])
-                if p:
-                    referenced_dv.add(os.path.abspath(p))
+    for add in dl.truncate(path, keep_versions):
+        e = dl._entry(add, [])
+        referenced.add(e["commit"])
+        if e.get("dv") and (p := dl.dv_file_path(root, e["dv"])):
+            referenced_dv.add(os.path.abspath(p))
     removed = []
     data_dir = os.path.join(root, "data")
     if os.path.isdir(data_dir):
         for commit in os.listdir(data_dir):
             rel = os.path.join("data", commit)
             if rel not in referenced:
-                import shutil
-
                 shutil.rmtree(os.path.join(root, rel))
                 removed.append(rel)
-    # deletion-vector bins referenced by no kept manifest
     dv_dir = os.path.join(root, "_dv")
     if os.path.isdir(dv_dir):
         for f in sorted(os.listdir(dv_dir)):
@@ -1616,9 +1545,6 @@ def vacuum(path: str, *, keep_versions: int = 1) -> list[str]:
             if fp not in referenced_dv:
                 os.remove(fp)
                 removed.append(os.path.join("_dv", f))
-    for v in vs:
-        if v not in kept:
-            os.remove(os.path.join(_log_dir(path), f"v{v:08d}.json"))
     return removed
 
 
@@ -1642,9 +1568,8 @@ def table_changes(
     output.  Deletes carry the pre-image values; inserts and postimages
     carry the new values.  NULL-safe key matching throughout (a NULL key
     is one identity, as in MERGE with ``<=>``)."""
-    v_to = latest_version(path) if to_version is None else to_version
     old = read(spark, path, version=from_version)
-    new = read(spark, path, version=v_to)
+    new = read(spark, path, version=to_version)
     # schema evolution: a column present in only one snapshot reads as a
     # typed NULL on the other side (its addition/removal then surfaces
     # as update pairs, which is the honest CDF of an evolved column)

@@ -148,8 +148,8 @@ def write_stream_lakelite(
 
     ``foreachBatch`` gives at-least-once by itself: a crash after the
     sink writes but before the checkpoint commits REPLAYS the batch.
-    Here every commit is stamped ``txn=(app_id, batch_id)`` in the
-    lakelite manifest and ``lakehouse_shim.write`` skips any batch id
+    Here every commit is stamped ``txn=(app_id, batch_id)`` (a Delta
+    ``txn`` action) and ``lakehouse_shim.write`` skips any batch id
     already committed for this app — so replays are no-ops and each
     micro-batch lands exactly once.  ``app_id`` defaults to a stable id
     derived from the checkpoint location (restarts of the same query

@@ -2,14 +2,15 @@
 streaming-source analog (``spark.readStream.format("delta")``), built
 on Spark 4's Python DataSource API so no jar is needed.
 
-Offsets are lakelite manifest VERSIONS: each micro-batch reads the
-files ADDED by the commits in ``(start_version, end_version]``, one
-input partition per data file, so a batch's parallelism equals its
-file count and a 1000-executor cluster fans the backlog out naturally.
-Rows are produced as Arrow RecordBatches read straight from the
-immutable commit parquet (column-pruned to the declared schema);
-hive-partition values are injected as constant Arrow columns from the
-manifest (they are not stored in the data files).
+Offsets are Delta log VERSIONS: each micro-batch reads the files ADDED
+by the commits in ``(start_version, end_version]`` — the ``add``
+actions of each commit file — one input partition per data file, so a
+batch's parallelism equals its file count and a 1000-executor cluster
+fans the backlog out naturally.  Rows are produced as Arrow
+RecordBatches read straight from the immutable commit parquet
+(column-pruned to the declared schema); hive-partition values are
+injected as constant Arrow columns from the log's ``partitionValues``
+(they are not stored in the data files).
 
 Semantics mirror Delta's source contract:
 
@@ -38,7 +39,6 @@ are batch); this is the training-pipeline extension family — the
 
 from __future__ import annotations
 
-import json
 import os
 from typing import TYPE_CHECKING, Iterator
 
@@ -103,12 +103,11 @@ class _LakeliteStreamReader(DataSourceStreamReader):
         self._starting = int(options.get("startingversion", options.get("startingVersion", 0)))
         self._ignore_changes = str(options.get("ignorechanges", "false")).lower() == "true"
         self._ignore_deletes = str(options.get("ignoredeletes", "false")).lower() == "true"
-        # logical -> physical column map for adopted name-mapped tables
-        # (loaded on the DRIVER; the pickled reader carries it to workers)
+        # logical -> physical column map of a name-mapped table (loaded
+        # on the DRIVER; the pickled reader carries it to workers)
         from aws_sdk_pandas_spark import lakehouse_shim as ls
 
-        cmap = ls._cmap_load(self._path)
-        self._log2phys: dict = cmap["log2phys"] if cmap else {}
+        self._log2phys: dict = ls._read_manifest(self._path)["log2phys"]
 
     # -- offset protocol ----------------------------------------------------
     def initialOffset(self) -> dict:
@@ -124,59 +123,47 @@ class _LakeliteStreamReader(DataSourceStreamReader):
 
     # -- planning -----------------------------------------------------------
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        import urllib.parse
+
+        from aws_sdk_pandas_spark import delta_log as dl
         from aws_sdk_pandas_spark import lakehouse_shim as ls
 
         root = ls._local(self._path)
         out: list[InputPartition] = []
         for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
-            man = ls._read_manifest(self._path, v)
-            if v == 0:
-                prev_files: dict = {}
-            else:
-                prev_files = {
-                    e["path"]: e for e in ls._read_manifest(self._path, v - 1)["files"]
-                }
-            cur_files = {e["path"]: e for e in man["files"]}
-            removed = set(prev_files) - set(cur_files)
-            added = [cur_files[p] for p in sorted(set(cur_files) - set(prev_files))]
-            # a kept file whose deletion vector changed is a row-level
-            # DELETE: same streaming contract as a rewrite (Delta's
-            # deletion-vector commits hit ignoreDeletes/ignoreChanges)
-            dv_changed = sorted(
-                p
-                for p in set(prev_files) & set(cur_files)
-                if (prev_files[p].get("dv") or None)
-                != (cur_files[p].get("dv") or None)
+            actions = dl._read_actions(self._path, v)
+            info = next((a["commitInfo"] for a in actions if "commitInfo" in a), {})
+            mode = (info.get("operationParameters") or {}).get("mode", "")
+            removed = {a["remove"]["path"] for a in actions if "remove" in a}
+            adds = sorted(
+                (a["add"] for a in actions if "add" in a), key=lambda a: a["path"]
             )
+            # a file removed and re-added in one commit changed its
+            # deletion vector: a row-level DELETE, the same streaming
+            # contract as a rewrite (Delta's deletion-vector commits hit
+            # ignoreDeletes/ignoreChanges)
+            dv_changed = [a for a in adds if a["path"] in removed]
+            added = [a for a in adds if a["path"] not in removed]
+            removed -= {a["path"] for a in dv_changed}
             if (removed or dv_changed) and not self._ignore_changes:
                 if not (self._ignore_deletes and not added):
                     raise RuntimeError(
-                        f"lakelite_stream: commit v{v} ({man.get('mode')}) "
+                        f"lakelite_stream: commit v{v} ({mode}) "
                         f"removed/rewrote {len(removed)} and row-level-deleted "
                         f"from {len(dv_changed)} file(s); a streaming source "
                         "cannot retract rows. Set ignoreChanges=true to "
                         "re-emit rewritten files (possible duplicates) or "
                         "ignoreDeletes=true for delete-only commits."
                     )
-            if self._ignore_changes and dv_changed:
-                # re-emit the changed file's NEW version: the file minus
-                # its deleted rows (duplicates allowed, as documented)
-                for p in dv_changed:
-                    e = cur_files[p]
-                    out.append(
-                        _FilePartition(
-                            os.path.join(root, e["path"]),
-                            dict(e.get("partition_values") or {}),
-                            dv=e.get("dv"),
-                            root=root,
-                        )
-                    )
-            for e in added:
+            # with ignoreChanges a DV change re-emits the file's NEW
+            # version: the file minus its deleted rows (duplicates
+            # allowed, as documented)
+            for a in (dv_changed if self._ignore_changes else []) + added:
                 out.append(
                     _FilePartition(
-                        os.path.join(root, e["path"]),
-                        dict(e.get("partition_values") or {}),
-                        dv=e.get("dv"),
+                        os.path.join(root, urllib.parse.unquote(a["path"])),
+                        dict(a.get("partitionValues") or {}),
+                        dv=a.get("deletionVector"),
                         root=root,
                     )
                 )
@@ -232,26 +219,17 @@ class LakeliteStreamDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("lakelite_stream requires .option('path', <table dir>)")
-        man = ls._read_manifest(path, ls.latest_version(path))
-        schema = T.StructType.fromJson(json.loads(man["schema"]))
-        for c in man["partition_cols"]:
-            if c not in schema.fieldNames():
-                schema = schema.add(c, T.StringType())
-        # adopted name-mapped tables: the stream speaks LOGICAL names
-        # like every other lakelite entry point (files stay physical;
-        # the per-partition reader translates)
-        cmap = ls._cmap_load(path)
-        if cmap is not None:
-            phys2log = {p: l for l, p in cmap["log2phys"].items()}  # noqa: E741
-            schema = T.StructType(
-                [
-                    T.StructField(
-                        phys2log.get(f.name, f.name), f.dataType, f.nullable
-                    )
-                    for f in schema.fields
-                ]
-            )
-        return schema
+        man = ls._read_manifest(path)
+        # a name-mapped table streams in LOGICAL names like every other
+        # lakelite entry point (files stay physical; the per-partition
+        # reader translates)
+        phys2log = {p: l for l, p in man["log2phys"].items()}  # noqa: E741
+        return T.StructType(
+            [
+                T.StructField(phys2log.get(f.name, f.name), f.dataType, f.nullable)
+                for f in ls._table_schema(man).fields
+            ]
+        )
 
     def streamReader(self, schema: StructType) -> _LakeliteStreamReader:
         return _LakeliteStreamReader(schema, dict(self.options))

@@ -131,7 +131,6 @@ def test_read_deltalake_prefers_delta_log(spark, tmp_path):
     lakehouse.to_deltalake(_df(spark, [(1, "a", 1), (2, "b", 1)]), p, mode="overwrite")
     lakehouse.to_deltalake(_df(spark, [(3, "c", 1)]), p, mode="append")
     # remove the lakelite manifests: the Delta log alone must serve reads
-    shutil.rmtree(os.path.join(p, "_lakelite"))
     assert lakehouse.read_deltalake(spark, p).count() == 3
     assert lakehouse.read_deltalake(spark, p, version=0).count() == 2
     assert lakehouse.read_deltalake(spark, p, columns=["k"]).columns == ["k"]
@@ -151,31 +150,6 @@ def test_txn_action_and_schema_change_metadata(spark, tmp_path):
     m2 = next(a["metaData"] for a in _actions(p, 2) if "metaData" in a)
     assert m2["id"] == id0
     assert "extra" in m2["schemaString"]
-
-
-def test_export_table_backfill(spark, tmp_path):
-    import shutil
-
-    p = str(tmp_path / "t")
-    shim.write(_df(spark, [(1, "a", 1)]), p, mode="overwrite")
-    shim.write(_df(spark, [(2, "b", 1)]), p)
-    shutil.rmtree(os.path.join(p, "_delta_log"))  # simulate a pre-export table
-    assert delta_log.export_table(p) == 2
-    assert _live_paths(p, 1) == {e["path"] for e in shim._read_manifest(p, 1)["files"]}
-
-
-def test_vacuumed_history_skips_export_gracefully(spark, tmp_path):
-    import shutil
-
-    p = str(tmp_path / "t")
-    shim.write(_df(spark, [(1, "a", 1)]), p, mode="overwrite")
-    shim.write(_df(spark, [(2, "b", 1)]), p)
-    shim.vacuum(p, keep_versions=1)  # drops manifest v0
-    shutil.rmtree(os.path.join(p, "_delta_log"))
-    # the next commit cannot build a contiguous-from-0 log: skip, no crash
-    shim.write(_df(spark, [(3, "c", 1)]), p)
-    assert not delta_log.has_delta_log(p)
-    assert shim.read(spark, p).count() == 3  # lakelite reads unaffected
 
 
 def test_foreign_delta_log_roundtrip(spark, tmp_path):
@@ -334,18 +308,6 @@ def test_foreign_checkpoint_seeds_replay(spark, tmp_path):
     # version 0 predates the checkpoint and its JSON is gone -> honest error
     with pytest.raises(InvalidArgument, match="not reachable|not found"):
         lakehouse.read_deltalake(spark, p, version=0)
-
-
-def test_convert_to_delta_api(spark, tmp_path):
-    import shutil
-
-    p = str(tmp_path / "t")
-    shim.write(_df(spark, [(1, "a", 1)]), p, mode="overwrite")
-    shim.write(_df(spark, [(2, "b", 1)]), p)
-    shutil.rmtree(os.path.join(p, "_delta_log"))
-    assert lakehouse.convert_to_delta(p) == 2
-    assert delta_log.read_delta_log(spark, p).count() == 2
-    assert lakehouse.convert_to_delta(p) == 0  # idempotent
 
 
 # ----------------------------------------------- deletion vectors (protocol 3)

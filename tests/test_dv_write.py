@@ -987,7 +987,6 @@ def test_convert_from_delta_checkpoint_seeded(spark, tmp_path):
         shim.write(spark.createDataFrame([(i, i)], "k int, v int"), p)
     assert len(dl.clean_log(p)) == 9  # checkpoint at delta v9
     # forget the lakelite identity: now a FOREIGN checkpoint-seeded log
-    shutil.rmtree(os.path.join(p, "_lakelite"))
     res = dl.convert_from_delta(p)
     assert res["delta_version"] == 11
     assert shim.read(spark, p).count() == 12

@@ -583,25 +583,6 @@ def test_concurrent_append_retry_rebase(spark, tmp_path, monkeypatch):
         shim.write(_df(spark, [(9, "z", 1)]), p, mode="overwrite")
 
 
-def test_legacy_txn_stamps_survive_migration(spark, tmp_path):
-    """Round-2 review: a pre-cumulative-map table stored one txn stamp
-    per manifest; the first new commit must fold in stamps from ALL
-    older manifests, not just the previous one."""
-    p = str(tmp_path / "t")
-    shim.write(_df(spark, [(1, "a", 1)]), p, mode="append", txn=("app", 5))
-    shim.write(_df(spark, [(2, "b", 1)]), p, mode="append")  # no txn
-    # simulate the legacy on-disk format: strip the cumulative maps
-    for v in shim._versions(p):
-        m = shim._read_manifest(p, v)
-        m.pop("txns", None)
-        with open(os.path.join(shim._log_dir(p), f"v{v:08d}.json"), "w") as fh:
-            json.dump(m, fh)
-    assert shim.txn_version(p, "app") == 5  # legacy scan path
-    shim.write(_df(spark, [(3, "c", 1)]), p, mode="append")  # first new commit
-    assert shim.txn_version(p, "app") == 5  # migrated, not reset to -1
-    assert shim.write(_df(spark, [(9, "z", 1)]), p, mode="append", txn=("app", 4)) is False
-
-
 def test_nan_stats_never_prune_real_rows(spark, tmp_path):
     """Round-2 review: max() over a column containing NaN returns NaN and
     every NaN comparison is False — a NaN bound must read as UNKNOWN

@@ -12,10 +12,11 @@ accidental Python in the hot path).
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _JOINS = (
     "BroadcastHashJoin",

@@ -23,10 +23,11 @@ Prints one JSON line per (op, mult) and a final scaling summary.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, functions as F
