@@ -17,9 +17,11 @@ elsewhere is a table lakelite reads and writes in place:
   ``s3/_write_deltalake.py:129-133`` writes the same log through
   delta-rs).
 - **Snapshots** (:func:`snapshot`): every lakelite reader and writer
-  replays the log once per call — JSON from version 0 while the log is
-  contiguous, seeded from the newest usable checkpoint only across a
-  gap — into the manifest dict the lakelite operations work on:
+  replays the log once per call — as Delta readers do, from the newest
+  checkpoint at or below the version (JSON from version 0 when there is
+  none), so the cost follows the live files and the commits since the
+  last checkpoint, not the table's age — into the manifest dict the
+  lakelite operations work on:
   ``schema``/``partition_cols`` from ``metaData``, the files from the
   live ``add`` actions (their stats, deletion vectors and ``numRecords``
   0 for an empty file), ``stats_cols`` from the
@@ -61,7 +63,7 @@ import re
 import time
 import urllib.parse
 import uuid
-from typing import Any
+from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -196,18 +198,18 @@ def _read_actions(path: str, version: int) -> list[dict[str, Any]]:
     return out
 
 
-def _replay(
-    path: str, version: int, *, start: int = 0, seed=None
-) -> tuple[dict[str, dict], dict, dict, dict[str, int], dict]:
-    """Replay JSON actions start..version on top of ``seed`` (a
-    checkpoint's state) -> (live add actions by path, metaData,
-    protocol, txn versions by app id, ``version``'s commitInfo)."""
+def _replay_each(path: str, start: int, stop: int, seed=None) -> Iterator[tuple]:
+    """Apply the JSON commits start..stop on top of ``seed`` (a
+    checkpoint's (adds, metaData, protocol, txns)), yielding the state
+    after each: (version, live add actions by path, metaData, protocol,
+    txn versions by app id, that version's commitInfo).  The yielded
+    dicts are the replay's own, updated in place by the next commit."""
     adds: dict[str, dict] = dict(seed[0]) if seed else {}
     meta: dict | None = seed[1] if seed else None
     protocol: dict | None = seed[2] if seed else None
     txns: dict[str, int] = dict(seed[3]) if seed else {}
-    info: dict = {}
-    for v in range(start, version + 1):
+    for v in range(start, stop + 1):
+        info: dict = {}
         for a in _read_actions(path, v):
             if "add" in a:
                 adds[a["add"]["path"]] = a["add"]
@@ -219,22 +221,22 @@ def _replay(
                 protocol = a["protocol"]
             elif "txn" in a:
                 txns[a["txn"]["appId"]] = int(a["txn"]["version"])
-            elif "commitInfo" in a and v == version:
+            elif "commitInfo" in a:
                 info = a["commitInfo"]
-    if meta is None:
-        raise InvalidArgument(f"Delta log at {path!r} has no metaData action")
-    return adds, meta, protocol or {"minReaderVersion": 1}, txns, info
+        if meta is None:
+            raise InvalidArgument(f"Delta log at {path!r} has no metaData action")
+        yield v, adds, meta, protocol or {"minReaderVersion": 1}, txns, info
 
 
 def _state(
     path: str, version: int | None = None
 ) -> tuple[int, dict[str, dict], dict, dict, dict[str, int], dict]:
     """The table state at ``version`` (default latest): (version, live
-    adds, metaData, protocol, txns, commitInfo).  JSON commits replay
-    from version 0 while the log is contiguous; across a gap (history
-    cleaned up) the newest parquet checkpoint at or below ``version``
-    that the later JSON commits reach seeds the replay — the protocol's
-    recovery path."""
+    adds, metaData, protocol, txns, commitInfo).  As Delta readers do,
+    the newest parquet checkpoint at or below ``version`` seeds the
+    replay when the JSON commits after it reach ``version``; otherwise
+    the JSON commits replay from version 0.  A log cleaned past
+    ``version`` with no checkpoint to bridge it is refused."""
     commits, ckpts = _listing(path)
     if not commits and not ckpts:
         raise InvalidArgument(f"no Delta log under {path!r}")
@@ -245,20 +247,27 @@ def _state(
             f"Delta version {v} not found at {path!r} (have up to {latest})"
         )
     json_set = set(commits)
-    if all(i in json_set for i in range(v + 1)):
-        return (v, *_replay(path, v))
-    usable = [
-        c for c in ckpts if c <= v and all(i in json_set for i in range(c + 1, v + 1))
-    ]
-    if not usable:
+    # a gap that the newest checkpoint at or below v cannot bridge, no
+    # older one can either
+    c = max((c for c in ckpts if c <= v), default=-1)
+    if not all(i in json_set for i in range(c + 1, v + 1)):
         raise InvalidArgument(
             f"Delta version {v} at {path!r} is not reachable: the log is "
             "not contiguous from version 0 and no parquet checkpoint "
             "covers the gap (history cleaned up past this version)"
         )
-    c = max(usable)
-    seed = (*_load_checkpoint(path, c), _checkpoint_txns(path, c))
-    return (v, *_replay(path, v, start=c + 1, seed=seed))
+    if c < 0:
+        *_, out = _replay_each(path, 0, v)
+        return out
+    seed = _checkpoint_state(path, c)
+    if c < v:
+        *_, out = _replay_each(path, c + 1, v, seed)
+        return out
+    adds, meta, protocol, txns = seed
+    info = next(
+        (a["commitInfo"] for a in _read_actions(path, v) if "commitInfo" in a), {}
+    ) if v in json_set else {}
+    return v, adds, meta, protocol or {"minReaderVersion": 1}, txns, info
 
 
 def _check_readable(protocol: dict[str, Any], meta: dict[str, Any]) -> str | None:
@@ -359,7 +368,29 @@ def _entry(add: dict[str, Any], pcols: list[str]) -> dict[str, Any]:
 
 def snapshot(path: str, version: int | None = None) -> dict[str, Any]:
     """The lakelite manifest of ``version`` (default latest), replayed
-    from the log once: ``version``, ``mode``, ``schema`` (Spark JSON in
+    from the log once (:func:`_manifest`)."""
+    return _manifest(path, *_state(path, version))
+
+
+def snapshots(path: str) -> Iterator[dict[str, Any]]:
+    """The lakelite manifest of every readable version, oldest first, in
+    ONE pass over the log: each JSON commit is applied to the state of
+    the version before it (a version after a gap in the log starts from
+    its checkpoint)."""
+    commits = set(_listing(path)[0])
+    state = None
+    for v in readable_versions(path):
+        if state is not None and state[0] == v - 1 and v in commits:
+            state = next(_replay_each(path, v, v, state[1:5]))
+        else:
+            state = _state(path, v)
+        yield _manifest(path, *state)
+
+
+def _manifest(
+    path: str, v: int, adds: dict, meta: dict, protocol: dict, txns: dict, info: dict
+) -> dict[str, Any]:
+    """One table state as a lakelite manifest: ``version``, ``mode``, ``schema`` (Spark JSON in
     PHYSICAL names), ``partition_cols``, ``files`` (``path``, ``commit``
     — the ``data/<commit>`` dir lakelite wrote the file to, ``""`` for
     another engine's —, ``partition_values`` and, when known, ``stats``,
@@ -372,7 +403,6 @@ def snapshot(path: str, version: int | None = None) -> dict[str, Any]:
     translation is top-level only — physical inner names would be a
     silent wrong answer) are refused here; ``read_delta_log`` reads
     both."""
-    v, adds, meta, protocol, txns, info = _state(path, version)
     cm_mode = _check_readable(protocol, meta)
     fields = json.loads(meta["schemaString"]).get("fields", [])
     log2phys: dict[str, str] = {}
@@ -423,23 +453,39 @@ def snapshot(path: str, version: int | None = None) -> dict[str, Any]:
 
 def check_writable(man: dict[str, Any]) -> None:
     """Refuse to write a table this engine cannot keep intact for its
-    other readers and writers: declared ``delta.invariants`` and check
-    features (not enforced here), ``delta.enableChangeDataFeed`` (no
-    ``_change_data`` files are written), ``delta.appendOnly`` (merge and
-    delete would break it), writer features beyond deletionVectors and
-    name-mode columnMapping, and data files at absolute paths or outside
-    a hive ``k=v`` layout (lakelite scans recover partition values from
-    the directory names).  ``man`` is a :func:`snapshot`; every write
-    into an existing table runs this before it writes a data file."""
+    other readers and writers: declared ``delta.invariants``, CHECK
+    constraints (``delta.constraints.*``), generated and identity
+    columns (none is enforced or filled here), ``delta.enableChangeDataFeed``
+    (no ``_change_data`` files are written), ``delta.appendOnly`` (merge
+    and delete would break it), writer features beyond deletionVectors
+    and name-mode columnMapping, and data files at absolute paths or
+    outside a hive ``k=v`` layout (lakelite scans recover partition
+    values from the directory names).  A writer-7 name-mapped table may
+    list the legacy writer-5 features, the set Delta lists when it
+    upgrades such a table for deletion vectors; the checks above refuse
+    any of them a table actually uses.  ``man`` is a :func:`snapshot`;
+    every write into an existing table runs this before it writes a
+    data file."""
     meta, protocol = man["meta"], man["protocol"]
     config = meta.get("configuration") or {}
-    if any(
-        (f.get("metadata") or {}).get("delta.invariants")
-        for f in json.loads(meta["schemaString"]).get("fields", [])
-    ):
+    for f in json.loads(meta["schemaString"]).get("fields", []):
+        used = [
+            k
+            for k in f.get("metadata") or {}
+            if k in ("delta.invariants", "delta.generationExpression")
+            or k.startswith("delta.identity.")
+        ]
+        if used:
+            raise InvalidArgument(
+                f"cannot write table whose column {f['name']!r} carries "
+                f"{used[0]}: lakelite writes don't enforce invariants or "
+                "fill generated and identity columns"
+            )
+    constraints = sorted(k for k in config if k.startswith("delta.constraints."))
+    if constraints:
         raise InvalidArgument(
-            "cannot write table with delta.invariants: lakelite writes "
-            "don't enforce them"
+            f"cannot write table with CHECK constraint {constraints[0]}: "
+            "lakelite writes don't enforce them"
         )
     if str(config.get("delta.enableChangeDataFeed", "")).lower() == "true":
         raise InvalidArgument(
@@ -456,7 +502,8 @@ def check_writable(man: dict[str, Any]) -> None:
     mapped = bool(man["log2phys"])
     # writer 7 lists its features: none beyond deletionVectors, or on a
     # name-mapped table columnMapping alone or exactly the set a legacy
-    # writer-5 table lists once its first DV commit upgrades it
+    # writer-5 table lists once its first DV commit upgrades it (the
+    # checks above refuse the features of that set a table uses)
     if not (
         mwv <= 2
         or (mwv == 5 and mapped)
@@ -653,8 +700,10 @@ def commit(path: str, manifest: dict[str, Any]) -> None:
     raw = {urllib.parse.unquote(p): p for p in base["adds"]} if base else {}
 
     def uri(p: str) -> str:
-        # the protocol wants an RFC 2396 relative URI
-        return raw.get(p) or urllib.parse.quote(p.replace(os.sep, "/"), safe="/=%")
+        # the protocol wants an RFC 2396 relative URI: the '%' of Spark's
+        # partition-dir escapes (k=10%3A00) is itself escaped, so the
+        # path decodes back to the file on disk
+        return raw.get(p) or urllib.parse.quote(p.replace(os.sep, "/"), safe="/=")
 
     files: list[dict[str, Any]] = []
     for p in sorted(prev.keys() - cur.keys()):
@@ -911,70 +960,59 @@ def _mapish(v) -> dict:
 
 
 def _load_checkpoint(path: str, version: int) -> tuple[dict[str, dict], dict | None, dict | None]:
-    """Seed (adds, metaData, protocol) from a parquet checkpoint — the
-    checkpoint IS the full table state at its version, one action per
-    row with exactly one non-null action column.  Driver-side via
-    pyarrow: checkpoint row count == file count, the same bounded set
-    every Delta client materializes to plan a scan."""
+    """(adds, metaData, protocol) of a parquet checkpoint."""
+    return _checkpoint_state(path, version)[:3]
+
+
+def _checkpoint_state(
+    path: str, version: int
+) -> tuple[dict[str, dict], dict | None, dict | None, dict[str, int]]:
+    """Seed (adds, metaData, protocol, txns) from a parquet checkpoint —
+    the checkpoint IS the full table state at its version, one action
+    per row with exactly one non-null action column; only the four
+    action columns a snapshot needs are read.  Driver-side via pyarrow:
+    checkpoint row count == file count, the same bounded set every
+    Delta client materializes to plan a scan."""
     import pyarrow.parquet as pq
+
+    def present(d: dict) -> dict:  # one action struct minus its null fields
+        return {k: v for k, v in d.items() if v is not None}
 
     adds: dict[str, dict] = {}
     meta: dict | None = None
     protocol: dict | None = None
-    for f in _checkpoint_files(path, version):
-        tbl = pq.read_table(f)
-        cols = set(tbl.column_names)
-        for r in tbl.to_pylist():
-            a = r.get("add") if "add" in cols else None
-            if a and a.get("path"):
-                entry = {
-                    "path": a["path"],
-                    "partitionValues": _mapish(a.get("partitionValues")),
-                    "size": a.get("size"),
-                    "modificationTime": a.get("modificationTime"),
-                    "dataChange": False,
-                }
-                if a.get("stats"):
-                    entry["stats"] = a["stats"]
-                # a checkpointed file may carry live deletion vectors —
-                # dropping them would silently RESURRECT deleted rows
-                dv = a.get("deletionVector")
-                if dv and dv.get("storageType"):
-                    entry["deletionVector"] = {
-                        k: v for k, v in dv.items() if v is not None
-                    }
-                adds[a["path"]] = entry
-                continue
-            m = r.get("metaData") if "metaData" in cols else None
-            if m and m.get("id"):
-                meta = {
-                    "id": m["id"],
-                    "format": m.get("format") or {"provider": "parquet", "options": {}},
-                    "schemaString": m["schemaString"],
-                    "partitionColumns": list(m.get("partitionColumns") or []),
-                    "configuration": _mapish(m.get("configuration")),
-                }
-                if m.get("createdTime") is not None:
-                    meta["createdTime"] = m["createdTime"]
-                continue
-            p = r.get("protocol") if "protocol" in cols else None
-            if p and p.get("minReaderVersion") is not None:
-                protocol = {k: v for k, v in p.items() if v is not None}
-    return adds, meta, protocol
-
-
-def _checkpoint_txns(path: str, version: int) -> dict[str, int]:
-    """The ``txn`` actions of a checkpoint (only that column is read)."""
-    import pyarrow.parquet as pq
-
     txns: dict[str, int] = {}
     for f in _checkpoint_files(path, version):
-        if "txn" not in pq.read_schema(f).names:
-            continue
-        for t in pq.read_table(f, columns=["txn"]).column("txn").to_pylist():
-            if t and t.get("appId") is not None:
-                txns[t["appId"]] = int(t["version"])
-    return txns
+        pf = pq.ParquetFile(f)
+        names = set(pf.schema_arrow.names)
+        tbl = pf.read(columns=[c for c in ("add", "metaData", "protocol", "txn") if c in names])
+
+        def rows(col: str) -> list:
+            return [r for r in tbl.column(col).to_pylist() if r] if col in names else []
+
+        for a in rows("add"):
+            a = present(a)
+            a["partitionValues"] = _mapish(a.get("partitionValues"))
+            # a checkpointed file may carry live deletion vectors —
+            # dropping them would silently RESURRECT deleted rows
+            if a.get("deletionVector"):
+                a["deletionVector"] = present(a["deletionVector"])
+            adds[a["path"]] = a
+        for m in rows("metaData"):
+            fmt = m.get("format") or {"provider": "parquet"}
+            meta = {
+                **present(m),
+                "format": {**fmt, "options": _mapish(fmt.get("options"))},
+                "partitionColumns": list(m.get("partitionColumns") or []),
+                "configuration": _mapish(m.get("configuration")),
+            }
+        for p in rows("protocol"):
+            protocol = present(p)
+        for t in rows("txn"):
+            txns[t["appId"]] = int(t["version"])
+    if meta is None:
+        raise InvalidArgument(f"Delta checkpoint {version} at {path!r} has no metaData action")
+    return adds, meta, protocol, txns
 
 
 # --------------------------------------------------- deletion vectors (v3)
@@ -1241,10 +1279,9 @@ def read_delta_log(
 ) -> DataFrame:
     """Read a Delta table by replaying its transaction log — works on
     tables lakelite writes AND on tables written elsewhere by delta-rs /
-    Delta Spark, with reader protocol 1-3.  When older JSON commits
-    have been cleaned up, the newest parquet CHECKPOINT at or below the
-    requested version seeds the replay (the protocol's recovery path),
-    and only the JSON commits after it are applied.  The scans take
+    Delta Spark, with reader protocol 1-3.  The newest parquet
+    CHECKPOINT at or below the requested version seeds the replay, and
+    only the JSON commits after it are applied.  The scans take
     their schema from the ``metaData`` action (physical names in
     column-mapping mode 'name', parquet field ids in mode 'id'), so
     building the read runs no Spark job, and files that predate a

@@ -586,6 +586,7 @@ def export_snapshot(path: str, manifest: dict[str, Any]) -> bool:
     contiguous; if that history was vacuumed before the first export,
     the export is skipped (a snapshot log with holes would misrepresent
     parentage)."""
+    from aws_sdk_pandas_spark import delta_log as dl
     from aws_sdk_pandas_spark import lakehouse_shim as ls
 
     v = int(manifest["version"])
@@ -596,9 +597,11 @@ def export_snapshot(path: str, manifest: dict[str, Any]) -> bool:
         have = set(ls._versions(path))
         if not all(i in have for i in range(v)):
             return False
-        for i in range(v):
-            if not os.path.exists(_metadata_file(path, i)):
-                export_snapshot(path, ls._read_manifest(path, i))
+        for m in dl.snapshots(path):
+            if m["version"] >= v:
+                break
+            if not os.path.exists(_metadata_file(path, m["version"])):
+                export_snapshot(path, m)
 
     root = _local(path)
     d = _meta_dir(path)
@@ -1085,13 +1088,11 @@ def export_table(path: str) -> int:
     """Backfill Iceberg metadata for every lakelite version not yet
     exported; returns the number of snapshots written (the
     ``convert_to_iceberg`` backend)."""
-    from aws_sdk_pandas_spark import lakehouse_shim as ls
+    from aws_sdk_pandas_spark import delta_log as dl
 
     have = set(iceberg_versions(path))
     return sum(
-        export_snapshot(path, ls._read_manifest(path, v))
-        for v in ls._versions(path)
-        if v not in have
+        export_snapshot(path, m) for m in dl.snapshots(path) if m["version"] not in have
     )
 
 

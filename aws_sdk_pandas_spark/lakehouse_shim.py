@@ -70,6 +70,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import urllib.parse
 import uuid
@@ -144,13 +145,6 @@ def _read_manifest(path: str, version: int | None = None) -> dict[str, Any]:
     """The snapshot at ``version`` (default latest), replayed from the
     Delta log (:func:`delta_log.snapshot`)."""
     return dl.snapshot(path, version)
-
-
-def _writable(man: dict[str, Any]) -> dict[str, Any]:
-    """``man`` after the refusals every write into an existing table
-    runs before it writes a data file (:func:`delta_log.check_writable`)."""
-    dl.check_writable(man)
-    return man
 
 
 def _commit_manifest(path: str, manifest: dict[str, Any]) -> None:
@@ -468,8 +462,10 @@ def write(
     id already exists, the write is skipped and False is returned — the
     contract that makes a replayed foreachBatch micro-batch safe.
     Returns True when a commit happened."""
-    prev = _writable(_read_manifest(path)) if table_exists(path) else None
+    prev = _read_manifest(path) if table_exists(path) else None
     exists = prev is not None
+    if exists:
+        dl.check_writable(prev)
     if txn is not None and exists and prev["txns"].get(str(txn[0]), -1) >= int(txn[1]):
         return False
     if mode in ("error", "errorifexists") and exists:
@@ -568,7 +564,8 @@ def write(
         except InvalidArgument as exc:
             if "concurrent write detected" not in str(exc) or mode != "append":
                 raise
-            prev = _writable(_read_manifest(path))
+            prev = _read_manifest(path)
+            dl.check_writable(prev)
             if txn is not None and prev["txns"].get(str(txn[0]), -1) >= int(txn[1]):
                 return False  # the winner already committed this batch
             # re-validate against the WINNER's snapshot before rebasing:
@@ -714,19 +711,17 @@ def _scan_snapshot(
 
 
 def history(path: str) -> list[dict[str, Any]]:
-    """The DESCRIBE HISTORY analog: one row per readable version."""
-    out = []
-    for v in _versions(path):
-        m = _read_manifest(path, v)
-        out.append(
-            {
-                "version": v,
-                "mode": m["mode"],
-                "num_files": len(m["files"]),
-                "partition_cols": m["partition_cols"],
-            }
-        )
-    return out
+    """The DESCRIBE HISTORY analog: one row per readable version, from
+    one pass over the log (:func:`delta_log.snapshots`)."""
+    return [
+        {
+            "version": m["version"],
+            "mode": m["mode"],
+            "num_files": len(m["files"]),
+            "partition_cols": m["partition_cols"],
+        }
+        for m in dl.snapshots(path)
+    ]
 
 
 def _key_cond(left: DataFrame, right: DataFrame, keys: list[str], match_nulls: bool):
@@ -818,6 +813,17 @@ def _driver_frame(
     )
 
 
+def _uri_path(spark: SparkSession, path: str) -> str:
+    """The absolute ``path`` as the path of the URI Spark's
+    ``_metadata.file_path`` carries (Hadoop ``Path.toUri``: a partition
+    dir ``k=10%3A00`` reads ``k=10%253A00``); a path of plain characters
+    is its own URI path."""
+    path = os.path.abspath(path)
+    if re.fullmatch(r"[A-Za-z0-9/._=-]*", path):
+        return path
+    return spark._jvm.org.apache.hadoop.fs.Path(path).toUri().getRawPath()
+
+
 def _dv_deletes_df(
     spark: SparkSession, root: str, entries: list[dict[str, Any]]
 ) -> tuple[DataFrame | None, int]:
@@ -828,12 +834,13 @@ def _dv_deletes_df(
     at a time (the DV bins live next to the data on shared storage,
     like the parquet itself).
     Returns ``(DataFrame['__dfp','__dpos'], total_cardinality)`` with
-    ``__dfp`` the absolute local path, or ``(None, 0)`` with no DVs.
+    ``__dfp`` the file's URI path (:func:`_uri_path`), or ``(None, 0)``
+    with no DVs.
     Peak per-task memory is ONE file's deleted-row list (bounded by
     that file's row count, emitted in chunks of at most 2^20 rows),
     never the task's or the table's total."""
     descs = [
-        (os.path.abspath(os.path.join(root, e["path"])), json.dumps(e["dv"]))
+        (_uri_path(spark, os.path.join(root, e["path"])), json.dumps(e["dv"]))
         for e in entries
         if e.get("dv")
     ]
@@ -992,7 +999,8 @@ def _commit_or_rebase(
         except InvalidArgument as exc:
             if "concurrent write detected" not in str(exc):
                 raise
-            winner = _writable(_read_manifest(path))
+            winner = _read_manifest(path)
+            dl.check_writable(winner)
             if (
                 winner["schema"] != base["schema"]
                 or winner["partition_cols"] != base["partition_cols"]
@@ -1093,7 +1101,9 @@ def merge(
 
     from aws_sdk_pandas_spark.operators.merge import _precombine_latest
 
-    man = _writable(_read_manifest(path)) if table_exists(path) else None
+    man = _read_manifest(path) if table_exists(path) else None
+    if man is not None:
+        dl.check_writable(man)
     m = man["log2phys"] if man is not None else {}
     if m:
         # name-mapped table: internals run on physical names
@@ -1225,7 +1235,8 @@ def delete(
     (compaction materializes them).  Choose DVs when deletes are small
     relative to file sizes — O(deleted rows) metadata instead of
     O(touched bytes) rewrite."""
-    man = _writable(_read_manifest(path))
+    man = _read_manifest(path)
+    dl.check_writable(man)
     source = _to_physical(source, man["log2phys"])
     keys = _phys_names(keys, man["log2phys"])
     if use_deletion_vectors:
@@ -1464,7 +1475,8 @@ def compact(
     EVERY listed dimension at once and ``predicates`` skipping prunes on
     any of them — a linear sort only ever skips on its leading column.
     Z-ordered compaction automatically records stats for those columns."""
-    man = _writable(_read_manifest(path))
+    man = _read_manifest(path)
+    dl.check_writable(man)
     zorder_by = _phys_names(zorder_by, man["log2phys"])
     df = _scan_snapshot(spark, path, man)
     stats_cols = list(man["stats_cols"])

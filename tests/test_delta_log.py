@@ -125,12 +125,9 @@ def test_export_action_shapes_and_replay_parity(spark, tmp_path):
 
 
 def test_read_deltalake_prefers_delta_log(spark, tmp_path):
-    import shutil
-
     p = str(tmp_path / "t")
     lakehouse.to_deltalake(_df(spark, [(1, "a", 1), (2, "b", 1)]), p, mode="overwrite")
     lakehouse.to_deltalake(_df(spark, [(3, "c", 1)]), p, mode="append")
-    # remove the lakelite manifests: the Delta log alone must serve reads
     assert lakehouse.read_deltalake(spark, p).count() == 3
     assert lakehouse.read_deltalake(spark, p, version=0).count() == 2
     assert lakehouse.read_deltalake(spark, p, columns=["k"]).columns == ["k"]

@@ -978,15 +978,14 @@ def test_convert_from_delta_checkpoint_seeded(spark, tmp_path):
     """A foreign table whose old JSON commits were cleaned up imports
     from the newest checkpoint (the protocol's recovery path) and the
     chain continues above the imported version."""
-    import shutil
-
     p = str(tmp_path / "t")
     shim.write(spark.createDataFrame([(0, 0)], "k int, v int"), p,
                mode="overwrite")
     for i in range(1, 12):
         shim.write(spark.createDataFrame([(i, i)], "k int, v int"), p)
     assert len(dl.clean_log(p)) == 9  # checkpoint at delta v9
-    # forget the lakelite identity: now a FOREIGN checkpoint-seeded log
+    # version 0, which named this engine, is cleaned: a FOREIGN
+    # checkpoint-seeded log
     res = dl.convert_from_delta(p)
     assert res["delta_version"] == 11
     assert shim.read(spark, p).count() == 12

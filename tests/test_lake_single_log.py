@@ -197,3 +197,107 @@ def test_no_public_call_creates_a_private_log(spark, tmp_path):
         step()
         assert set(os.listdir(p)) <= {"_delta_log", "data", "_dv"}, os.listdir(p)
     assert _both(spark, p)[0] == [k for k in range(40) if k not in (3, 4)]
+
+
+def test_partition_values_spark_escapes_in_dir_names(spark, tmp_path):
+    # Spark escapes ':', '%', '#' ... in partition dir names (k=10%3A00);
+    # the log must name those files as URIs that decode back to them
+    p = str(tmp_path / "t")
+    schema = "k bigint, v bigint, ts string"
+    rows = [(1, 0, "10:00"), (2, 0, "a%b"), (3, 0, "c#d")]
+    lakehouse.to_deltalake(
+        spark.createDataFrame(rows, schema), p, mode="overwrite", partition_cols=["ts"]
+    )
+    lakehouse.to_deltalake(spark.createDataFrame([(4, 0, "10:00")], schema), p, mode="append")
+    shim.merge(spark, spark.createDataFrame([(1, 1, "10:00")], schema), p, ["k"])
+    shim.merge(
+        spark, spark.createDataFrame([(2, 1, "a%b")], schema), p, ["k"],
+        use_deletion_vectors=True,
+    )
+    shim.delete(spark, _df(spark, [4]), p, ["k"], use_deletion_vectors=True)
+    want = [(1, 1, "10:00"), (2, 1, "a%b"), (3, 0, "c#d")]
+    for df in (lakehouse.read_deltalake(spark, p), shim.read(spark, p)):
+        assert sorted(tuple(r) for r in df.select("k", "v", "ts").collect()) == want
+    shim.compact(spark, p)
+    assert sorted(tuple(r) for r in shim.read(spark, p).select("k", "v", "ts").collect()) == want
+    # every add names an existing file once decoded
+    for a in dl._state(p)[1].values():
+        assert os.path.exists(os.path.join(p, dl.urllib.parse.unquote(a["path"])))
+
+
+def _mapped_table(p, configuration=None, field_metadata=None):
+    """A name-mapped writer-7 table whose writer features are the legacy
+    writer-5 set plus deletionVectors (what Delta lists when it enables
+    deletion vectors on a legacy name-mapped table)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(p)
+    pq.write_table(pa.table({"col-k": pa.array([1], pa.int64())}), os.path.join(p, "f0.parquet"))
+    md = {"delta.columnMapping.id": 1, "delta.columnMapping.physicalName": "col-k"}
+    schema = {"type": "struct", "fields": [
+        {"name": "k", "type": "long", "nullable": True, "metadata": {**md, **(field_metadata or {})}}]}
+    writer = sorted(dl._legacy_writer_features(5) | {"deletionVectors"})
+    _foreign_commit(p, 0, [
+        {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
+                      "readerFeatures": ["columnMapping", "deletionVectors"],
+                      "writerFeatures": writer}},
+        {"metaData": {"id": "mapped", "format": {"provider": "parquet", "options": {}},
+                      "schemaString": json.dumps(schema), "partitionColumns": [],
+                      "configuration": {"delta.columnMapping.mode": "name",
+                                        "delta.columnMapping.maxColumnId": "1",
+                                        **(configuration or {})}}},
+        {"add": {"path": "f0.parquet", "partitionValues": {}, "dataChange": True,
+                 "size": os.path.getsize(os.path.join(p, "f0.parquet")),
+                 "modificationTime": 0}},
+    ])
+
+
+@pytest.mark.parametrize(
+    "configuration, field_metadata, match",
+    [
+        ({"delta.constraints.positive": "k > 0"}, None, "CHECK constraint"),
+        (None, {"delta.generationExpression": "1"}, "generationExpression"),
+        (None, {"delta.identity.start": 1, "delta.identity.step": 1}, "delta.identity"),
+    ],
+)
+def test_enforced_column_rules_refuse_writes(
+    spark, tmp_path, configuration, field_metadata, match
+):
+    p = str(tmp_path / "t")
+    _mapped_table(p, configuration, field_metadata)
+    before = sorted(os.listdir(p))
+    with pytest.raises(InvalidArgument, match=match):
+        lakehouse.to_deltalake(_df(spark, [-1]), p, mode="append")
+    with pytest.raises(InvalidArgument, match=match):
+        shim.merge(spark, _df(spark, [-1]), p, ["k"], use_deletion_vectors=True)
+    with pytest.raises(InvalidArgument, match=match):
+        dl.convert_from_delta(p)
+    assert sorted(os.listdir(p)) == before
+    # the same table without the rule takes the write
+    q = str(tmp_path / "plain")
+    _mapped_table(q)
+    lakehouse.to_deltalake(_df(spark, [2]), q, mode="append")
+    assert _both(spark, q) == ([1, 2], [1, 2])
+
+
+def test_history_is_one_pass_that_matches_each_snapshot(spark, tmp_path):
+    p = str(tmp_path / "t")
+    shim.write(_df(spark, [0]), p, mode="overwrite", txn=("app", 0))
+    for i in range(1, 12):
+        shim.write(_df(spark, [i]), p, txn=("app", i))
+    shim.delete(spark, _df(spark, [3]), p, ["k"], use_deletion_vectors=True)
+    shim.write(_df(spark, [99]), p, mode="overwrite")
+
+    def view(m):
+        files = sorted((e["path"], json.dumps(e.get("dv"), sort_keys=True)) for e in m["files"])
+        return m["version"], m["mode"], files, m["txns"], m["schema"]
+
+    for cleaned in (False, True):
+        if cleaned:
+            assert dl.clean_log(p) == list(range(9))
+        got = [view(m) for m in dl.snapshots(p)]
+        assert got == [view(dl.snapshot(p, v)) for v in shim._versions(p)]
+        assert [h["version"] for h in shim.history(p)] == shim._versions(p)
+    assert [h["mode"] for h in shim.history(p)][-3:] == ["append", "delete", "overwrite"]
+    assert [h["num_files"] for h in shim.history(p)][-3:] == [12, 12, 1]
