@@ -27,26 +27,31 @@ elsewhere is a table lakelite reads and writes in place:
   0 for an empty file), ``stats_cols`` from the
   ``delta.dataSkippingStatsColumns`` table property, ``txns`` from the
   ``txn`` actions and the commit ``mode`` from ``commitInfo``.
-- **Reader** (:func:`read_delta_log`): replays the same log — or one
-  written by delta-rs or Delta Spark elsewhere, checkpoint-seeded or
-  not — into the plan behind ``read_deltalake``.  Partition values come
-  from the log's ``partitionValues`` (the protocol's rule: partition
-  columns are NOT stored in data files), cast to the ``metaData``
-  schema types.  Deletion vectors (reader 3) and column mapping ('name'
-  and 'id', reader 2/3) are supported; anything beyond is refused
-  loudly rather than mis-read.
+- **Reader** (:func:`read_delta_log`): the snapshot of the same log —
+  or of one written by delta-rs or Delta Spark elsewhere,
+  checkpoint-seeded or not — through lakelite's one scan builder
+  (``lakehouse_shim._scan``), the plan behind ``read_deltalake`` and
+  every lakelite read.  Partition values come from the log's
+  ``partitionValues`` (the protocol's rule: partition columns are NOT
+  stored in data files).  Deletion vectors (reader 3) and column
+  mapping ('name' and 'id', reader 2/3, nested renames included) are
+  supported; anything beyond is refused loudly rather than mis-read.
+- **Column mapping**: a mapped table runs on PHYSICAL column names
+  inside lakelite (the ``metaData`` schema's
+  ``delta.columnMapping.physicalName``; in mode 'id' each scan field
+  also carries its ``parquet.field.id``), and reads rename and cast the
+  columns back to the logical schema in one projection.
 - **Foreign tables**: every write into an existing table first runs the
   refusals of :func:`check_writable` (features this engine cannot keep
   intact), so a DV-bearing or NAME-column-mapped table another engine
-  wrote takes lakelite writes that continue its own log.  A name-mapped
-  table runs on PHYSICAL column names inside lakelite; the logical <->
-  physical map is the ``metaData`` schema's
-  ``delta.columnMapping.physicalName``.
+  wrote takes lakelite writes that continue its own log, whatever its
+  file layout.
 
 Scale notes: a commit is driver-side metadata work proportional to the
 files it TOUCHES (one ``os.stat`` + parquet-footer ``num_rows`` per
-added file), never to table size; the reader's plan is one parquet scan
-per distinct partition tuple, with column pruning and row-group
+added file), never to table size; a read is one parquet scan for an
+unpartitioned table, one per commit dir of a hive layout and one per
+partition tuple of any other layout, with column pruning and row-group
 pushdown intact because the files are plain parquet.  Every scan takes
 its schema from the log's ``metaData`` (authoritative under the
 protocol), so building a read opens no footer and runs no Spark job;
@@ -66,7 +71,6 @@ import uuid
 from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from aws_sdk_pandas_spark.exceptions import InvalidArgument
@@ -288,20 +292,20 @@ def _check_readable(protocol: dict[str, Any], meta: dict[str, Any]) -> str | Non
     return cm_mode
 
 
-def _physical_type(t: Any) -> Any:
+def _physical_type(t: Any, ids: bool) -> Any:
     if isinstance(t, dict):
         if t.get("type") == "struct":
             return {
                 "type": "struct",
-                "fields": [_physical_field(f) for f in t.get("fields", [])],
+                "fields": [_physical_field(f, ids) for f in t.get("fields", [])],
             }
         if t.get("type") == "array":
-            return {**t, "elementType": _physical_type(t["elementType"])}
+            return {**t, "elementType": _physical_type(t["elementType"], ids)}
         if t.get("type") == "map":
             return {
                 **t,
-                "keyType": _physical_type(t["keyType"]),
-                "valueType": _physical_type(t["valueType"]),
+                "keyType": _physical_type(t["keyType"], ids),
+                "valueType": _physical_type(t["valueType"], ids),
             }
     return t
 
@@ -325,15 +329,18 @@ def _nested_renames(t: Any) -> list[str]:
     return out
 
 
-def _physical_field(f: dict[str, Any]) -> dict[str, Any]:
+def _physical_field(f: dict[str, Any], ids: bool) -> dict[str, Any]:
     """One logical schemaString field -> its physical twin (the name the
-    parquet files actually carry), columnMapping metadata stripped."""
+    parquet files actually carry), columnMapping metadata stripped; with
+    ``ids`` (mode 'id'), the ``parquet.field.id`` Spark resolves the
+    column by."""
     md = f.get("metadata") or {}
+    fid = md.get("delta.columnMapping.id")
     return {
         "name": md.get(_PHYSICAL, f["name"]),
-        "type": _physical_type(f["type"]),
+        "type": _physical_type(f["type"], ids),
         "nullable": f.get("nullable", True),
-        "metadata": {},
+        "metadata": {"parquet.field.id": int(fid)} if ids and fid is not None else {},
     }
 
 
@@ -344,9 +351,8 @@ def _entry(add: dict[str, Any], pcols: list[str]) -> dict[str, Any]:
     pv = add.get("partitionValues") or {}
     entry: dict[str, Any] = {
         "path": rel,
-        # lakelite writes each commit under its own data/<commit> dir, the
-        # partition-discovery base of its scan; another engine's file
-        # scans from the table root
+        # lakelite writes each commit under its own data/<commit> dir,
+        # the unit vacuum deletes; another engine's file has none
         "commit": "/".join(seg[:2])
         if len(seg) > 2 and seg[0] == "data" and "=" not in seg[1]
         else "",
@@ -372,65 +378,63 @@ def snapshot(path: str, version: int | None = None) -> dict[str, Any]:
     return _manifest(path, *_state(path, version))
 
 
+def states(path: str) -> Iterator[tuple]:
+    """The state (as :func:`_state` returns it) of every readable
+    version, oldest first, in ONE pass over the log: each JSON commit is
+    applied to the state of the version before it (a version after a
+    gap in the log starts from its checkpoint).  The yielded dicts are
+    the replay's own, updated in place by the next version."""
+    commits = set(_listing(path)[0])
+    versions = readable_versions(path)
+    i = 0
+    while i < len(versions):
+        state = _state(path, versions[i])
+        yield state
+        j = i + 1
+        while j < len(versions) and versions[j] == versions[j - 1] + 1 and versions[j] in commits:
+            j += 1
+        if j > i + 1:
+            yield from _replay_each(path, versions[i] + 1, versions[j - 1], state[1:5])
+        i = j
+
+
 def snapshots(path: str) -> Iterator[dict[str, Any]]:
     """The lakelite manifest of every readable version, oldest first, in
-    ONE pass over the log: each JSON commit is applied to the state of
-    the version before it (a version after a gap in the log starts from
-    its checkpoint)."""
-    commits = set(_listing(path)[0])
-    state = None
-    for v in readable_versions(path):
-        if state is not None and state[0] == v - 1 and v in commits:
-            state = next(_replay_each(path, v, v, state[1:5]))
-        else:
-            state = _state(path, v)
-        yield _manifest(path, *state)
+    one pass over the log (:func:`states`)."""
+    for v, adds, meta, protocol, txns, info in states(path):
+        yield _manifest(path, v, dict(adds), meta, protocol, dict(txns), info)
 
 
 def _manifest(
     path: str, v: int, adds: dict, meta: dict, protocol: dict, txns: dict, info: dict
 ) -> dict[str, Any]:
     """One table state as a lakelite manifest: ``version``, ``mode``, ``schema`` (Spark JSON in
-    PHYSICAL names), ``partition_cols``, ``files`` (``path``, ``commit``
+    PHYSICAL names: the scan schema), ``partition_cols``, ``files`` (``path``, ``commit``
     — the ``data/<commit>`` dir lakelite wrote the file to, ``""`` for
     another engine's —, ``partition_values`` and, when known, ``stats``,
     ``dv`` and ``empty``), ``stats_cols``, ``txns``, ``log2phys`` (a
-    name-mapped table's logical -> physical columns, else empty) and the
-    raw ``meta``/``protocol``/``adds`` the next commit builds on.
+    column-mapped table's logical -> physical columns, else empty),
+    ``mapping`` (the column-mapping mode) and the raw
+    ``meta``/``protocol``/``adds`` the next commit builds on.
 
-    Lakelite reads a column-mapped table by physical name, so mapping
-    mode 'id' (field-id resolution) and NESTED physical renames (the
-    translation is top-level only — physical inner names would be a
-    silent wrong answer) are refused here; ``read_delta_log`` reads
-    both."""
+    A mode-'name' field without a physical name is refused; a mode-'id'
+    field without a field id is refused by the read that would resolve
+    it (``lakehouse_shim._scan``), and writes refuse mode 'id'
+    altogether (:func:`check_writable`)."""
     cm_mode = _check_readable(protocol, meta)
     fields = json.loads(meta["schemaString"]).get("fields", [])
     log2phys: dict[str, str] = {}
     schema = meta["schemaString"]
-    if cm_mode == "id":
-        raise InvalidArgument(
-            f"cannot use column-mapped Delta table at {path!r} (mode 'id'): "
-            "only mode 'name' is supported (mode 'id' resolves parquet "
-            "columns by field id, which lakelite's writers don't stamp); "
-            "read_delta_log reads it"
-        )
-    if cm_mode == "name":
+    if cm_mode in ("name", "id"):
         for f in fields:
             pn = (f.get("metadata") or {}).get(_PHYSICAL)
-            if not pn:
+            if not pn and cm_mode == "name":
                 raise InvalidArgument(
                     f"column-mapped table field {f['name']!r} carries no {_PHYSICAL}"
                 )
-            nested = _nested_renames(f["type"])
-            if nested:
-                raise InvalidArgument(
-                    f"column-mapped table field {f['name']!r} renames NESTED "
-                    f"fields (e.g. {nested[0]}): only top-level name mapping "
-                    "is supported"
-                )
-            log2phys[f["name"]] = pn
+            log2phys[f["name"]] = pn or f["name"]
         schema = T.StructType.fromJson(
-            {"type": "struct", "fields": [_physical_field(f) for f in fields]}
+            {"type": "struct", "fields": [_physical_field(f, cm_mode == "id") for f in fields]}
         ).json()
     config = meta.get("configuration") or {}
     pcols = [log2phys.get(c, c) for c in meta.get("partitionColumns") or []]
@@ -445,6 +449,7 @@ def _manifest(
         ],
         "txns": txns,
         "log2phys": log2phys,
+        "mapping": cm_mode,
         "meta": meta,
         "protocol": protocol,
         "adds": adds,
@@ -458,9 +463,9 @@ def check_writable(man: dict[str, Any]) -> None:
     columns (none is enforced or filled here), ``delta.enableChangeDataFeed``
     (no ``_change_data`` files are written), ``delta.appendOnly`` (merge
     and delete would break it), writer features beyond deletionVectors
-    and name-mode columnMapping, and data files at absolute paths or
-    outside a hive ``k=v`` layout (lakelite scans recover partition
-    values from the directory names).  A writer-7 name-mapped table may
+    and name-mode columnMapping, column mapping mode 'id' and NESTED
+    physical renames (writes map top-level names only), and data files
+    at absolute paths.  A writer-7 name-mapped table may
     list the legacy writer-5 features, the set Delta lists when it
     upgrades such a table for deletion vectors; the checks above refuse
     any of them a table actually uses.  ``man`` is a :func:`snapshot`;
@@ -468,7 +473,20 @@ def check_writable(man: dict[str, Any]) -> None:
     data file."""
     meta, protocol = man["meta"], man["protocol"]
     config = meta.get("configuration") or {}
+    if man["mapping"] == "id":
+        raise InvalidArgument(
+            "cannot write column-mapped Delta table (mode 'id'): only mode "
+            "'name' is supported (mode 'id' resolves parquet columns by "
+            "field id, which lakelite's writers don't stamp)"
+        )
     for f in json.loads(meta["schemaString"]).get("fields", []):
+        nested = _nested_renames(f["type"]) if man["mapping"] == "name" else []
+        if nested:
+            raise InvalidArgument(
+                f"cannot write column-mapped table whose field {f['name']!r} "
+                f"renames NESTED fields (e.g. {nested[0]}): lakelite writes map "
+                "top-level names only"
+            )
         used = [
             k
             for k in f.get("metadata") or {}
@@ -524,16 +542,6 @@ def check_writable(man: dict[str, Any]) -> None:
         if os.path.isabs(e["path"]):
             raise InvalidArgument(
                 f"cannot write table with absolute file path {e['path']!r}"
-            )
-        segs = e["path"].split("/")
-        missing = [
-            k for k in e["partition_values"] if not any(s.startswith(f"{k}=") for s in segs)
-        ]
-        if missing:
-            raise InvalidArgument(
-                f"cannot write non-hive-layout partitioned table: file "
-                f"{e['path']!r} carries partition values for {missing} only in "
-                "the log"
             )
 
 
@@ -1281,118 +1289,13 @@ def read_delta_log(
     tables lakelite writes AND on tables written elsewhere by delta-rs /
     Delta Spark, with reader protocol 1-3.  The newest parquet
     CHECKPOINT at or below the requested version seeds the replay, and
-    only the JSON commits after it are applied.  The scans take
-    their schema from the ``metaData`` action (physical names in
-    column-mapping mode 'name', parquet field ids in mode 'id'), so
-    building the read runs no Spark job, and files that predate a
-    column read it as null."""
-    v, adds, meta, protocol, _txns, _info = _state(path, version)
-    cm_mode = _check_readable(protocol, meta)
-    schema_json = json.loads(meta["schemaString"])
-    schema = T.StructType.fromJson(schema_json)
-    pcols = list(meta.get("partitionColumns") or [])
-    # column mapping: files store PHYSICAL column names.  'name' mode
-    # scans by physical name and renames back; 'id' mode resolves the
-    # columns by parquet field id (the files carry ids equal to
-    # delta.columnMapping.id).  phys stays populated in BOTH modes
-    # (partitionValues are keyed by physical name whenever column
-    # mapping is on).
-    phys: dict[str, str] = {}
-    read_fields: list[T.StructField] = []
-    for fj, f in zip(schema_json.get("fields", []), schema.fields):
-        md = fj.get("metadata") or {}
-        if md.get("delta.columnMapping.physicalName"):
-            phys[f.name] = md["delta.columnMapping.physicalName"]
-        if cm_mode == "id" and md.get("delta.columnMapping.id") is None:
-            raise InvalidArgument(
-                f"columnMapping mode 'id' but field {f.name!r} carries "
-                "no delta.columnMapping.id"
-            )
-        if f.name in pcols:
-            continue
-        if cm_mode == "id":
-            read_fields.append(
-                T.StructField(
-                    f.name, f.dataType, True,
-                    {"parquet.field.id": int(md["delta.columnMapping.id"])},
-                )
-            )
-        elif cm_mode == "name":
-            read_fields.append(T.StructField.fromJson(_physical_field(fj)))
-        else:
-            read_fields.append(f)
-    read_schema = T.StructType(read_fields)
-    if cm_mode == "id":
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    root = _local(path)
-    from aws_sdk_pandas_spark import lakehouse_shim as _ls
+    only the JSON commits after it are applied.  The plan is lakelite's
+    one scan builder (``lakehouse_shim._scan``) in logical names: the
+    scans take their schema from the ``metaData`` action (physical names
+    under column mapping, parquet field ids in mode 'id'), so building
+    the read runs no Spark job, and files that predate a column read it
+    as null."""
+    from aws_sdk_pandas_spark import lakehouse_shim
 
-    if not adds:
-        df = _ls._driver_frame(spark, [], schema)
-        return df.select(*columns) if columns else df
-
-    # group files by partition tuple: partition values live ONLY in the
-    # log (protocol rule), so they are injected as typed literals per
-    # group — one scan per distinct partition tuple
-    groups: dict[tuple, list[str]] = {}
-    dv_entries: list[dict[str, Any]] = []
-    for a in adds.values():
-        pv = a.get("partitionValues") or {}
-        # column mapping keys partitionValues by PHYSICAL name; accept
-        # either so plain tables keep working
-        key = tuple(
-            pv[c] if c in pv else pv.get(phys.get(c, c)) for c in pcols
-        )
-        rel = urllib.parse.unquote(a["path"])
-        abs_file = rel if os.path.isabs(rel) else os.path.join(root, rel)
-        groups.setdefault(key, []).append(abs_file)
-        if a.get("deletionVector"):
-            dv_entries.append({"path": abs_file, "dv": a["deletionVector"]})
-
-    missing = [f for files in groups.values() for f in files if not os.path.exists(f)]
-    if missing:
-        raise InvalidArgument(
-            f"Delta version {v} at {path!r} references {len(missing)} missing "
-            f"data file(s) (vacuumed away or external), e.g. {sorted(missing)[:2]}"
-        )
-
-    # deletion vectors decode ON EXECUTORS (the driver ships O(files)
-    # descriptors, never the row-index lists) and drop via one anti-join
-    # — broadcast when small, shuffled past the cardinality threshold
-    deletes, dv_card = _ls._dv_deletes_df(spark, root, dv_entries)
-
-    parts = []
-    for key, files in sorted(
-        groups.items(), key=lambda kv: tuple("" if x is None else str(x) for x in kv[0])
-    ):
-        # the metaData schema is authoritative: the scan takes it, runs
-        # no footer-inference job, and files that predate a column read
-        # it as null
-        part = _ls._scan_files(spark, sorted(files), read_schema)
-        if deletes is not None:
-            part = part.withColumn("__fp", F.col("_metadata.file_path")).withColumn(
-                "__ri", F.col("_metadata.row_index")
-            )
-        if cm_mode == "name":
-            for logical, physical in phys.items():
-                if physical in part.columns and logical not in part.columns:
-                    part = part.withColumnRenamed(physical, logical)
-        for c, val in zip(pcols, key):
-            dt = schema[c].dataType
-            part = part.withColumn(
-                c, F.lit(val).cast(dt) if val is not None else F.lit(None).cast(dt)
-            )
-        sel = [f.name for f in schema.fields]
-        if deletes is not None:
-            sel += ["__fp", "__ri"]
-        parts.append(part.select(*sel))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    if deletes is not None:
-        # ONE anti-join after the union so the DV decode runs once, not
-        # once per partition-tuple scan
-        df = _ls._drop_dv_rows(df, deletes, dv_card, "__fp", "__ri").drop(
-            "__fp", "__ri"
-        )
+    df = lakehouse_shim._scan(spark, path, snapshot(path, version), logical=True)
     return df.select(*columns) if columns else df

@@ -597,11 +597,11 @@ def export_snapshot(path: str, manifest: dict[str, Any]) -> bool:
         have = set(ls._versions(path))
         if not all(i in have for i in range(v)):
             return False
-        for m in dl.snapshots(path):
-            if m["version"] >= v:
+        for state in dl.states(path):
+            if state[0] >= v:
                 break
-            if not os.path.exists(_metadata_file(path, m["version"])):
-                export_snapshot(path, m)
+            if not os.path.exists(_metadata_file(path, state[0])):
+                export_snapshot(path, dl._manifest(path, *state))
 
     root = _local(path)
     d = _meta_dir(path)
@@ -1086,13 +1086,15 @@ def expire_snapshots(path: str, *, keep_last: int = 1) -> dict[str, int]:
 
 def export_table(path: str) -> int:
     """Backfill Iceberg metadata for every lakelite version not yet
-    exported; returns the number of snapshots written (the
-    ``convert_to_iceberg`` backend)."""
+    exported, building only those versions' manifests; returns the
+    number of snapshots written (the ``convert_to_iceberg`` backend)."""
     from aws_sdk_pandas_spark import delta_log as dl
 
     have = set(iceberg_versions(path))
     return sum(
-        export_snapshot(path, m) for m in dl.snapshots(path) if m["version"] not in have
+        export_snapshot(path, dl._manifest(path, *state))
+        for state in dl.states(path)
+        if state[0] not in have
     )
 
 

@@ -57,9 +57,11 @@ source keys — both-rewrote-a-file, schema changes, and key-overlapping
 concurrent adds raise (Delta's ConcurrentAppend/ConcurrentDeleteRead
 contract).  Plain ``overwrite`` conflicts still raise rather than
 rebase (a blind overwrite racing anything is a user-intent question,
-not a mechanical one); the read
-plan unions one parquet scan per surviving commit dir (bounded by commit
-count — run ``compact`` on long-lived tables); file skipping uses
+not a mechanical one); every read
+plan comes from one builder (:func:`_scan`) over the log's live files:
+one parquet scan for an unpartitioned table, one per commit dir of a
+hive layout, one per partition tuple of any other layout (bounded by
+commit count — run ``compact`` on long-lived tables); file skipping uses
 partition values plus opt-in per-file min/max stats (``stats_cols`` /
 ``predicates`` / ``compact(zorder_by=...)``).  Production deployments should put
 the real jars on the classpath; every entry point in ``lakehouse``
@@ -68,6 +70,7 @@ prefers the native path when the probe finds one.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -115,13 +118,6 @@ def _to_physical(df: DataFrame, log2phys: dict[str, str]) -> DataFrame:
     return df
 
 
-def _to_logical(df: DataFrame, log2phys: dict[str, str]) -> DataFrame:
-    for logical, physical in log2phys.items():
-        if physical in df.columns:
-            df = df.withColumnRenamed(physical, logical)
-    return df
-
-
 def _phys_names(names: list[str] | None, log2phys: dict[str, str]) -> list[str] | None:
     return None if names is None else [log2phys.get(n, n) for n in names]
 
@@ -166,6 +162,10 @@ def _commit_manifest(path: str, manifest: dict[str, Any]) -> None:
             raise
 
 
+def _hive_value(v: str) -> str | None:
+    return None if v == _HIVE_NULL else urllib.parse.unquote(v)
+
+
 def _parse_partition_values(rel_file: str, commit_rel: str) -> dict[str, str | None]:
     """Recover hive partition values from the dir segments between the
     commit dir and the leaf file."""
@@ -177,7 +177,7 @@ def _parse_partition_values(rel_file: str, commit_rel: str) -> dict[str, str | N
         if "=" not in seg:
             continue
         k, v = seg.split("=", 1)
-        vals[k] = None if v == _HIVE_NULL else urllib.parse.unquote(v)
+        vals[k] = _hive_value(v)
     return vals
 
 
@@ -238,30 +238,118 @@ def _scan_files(
     return reader.parquet(*files)
 
 
-def _scan_commits(
-    spark: SparkSession,
-    root: str,
-    entries: list[dict[str, Any]],
-    schema: T.StructType,
-    meta: dict[str, str] | None = None,
-) -> DataFrame:
-    """Scan manifest entries, one :func:`_scan_files` per commit dir
-    (the commit dir is the partition-discovery base), unioned by name.
-    ``meta`` maps output column -> ``_metadata`` field, added per scan
-    because ``_metadata`` does not survive a union."""
-    by_commit: dict[str, list[str]] = {}
+def _scan_groups(
+    entries: list[dict[str, Any]], pcols: list[str]
+) -> list[tuple[str | None, tuple, list[dict[str, Any]]]]:
+    """Group a snapshot's files into scans: ``(base, values, entries)``.
+    An unpartitioned table is one scan.  A file whose relative path ends
+    in the hive ``k=v`` dirs of its own log partition values (parsed as
+    :func:`_parse_partition_values` does) joins the scan of the dir above
+    them, its partition-discovery ``base`` — one scan per lakelite commit
+    dir.  Every other file (a flat or random-prefix layout) joins the
+    scan of its partition tuple, whose ``values`` are injected."""
+    groups: dict[tuple, list[dict[str, Any]]] = {}
     for e in entries:
-        by_commit.setdefault(e["commit"], []).append(os.path.join(root, e["path"]))
+        pv = e["partition_values"]
+        dirs = e["path"].split("/")[:-1]
+        n = len(dirs) - len(pcols)
+        key: tuple = (None, tuple(pv.get(c) for c in pcols))
+        if pcols and n >= 0 and all(
+            k == c and eq and _hive_value(v) == pv.get(c)
+            for c, (k, eq, v) in zip(pcols, (s.partition("=") for s in dirs[n:]))
+        ):
+            key = ("/".join(dirs[:n]), ())
+        groups.setdefault(key, []).append(e)
+    return [(*k, g) for k, g in sorted(groups.items(), key=lambda kv: repr(kv[0]))]
+
+
+def _nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every field, element and value nullable and no field
+    metadata: the type a file scan reads."""
+    if isinstance(t, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType)) for f in t.fields])
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType))
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType))
+    return t
+
+
+def _scan(
+    spark: SparkSession,
+    path: str,
+    man: dict[str, Any],
+    entries: list[dict[str, Any]] | None = None,
+    *,
+    meta: dict[str, str] | None = None,
+    logical: bool = False,
+) -> DataFrame:
+    """The one read plan of snapshot ``man``: the live rows of
+    ``entries`` (default: every file), one :func:`_scan_files` per
+    :func:`_scan_groups` group, unioned.  ``meta`` maps output column ->
+    ``_metadata`` field, added per scan because ``_metadata`` does not
+    survive a union.  Deletion vectors decode on executors
+    (:func:`_dv_deletes_df`) and drop with ONE anti-join after the union.
+    The columns come out in the table schema's order, then ``meta``;
+    with ``logical``, a column-mapped table's physical columns are
+    renamed to their logical names and cast to their logical types (a
+    struct cast renames nested fields by position), in one projection."""
+    root = _local(path)
+    entries = [e for e in (man["files"] if entries is None else entries) if not e.get("empty")]
+    schema = _table_schema(man)
+    meta = dict(meta or {})
+    cols: list[Any] = schema.fieldNames()
+    m = man["log2phys"]
+    if logical and m:
+        cols = []
+        for f in T.StructType.fromJson(json.loads(man["meta"]["schemaString"])).fields:
+            c, want = F.col(m[f.name]), _nullable(f.dataType)
+            if want != _nullable(schema[m[f.name]].dataType):
+                c = c.cast(want)
+            cols.append(c.alias(f.name))
+    out = cols + list(meta)
+    if man.get("mapping") == "id":
+        phys2log = {p: l for l, p in m.items()}  # noqa: E741
+        bare = [phys2log[f.name] for f in schema.fields if "parquet.field.id" not in f.metadata]
+        if bare:
+            raise InvalidArgument(
+                f"columnMapping mode 'id' but field {bare[0]!r} carries no "
+                "delta.columnMapping.id"
+            )
+        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    if not entries:
+        types = {"file_path": "string", "row_index": "bigint"}
+        df = _driver_frame(spark, [], schema)
+        return df.select(*cols, *[F.lit(None).cast(types[f]).alias(n) for n, f in meta.items()])
+    missing = [e["path"] for e in entries if not os.path.exists(os.path.join(root, e["path"]))]
+    if missing:
+        raise InvalidArgument(
+            f"Delta version {man['version']} at {path!r} references {len(missing)} "
+            f"missing data file(s) (vacuumed away or external), e.g. {sorted(missing)[:2]}"
+        )
+    deletes, dv_card = _dv_deletes_df(spark, root, entries)
+    if deletes is not None:
+        have = {f: n for n, f in meta.items()}
+        dv_cols = [have.get("file_path", "__dv_fp"), have.get("row_index", "__dv_ri")]
+        meta.update(zip(dv_cols, ("file_path", "row_index")))
+    pcols = man["partition_cols"]
+    data = T.StructType([f for f in schema.fields if f.name not in pcols])
     parts = []
-    for commit_rel, files in sorted(by_commit.items()):
-        part = _scan_files(spark, files, schema, os.path.join(root, commit_rel))
-        for name, field in (meta or {}).items():
-            part = part.withColumn(name, F.col(f"_metadata.{field}"))
-        parts.append(part)
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
+    for base, values, group in _scan_groups(entries, pcols):
+        files = [os.path.join(root, e["path"]) for e in group]
+        if base is None:
+            part = _scan_files(spark, files, data)
+        else:
+            part = _scan_files(spark, files, schema, os.path.join(root, base))
+        lits = {c: F.lit(v).cast(schema[c].dataType).alias(c) for c, v in zip(pcols, values)}
+        parts.append(part.select(
+            *[lits.get(n, n) for n in schema.fieldNames()],
+            *[F.col(f"_metadata.{f}").alias(n) for n, f in meta.items()],
+        ))
+    df = functools.reduce(DataFrame.union, parts)
+    if deletes is not None:
+        df = _drop_dv_rows(df, deletes, dv_card, *dv_cols)
+    return df.select(*out)
 
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -617,10 +705,10 @@ def read(
     """Snapshot (or time-travel) read.  ``partition_filter`` prunes the
     snapshot's files on the DRIVER before any scan is planned — the log
     replaces a storage LIST + footer reads, exactly the benefit the real
-    formats buy.  One parquet scan per surviving commit dir (partition
-    columns recovered via basePath discovery), unioned by name.  Every
-    scan takes its schema from the log, so building the read runs no
-    Spark job, and files that predate a column read it as null.
+    formats buy.  The plan is :func:`_scan`'s: partition values come
+    from the log, columns in the table schema's order.  Every scan takes
+    its schema from the log, so building the read runs no Spark job, and
+    files that predate a column read it as null.
 
     ``predicates`` is a list of ``(col, op, value)`` with op in
     ``< <= > >= =``: files whose min/max stats PROVE no match are
@@ -628,99 +716,49 @@ def read(
     also applied as a residual row filter, so results are exact even
     for files without stats."""
     man = _read_manifest(path, version)
+    # a name-mapped table's log keys partition values and stats by
+    # PHYSICAL name; the public read speaks logical
     m = man["log2phys"]
-    if m:
-        # a name-mapped table runs on PHYSICAL names internally; the
-        # public read speaks logical — translate inputs here, outputs at
-        # the end
-        columns = _phys_names(columns, m)
-        if predicates:
-            predicates = [(m.get(c, c), op, val) for c, op, val in predicates]
-        if partition_filter is not None:
-            phys2log = {p: l for l, p in m.items()}  # noqa: E741
-            user_filter = partition_filter
-            partition_filter = lambda pv: user_filter(  # noqa: E731
-                {phys2log.get(k, k): v2 for k, v2 in pv.items()}
-            )
-    df = _scan_snapshot(
-        spark, path, man, columns=columns, partition_filter=partition_filter,
-        predicates=predicates, with_file_path=with_file_path,
-    )
-    return _to_logical(df, m)
-
-
-def _scan_snapshot(
-    spark: SparkSession,
-    path: str,
-    man: dict[str, Any],
-    *,
-    columns: list[str] | None = None,
-    partition_filter: Callable[[dict[str, str | None]], bool] | None = None,
-    predicates: list[tuple[str, str, Any]] | None = None,
-    with_file_path: bool = False,
-) -> DataFrame:
-    """The read plan of snapshot ``man`` in its PHYSICAL column names
-    (:func:`read`'s plan; the write paths call it with the snapshot
-    they already replayed)."""
-    root = _local(path)
+    phys2log = {p: l for l, p in m.items()}  # noqa: E741
     entries = man["files"]
     if partition_filter is not None:
-        entries = [e for e in entries if partition_filter(e["partition_values"])]
-    if predicates:
-        for _c, op, _v2 in predicates:
-            if op not in _SKIP_OPS:
-                raise InvalidArgument(f"unsupported predicate op {op!r}")
-    # an empty file (numRecords 0 in the log) never contributes a row
-    entries = [e for e in entries if _entry_may_match(e, predicates or [])]
-
-    schema = _table_schema(man)
-    if not entries:
-        if with_file_path:
-            schema = schema.add("__lakelite_file", T.StringType())
-        df = _driver_frame(spark, [], schema)
-        return df.select(*columns) if columns else df
-
-    # deletion vectors (MoR deletes): the driver ships O(files) DV
-    # descriptors; executors decode each file's bitmap into (file,
-    # row index) rows, dropped with ONE anti-join after the union
-    # (broadcast when small, shuffled past _DV_BROADCAST_MAX_ROWS —
-    # the driver never materializes the deleted-row list)
-    dv_deletes, dv_card = _dv_deletes_df(spark, root, entries)
-    meta: dict[str, str] = {}
-    if with_file_path:
-        # RAW URI as Spark reports it — matching against manifest
-        # paths happens driver-side with real URI decoding, never by
-        # string surgery on the column (percent-encoded or relative
-        # paths silently failed to match otherwise)
-        meta["__lakelite_file"] = "file_path"
-    if dv_deletes is not None:
-        meta.update(__dv_fp="file_path", __dv_ri="row_index")
-    df = _scan_commits(spark, root, entries, schema, meta)
-    if dv_deletes is not None:
-        df = _drop_dv_rows(df, dv_deletes, dv_card, "__dv_fp", "__dv_ri").drop(
-            "__dv_fp", "__dv_ri"
+        entries = [
+            e for e in entries
+            if partition_filter({phys2log.get(k, k): v for k, v in e["partition_values"].items()})
+        ]
+    for _c, op, _v in predicates or []:
+        if op not in _SKIP_OPS:
+            raise InvalidArgument(f"unsupported predicate op {op!r}")
+    skip = [(m.get(c, c), op, val) for c, op, val in predicates or []]
+    entries = [e for e in entries if _entry_may_match(e, skip)]
+    df = _scan(
+        spark, path, man, entries, logical=True,
+        # RAW URI as Spark reports it — matching against manifest paths
+        # happens driver-side with real URI decoding
+        meta={"__lakelite_file": "file_path"} if with_file_path else None,
+    )
+    for c, op, val in predicates or []:
+        col = F.col(c)
+        df = df.where(
+            {"<": col < val, "<=": col <= val, ">": col > val,
+             ">=": col >= val, "=": col == val}[op]
         )
-    if predicates:
-        for c, op, val in predicates:
-            col = F.col(c)
-            df = df.where(
-                {"<": col < val, "<=": col <= val, ">": col > val,
-                 ">=": col >= val, "=": col == val}[op]
-            )
     return df.select(*columns) if columns else df
 
 
 def history(path: str) -> list[dict[str, Any]]:
     """The DESCRIBE HISTORY analog: one row per readable version, from
-    one pass over the log (:func:`delta_log.snapshots`)."""
+    one pass over the log that builds no manifest
+    (:func:`delta_log.states`); partition columns are the log's
+    (logical) names."""
     return [
         {
-            "version": m["version"],
-            "mode": m["mode"],
-            "num_files": len(m["files"]),
-            "partition_cols": m["partition_cols"],
+            "version": v,
+            "mode": (info.get("operationParameters") or {}).get("mode", ""),
+            "num_files": len(adds),
+            "partition_cols": list(meta.get("partitionColumns") or []),
         }
-        for m in dl.snapshots(path)
+        for v, adds, meta, _protocol, _txns, info in dl.states(path)
     ]
 
 
@@ -746,7 +784,7 @@ def _touched_files(
     if man is None:
         man = _read_manifest(path)
     root = _local(path)
-    snap = _scan_snapshot(spark, path, man, with_file_path=True)
+    snap = _scan(spark, path, man, meta={"__lakelite_file": "file_path"})
     src_keys = source.select(*keys).distinct()
     hit = (
         snap.join(F.broadcast(src_keys), _key_cond(snap, src_keys, keys, match_nulls), "leftsemi")
@@ -885,26 +923,6 @@ def _drop_dv_rows(
     )
 
 
-def _mor_scan(
-    spark: SparkSession, root: str, man: dict[str, Any], entries: list[dict[str, Any]]
-) -> DataFrame:
-    """Per-commit scan of the given entries of manifest ``man`` with
-    ``__f`` (raw file URI) and ``__ri`` (row index) columns, MINUS rows
-    already deleted by the entries' existing deletion vectors — the
-    live-row view the MoR write paths must reason over.  Without the DV
-    anti-join, a previously-deleted 'ghost' row re-enters the
-    precombine window and can out-rank (silently drop) a source row
-    that should be inserted."""
-    scan = _scan_commits(
-        spark, root, entries, _table_schema(man),
-        {"__f": "file_path", "__ri": "row_index"},
-    )
-    deletes, card = _dv_deletes_df(spark, root, entries)
-    if deletes is not None:
-        scan = _drop_dv_rows(scan, deletes, card, "__f", "__ri")
-    return scan
-
-
 def _write_dvs_distributed(
     spark: SparkSession,
     root: str,
@@ -1031,7 +1049,7 @@ def _commit_or_rebase(
                 )
             added = [e for e in winner["files"] if e["path"] not in base_paths]
             if added and source_keys is not None and keys:
-                adf = _scan_commits(spark, _local(path), added, _table_schema(winner))
+                adf = _scan(spark, path, winner, added)
                 hit = (
                     adf.join(
                         F.broadcast(source_keys),
@@ -1126,7 +1144,7 @@ def merge(
 
     if merge_condition == "ignore":
         # insert-only fast path: no existing file read or rewritten
-        snap_keys = _scan_snapshot(spark, path, man, columns=keys).distinct()
+        snap_keys = _scan(spark, path, man).select(*keys).distinct()
         inserts = source.join(
             snap_keys, _key_cond(source, snap_keys, keys, match_nulls), "left_anti"
         )
@@ -1291,9 +1309,9 @@ def _merge_mor(
     matched target rows ∪ source rows) follows the SAME
     greatest-version-wins / source-wins-ties rule as the CoW path, so
     a target row that out-versions the source survives untouched and
-    that source row is dropped.  The scan excludes rows already
-    deleted by existing DVs (``_mor_scan``) — a ghost row must not
-    out-rank a re-upsert of its own key — and the per-file DV
+    that source row is dropped.  The scan (:func:`_scan`) excludes rows
+    already deleted by existing DVs — a ghost row must not out-rank a
+    re-upsert of its own key — and the per-file DV
     union/write runs on executors (``_write_dvs_distributed``): the
     driver handles O(files) descriptors, never O(deleted rows)."""
     from pyspark.sql import Window
@@ -1310,7 +1328,7 @@ def _merge_mor(
     dv_results: dict[str, tuple[dict[str, Any], int]] = {}
     to_write = src
     if touched:
-        scan = _mor_scan(spark, root, man, touched)
+        scan = _scan(spark, path, man, touched, meta={"__f": "file_path", "__ri": "row_index"})
         matched = scan.join(
             F.broadcast(src_keys),
             _key_cond(scan, src_keys, keys, match_nulls),
@@ -1398,8 +1416,8 @@ def _delete_mor(
     indexes into its deletion vector (one Delta-layout DV file per
     touched file under ``<table>/_dv/``) and commit a manifest that
     keeps every data file by reference.  The matching (file, row_index)
-    pairs stay distributed end-to-end: ``_mor_scan`` drops rows already
-    in a DV, and the per-file union/serialize/write runs on executors —
+    pairs stay distributed end-to-end: the scan (:func:`_scan`) drops
+    rows already in a DV, and the per-file union/serialize/write runs on executors —
     the driver handles O(files) descriptors, never O(deleted rows)."""
     root = _local(path)
     touched, untouched, _rewrite, raw_by_path = _touched_files(
@@ -1410,7 +1428,7 @@ def _delete_mor(
     kept_touched: list[dict[str, Any]] = []
     rows_deleted = 0
     if touched:
-        scan = _mor_scan(spark, root, man, touched)
+        scan = _scan(spark, path, man, touched, meta={"__f": "file_path", "__ri": "row_index"})
         hits = scan.join(
             F.broadcast(src_keys),
             _key_cond(scan, src_keys, keys, match_nulls),
@@ -1465,8 +1483,9 @@ def compact(
 ) -> None:
     """OPTIMIZE analog: rewrite the current snapshot as one commit so the
     read plan collapses back to a single parquet scan.  Run periodically
-    on long-lived tables — the shim's per-commit union is the one read
-    cost the real formats don't pay.
+    on long-lived partitioned tables — their one scan per commit dir
+    (:func:`_scan_groups`) is the one read cost the real formats don't
+    pay.
 
     ``zorder_by`` is the OPTIMIZE ZORDER BY analog: rows are clustered on
     the interleaved-bit Morton key of the named (numeric) columns
@@ -1478,7 +1497,7 @@ def compact(
     man = _read_manifest(path)
     dl.check_writable(man)
     zorder_by = _phys_names(zorder_by, man["log2phys"])
-    df = _scan_snapshot(spark, path, man)
+    df = _scan(spark, path, man)
     stats_cols = list(man["stats_cols"])
     if zorder_by:
         from aws_sdk_pandas_spark.functions.zorder import zorder_key

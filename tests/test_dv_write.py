@@ -847,9 +847,8 @@ def test_convert_from_delta_refusals(spark, tmp_path):
     )
     with pytest.raises(Exception, match="only mode 'name'"):
         dl.convert_from_delta(p1b)
-    # name-mode with a NESTED physical rename: refused (both this repo's
-    # readers translate top-level only — exposing physical inner names
-    # would be a silent wrong answer)
+    # name-mode with a NESTED physical rename: refused (lakelite writes
+    # map top-level names only; reads map nested names too)
     p1c = str(tmp_path / "cmnest")
     os.makedirs(os.path.join(p1c, "_delta_log"))
     nested_schema = json.dumps({"type": "struct", "fields": [
@@ -889,30 +888,6 @@ def test_convert_from_delta_refusals(spark, tmp_path):
     )
     with pytest.raises(Exception, match="writer"):
         dl.convert_from_delta(p3)
-    # non-hive layout with partition columns: values live only in the log
-    p4 = str(tmp_path / "flat")
-    os.makedirs(os.path.join(p4, "_delta_log"))
-    df = _df1(spark, [(1, 10)], "k int, v int")
-    df.write.parquet(os.path.join(p4, "flat0"))
-    f = next(x for x in os.listdir(os.path.join(p4, "flat0"))
-             if x.endswith(".parquet"))
-    schema_str = json.dumps({"type": "struct", "fields": [
-        {"name": "k", "type": "integer", "nullable": True, "metadata": {}},
-        {"name": "v", "type": "integer", "nullable": True, "metadata": {}},
-        {"name": "part", "type": "string", "nullable": True, "metadata": {}},
-    ]})
-    with open(os.path.join(p4, "_delta_log", f"{0:020d}.json"), "w") as fh:
-        for a in [
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-            {"metaData": {"id": "x", "format": {"provider": "parquet", "options": {}},
-                          "schemaString": schema_str,
-                          "partitionColumns": ["part"], "configuration": {}}},
-            {"add": {"path": f"flat0/{f}", "partitionValues": {"part": "7"},
-                     "size": 1, "modificationTime": 0, "dataChange": True}},
-        ]:
-            fh.write(json.dumps(a) + "\n")
-    with pytest.raises(Exception, match="non-hive"):
-        dl.convert_from_delta(p4)
     # already a lakelite table
     p5 = str(tmp_path / "ll")
     _mk_table(spark, p5, n=4, parts=1)

@@ -301,3 +301,158 @@ def test_history_is_one_pass_that_matches_each_snapshot(spark, tmp_path):
         assert [h["version"] for h in shim.history(p)] == shim._versions(p)
     assert [h["mode"] for h in shim.history(p)][-3:] == ["append", "delete", "overwrite"]
     assert [h["num_files"] for h in shim.history(p)][-3:] == [12, 12, 1]
+
+
+def _md(fid, phys):
+    return {"delta.columnMapping.id": fid, "delta.columnMapping.physicalName": phys}
+
+
+def test_nested_renames_read_logical_names(spark, tmp_path):
+    # a name-mapped table whose struct, array<struct> and map<string,
+    # struct> columns rename their inner fields: both readers return the
+    # logical names at every level, and writes stay refused
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "t")
+    os.makedirs(p)
+    pq.write_table(pa.table({
+        "col-k": pa.array([1, 2], pa.int64()),
+        "col-s": pa.array([{"col-c": 10}, None], pa.struct([("col-c", pa.int32())])),
+        "col-a": pa.array([[{"col-d": 20}, {"col-d": 21}], []],
+                          pa.list_(pa.struct([("col-d", pa.int32())]))),
+        "col-m": pa.array([[("p", {"col-e": 30})], None],
+                          pa.map_(pa.string(), pa.struct([("col-e", pa.int32())]))),
+    }), os.path.join(p, "f0.parquet"))
+
+    def struct(name, fid, phys):
+        return {"type": "struct", "fields": [
+            {"name": name, "type": "integer", "nullable": True, "metadata": _md(fid, phys)}]}
+
+    schema = {"type": "struct", "fields": [
+        {"name": "k", "type": "long", "nullable": True, "metadata": _md(1, "col-k")},
+        {"name": "s", "type": struct("inner", 3, "col-c"), "nullable": True,
+         "metadata": _md(2, "col-s")},
+        {"name": "a", "nullable": True, "metadata": _md(4, "col-a"),
+         "type": {"type": "array", "elementType": struct("x", 5, "col-d"),
+                  "containsNull": True}},
+        {"name": "m", "nullable": True, "metadata": _md(6, "col-m"),
+         "type": {"type": "map", "keyType": "string", "valueType": struct("y", 7, "col-e"),
+                  "valueContainsNull": True}},
+    ]}
+    _foreign_commit(p, 0, [
+        {"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}},
+        {"metaData": {"id": "nested", "format": {"provider": "parquet", "options": {}},
+                      "schemaString": json.dumps(schema), "partitionColumns": [],
+                      "configuration": {"delta.columnMapping.mode": "name"}}},
+        {"add": {"path": "f0.parquet", "partitionValues": {}, "dataChange": True,
+                 "size": os.path.getsize(os.path.join(p, "f0.parquet")),
+                 "modificationTime": 0}},
+    ])
+    for df in (lakehouse.read_deltalake(spark, p), shim.read(spark, p)):
+        assert df.schema.simpleString() == (
+            "struct<k:bigint,s:struct<inner:int>,a:array<struct<x:int>>,"
+            "m:map<string,struct<y:int>>>"
+        )
+        rows = {r.k: r for r in df.collect()}
+        assert rows[1].s.inner == 10 and [e.x for e in rows[1].a] == [20, 21]
+        assert rows[1].m["p"].y == 30
+        assert (rows[2].s, rows[2].a, rows[2].m) == (None, [], None)
+    assert shim.read(spark, p, columns=["s"]).first().s.inner == 10
+    with pytest.raises(InvalidArgument, match="NESTED"):
+        lakehouse.to_deltalake(spark.range(1).selectExpr("id AS k"), p, mode="append")
+
+
+def _flat_table(spark, p):
+    """A partitioned foreign table in a flat layout: the files sit under
+    dirs that name no partition column, so ``part`` lives only in the
+    log.  Rows (k, v, part): (1, 10, '7'), (4, 40, '7'), (5, 50, '9')."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    adds = []
+    for sub, ks, part in (("flat0", [1, 4], "7"), ("flat1", [5], "9")):
+        os.makedirs(os.path.join(p, sub))
+        name = f"{sub}/f.parquet"
+        pq.write_table(
+            pa.table({"k": pa.array(ks, pa.int32()), "v": pa.array([10 * k for k in ks], pa.int32())}),
+            os.path.join(p, name),
+        )
+        adds.append({"add": {"path": name, "partitionValues": {"part": part}, "dataChange": True,
+                             "size": os.path.getsize(os.path.join(p, name)),
+                             "modificationTime": 0,
+                             "stats": json.dumps({"numRecords": len(ks)})}})
+    schema = {"type": "struct", "fields": [
+        {"name": c, "type": t, "nullable": True, "metadata": {}}
+        for c, t in (("k", "integer"), ("v", "integer"), ("part", "string"))]}
+    _foreign_commit(p, 0, [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {"metaData": {"id": "flat", "format": {"provider": "parquet", "options": {}},
+                      "schemaString": json.dumps(schema), "partitionColumns": ["part"],
+                      "configuration": {}}},
+        *adds,
+    ])
+
+
+def test_flat_layout_partitioned_foreign_table_takes_writes(spark, tmp_path):
+    p = str(tmp_path / "t")
+    _flat_table(spark, p)
+    schema = "k int, v int, part string"
+    model = {1: (10, "7"), 4: (40, "7"), 5: (50, "9")}
+
+    def check():
+        want = sorted((k, v, part) for k, (v, part) in model.items())
+        for df in (lakehouse.read_deltalake(spark, p), shim.read(spark, p)):
+            assert df.columns == ["k", "v", "part"]
+            assert sorted(tuple(r) for r in df.collect()) == want
+
+    check()
+    lakehouse.to_deltalake(spark.createDataFrame([(2, 20, "8")], schema), p, mode="append")
+    model[2] = (20, "8")
+    check()
+    # a deletion vector on a flat-layout file
+    shim.delete(spark, _df(spark, [4]), p, ["k"], use_deletion_vectors=True)
+    del model[4]
+    check()
+    # copy-on-write rewrites that file (its DV applied) in a hive layout
+    shim.merge(spark, spark.createDataFrame([(1, 11, "7"), (3, 30, "7")], schema), p, ["k"])
+    model.update({1: (11, "7"), 3: (30, "7")})
+    check()
+    assert any(e["path"].startswith("flat1/") for e in dl.snapshot(p)["files"])
+    shim.compact(spark, p)
+    check()
+    assert not any(e["path"].startswith("flat") for e in dl.snapshot(p)["files"])
+
+
+def _file_scans(df):
+    return df._jdf.queryExecution().executedPlan().toString().count("FileScan parquet")
+
+
+def test_read_plan_shape(spark, tmp_path):
+    # a partitioned lakelite table: one scan per commit dir, however many
+    # partitions each holds
+    p = str(tmp_path / "days")
+    rows = spark.range(0, 40).selectExpr("id AS k", "CAST(id % 4 AS STRING) AS day")
+    lakehouse.to_deltalake(rows, p, mode="overwrite", partition_cols=["day"])
+    lakehouse.to_deltalake(rows, p, mode="append")
+    assert len({e["commit"] for e in dl.snapshot(p)["files"]}) == 2
+    for df in (lakehouse.read_deltalake(spark, p), shim.read(spark, p)):
+        assert _file_scans(df) == 2
+        assert df.count() == 80
+    # an unpartitioned table: one scan, whatever the commit count
+    q = str(tmp_path / "flat")
+    lakehouse.to_deltalake(_df(spark, [0]), q, mode="overwrite")
+    for i in (1, 2):
+        lakehouse.to_deltalake(_df(spark, [i]), q, mode="append")
+    for df in (lakehouse.read_deltalake(spark, q), shim.read(spark, q)):
+        assert _file_scans(df) == 1
+        assert sorted(r.k for r in df.collect()) == [0, 1, 2]
+    # a flat-layout partitioned table: one scan per partition tuple
+    r = str(tmp_path / "foreign")
+    _flat_table(spark, r)
+    for df in (lakehouse.read_deltalake(spark, r), shim.read(spark, r)):
+        assert _file_scans(df) == 2
+    lakehouse.to_deltalake(spark.createDataFrame([(6, 60, "7")], "k int, v int, part string"), r)
+    for df in (lakehouse.read_deltalake(spark, r), shim.read(spark, r)):
+        assert _file_scans(df) == 3  # flat '7', flat '9', the lakelite commit dir
+        assert df.count() == 4

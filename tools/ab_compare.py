@@ -42,8 +42,16 @@ print("ABRESULT " + json.dumps(out))
 
 
 def run_side(root: str, sf: str, names: list[str]) -> dict[str, float]:
+    # Spark's Python workers find the package through the PYTHONPATH the
+    # JVM inherits when it starts, not through the runner's sys.path;
+    # without PYTHONSAFEPATH a package in the working directory would
+    # shadow it
+    pythonpath = [os.path.abspath(root)] + [
+        p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p
+    ]
     p = subprocess.run(
         [sys.executable, "-c", RUNNER, root, sf, *names],
+        env={**os.environ, "PYTHONPATH": os.pathsep.join(pythonpath), "PYTHONSAFEPATH": "1"},
         capture_output=True,
         text=True,
         timeout=1200,

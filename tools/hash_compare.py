@@ -7,9 +7,17 @@ Prints "<name> <rowcount> <md5>" per query (sorted-row md5).
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 sys.path.insert(0, sys.argv[1])
+# Spark's Python workers find the package through the PYTHONPATH the JVM
+# inherits when it starts, not through this process's sys.path; without
+# PYTHONSAFEPATH a package in the working directory would shadow it
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [os.path.abspath(sys.argv[1])] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+)
+os.environ["PYTHONSAFEPATH"] = "1"
 
 import pandas as pd  # noqa: F401
 
