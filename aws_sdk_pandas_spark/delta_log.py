@@ -51,11 +51,13 @@ Scale notes: a commit is driver-side metadata work proportional to the
 files it TOUCHES (one ``os.stat`` + parquet-footer ``num_rows`` per
 added file), never to table size; a read is one parquet scan for an
 unpartitioned table, one per commit dir of a hive layout and one per
-partition tuple of any other layout, with column pruning and row-group
-pushdown intact because the files are plain parquet.  Every scan takes
-its schema from the log's ``metaData`` (authoritative under the
-protocol), so building a read opens no footer and runs no Spark job;
-the fetch is the only job.  Deletion vectors decode ON EXECUTORS (the
+partition tuple of any other layout, each split into scans of at most
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` files (more
+paths would make Spark list them with a job), with column pruning and
+row-group pushdown intact because the files are plain parquet.  Every
+scan takes its schema from the log's ``metaData`` (authoritative under
+the protocol), so building a read opens no footer and runs no Spark
+job; the fetch is the only job.  Deletion vectors decode ON EXECUTORS (the
 driver ships O(files) descriptors) and drop via one anti-join,
 broadcast when small.
 """
@@ -374,41 +376,62 @@ def _entry(add: dict[str, Any], pcols: list[str]) -> dict[str, Any]:
 
 def snapshot(path: str, version: int | None = None) -> dict[str, Any]:
     """The lakelite manifest of ``version`` (default latest), replayed
-    from the log once (:func:`_manifest`)."""
-    return _manifest(path, *_state(path, version))
+    from the log once (:func:`manifest`)."""
+    return manifest(path, _state(path, version))
 
 
-def states(path: str) -> Iterator[tuple]:
-    """The state (as :func:`_state` returns it) of every readable
-    version, oldest first, in ONE pass over the log: each JSON commit is
-    applied to the state of the version before it (a version after a
-    gap in the log starts from its checkpoint).  The yielded dicts are
-    the replay's own, updated in place by the next version."""
-    commits = set(_listing(path)[0])
-    versions = readable_versions(path)
-    i = 0
-    while i < len(versions):
-        state = _state(path, versions[i])
-        yield state
-        j = i + 1
-        while j < len(versions) and versions[j] == versions[j - 1] + 1 and versions[j] in commits:
-            j += 1
-        if j > i + 1:
-            yield from _replay_each(path, versions[i] + 1, versions[j - 1], state[1:5])
-        i = j
+def _commit_mode(info: dict[str, Any]) -> str:
+    """The write mode a commit's ``commitInfo`` records (``""`` if none)."""
+    return (info.get("operationParameters") or {}).get("mode", "")
+
+
+def states(path: str) -> Iterator[tuple[dict[str, Any], tuple]]:
+    """``(row, state)`` for every readable version, oldest first, in ONE
+    pass over the log: each JSON commit is applied to the state of the
+    version before it (a version after a gap in the log starts from its
+    checkpoint).  ``row`` is the version's history row — ``version``,
+    ``mode``, ``num_files`` and the log's (logical) ``partition_cols`` —
+    built without a manifest; ``state`` is the replay's own, updated in
+    place by the next version, for :func:`manifest`."""
+
+    def replay() -> Iterator[tuple]:
+        commits = set(_listing(path)[0])
+        versions = readable_versions(path)
+        i = 0
+        while i < len(versions):
+            state = _state(path, versions[i])
+            yield state
+            j = i + 1
+            while (
+                j < len(versions) and versions[j] == versions[j - 1] + 1 and versions[j] in commits
+            ):
+                j += 1
+            if j > i + 1:
+                yield from _replay_each(path, versions[i] + 1, versions[j - 1], state[1:5])
+            i = j
+
+    for state in replay():
+        v, adds, meta, _protocol, _txns, info = state
+        row = {
+            "version": v,
+            "mode": _commit_mode(info),
+            "num_files": len(adds),
+            "partition_cols": list(meta.get("partitionColumns") or []),
+        }
+        yield row, state
 
 
 def snapshots(path: str) -> Iterator[dict[str, Any]]:
     """The lakelite manifest of every readable version, oldest first, in
     one pass over the log (:func:`states`)."""
-    for v, adds, meta, protocol, txns, info in states(path):
-        yield _manifest(path, v, dict(adds), meta, protocol, dict(txns), info)
+    for _row, state in states(path):
+        yield manifest(path, state)
 
 
-def _manifest(
-    path: str, v: int, adds: dict, meta: dict, protocol: dict, txns: dict, info: dict
-) -> dict[str, Any]:
-    """One table state as a lakelite manifest: ``version``, ``mode``, ``schema`` (Spark JSON in
+def manifest(path: str, state: tuple) -> dict[str, Any]:
+    """Table ``state`` (one of :func:`states`) as a lakelite manifest,
+    which copies the state's dicts the replay updates: ``version``,
+    ``mode``, ``schema`` (Spark JSON in
     PHYSICAL names: the scan schema), ``partition_cols``, ``files`` (``path``, ``commit``
     — the ``data/<commit>`` dir lakelite wrote the file to, ``""`` for
     another engine's —, ``partition_values`` and, when known, ``stats``,
@@ -419,8 +442,9 @@ def _manifest(
 
     A mode-'name' field without a physical name is refused; a mode-'id'
     field without a field id is refused by the read that would resolve
-    it (``lakehouse_shim._scan``), and writes refuse mode 'id'
-    altogether (:func:`check_writable`)."""
+    it (``lakehouse_shim._scan``), and writes and streams refuse mode
+    'id' and nested renames (:func:`refuse_beyond_top_level_names`)."""
+    v, adds, meta, protocol, txns, info = state
     cm_mode = _check_readable(protocol, meta)
     fields = json.loads(meta["schemaString"]).get("fields", [])
     log2phys: dict[str, str] = {}
@@ -440,20 +464,43 @@ def _manifest(
     pcols = [log2phys.get(c, c) for c in meta.get("partitionColumns") or []]
     return {
         "version": v,
-        "mode": (info.get("operationParameters") or {}).get("mode", ""),
+        "mode": _commit_mode(info),
         "schema": schema,
         "partition_cols": pcols,
         "files": [_entry(a, pcols) for a in adds.values()],
         "stats_cols": [
             log2phys.get(c, c) for c in (config.get(_STATS_COLS) or "").split(",") if c
         ],
-        "txns": txns,
+        "txns": dict(txns),
         "log2phys": log2phys,
         "mapping": cm_mode,
         "meta": meta,
         "protocol": protocol,
-        "adds": adds,
+        "adds": dict(adds),
     }
+
+
+def refuse_beyond_top_level_names(man: dict[str, Any], use: str) -> None:
+    """Refuse to ``use`` (``"write"``, ``"stream"``) snapshot ``man`` when
+    its column mapping is more than a map of top-level names: mode 'id'
+    (parquet columns resolve by field id) and NESTED physical renames.
+    Lakelite's writers and its streaming source map top-level names
+    only; the batch reads (``lakehouse_shim._scan``) resolve both."""
+    if man["mapping"] == "id":
+        raise InvalidArgument(
+            f"cannot {use} column-mapped Delta table (mode 'id'): only mode "
+            "'name' is supported (mode 'id' resolves parquet columns by "
+            f"field id; lakelite {use}s map names)"
+        )
+    if man["mapping"] == "name":
+        for f in json.loads(man["meta"]["schemaString"]).get("fields", []):
+            nested = _nested_renames(f["type"])
+            if nested:
+                raise InvalidArgument(
+                    f"cannot {use} column-mapped table whose field {f['name']!r} "
+                    f"renames NESTED fields (e.g. {nested[0]}): lakelite {use}s "
+                    "map top-level names only"
+                )
 
 
 def check_writable(man: dict[str, Any]) -> None:
@@ -463,9 +510,9 @@ def check_writable(man: dict[str, Any]) -> None:
     columns (none is enforced or filled here), ``delta.enableChangeDataFeed``
     (no ``_change_data`` files are written), ``delta.appendOnly`` (merge
     and delete would break it), writer features beyond deletionVectors
-    and name-mode columnMapping, column mapping mode 'id' and NESTED
-    physical renames (writes map top-level names only), and data files
-    at absolute paths.  A writer-7 name-mapped table may
+    and name-mode columnMapping, column mapping beyond top-level names
+    (:func:`refuse_beyond_top_level_names`), and data files at absolute
+    paths.  A writer-7 name-mapped table may
     list the legacy writer-5 features, the set Delta lists when it
     upgrades such a table for deletion vectors; the checks above refuse
     any of them a table actually uses.  ``man`` is a :func:`snapshot`;
@@ -473,20 +520,8 @@ def check_writable(man: dict[str, Any]) -> None:
     data file."""
     meta, protocol = man["meta"], man["protocol"]
     config = meta.get("configuration") or {}
-    if man["mapping"] == "id":
-        raise InvalidArgument(
-            "cannot write column-mapped Delta table (mode 'id'): only mode "
-            "'name' is supported (mode 'id' resolves parquet columns by "
-            "field id, which lakelite's writers don't stamp)"
-        )
+    refuse_beyond_top_level_names(man, "write")
     for f in json.loads(meta["schemaString"]).get("fields", []):
-        nested = _nested_renames(f["type"]) if man["mapping"] == "name" else []
-        if nested:
-            raise InvalidArgument(
-                f"cannot write column-mapped table whose field {f['name']!r} "
-                f"renames NESTED fields (e.g. {nested[0]}): lakelite writes map "
-                "top-level names only"
-            )
         used = [
             k
             for k in f.get("metadata") or {}

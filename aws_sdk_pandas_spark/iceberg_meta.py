@@ -597,11 +597,11 @@ def export_snapshot(path: str, manifest: dict[str, Any]) -> bool:
         have = set(ls._versions(path))
         if not all(i in have for i in range(v)):
             return False
-        for state in dl.states(path):
-            if state[0] >= v:
+        for row, state in dl.states(path):
+            if row["version"] >= v:
                 break
-            if not os.path.exists(_metadata_file(path, state[0])):
-                export_snapshot(path, dl._manifest(path, *state))
+            if not os.path.exists(_metadata_file(path, row["version"])):
+                export_snapshot(path, dl.manifest(path, state))
 
     root = _local(path)
     d = _meta_dir(path)
@@ -1092,9 +1092,9 @@ def export_table(path: str) -> int:
 
     have = set(iceberg_versions(path))
     return sum(
-        export_snapshot(path, dl._manifest(path, *state))
-        for state in dl.states(path)
-        if state[0] not in have
+        export_snapshot(path, dl.manifest(path, state))
+        for row, state in dl.states(path)
+        if row["version"] not in have
     )
 
 

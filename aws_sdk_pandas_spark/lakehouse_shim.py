@@ -61,7 +61,8 @@ not a mechanical one); every read
 plan comes from one builder (:func:`_scan`) over the log's live files:
 one parquet scan for an unpartitioned table, one per commit dir of a
 hive layout, one per partition tuple of any other layout (bounded by
-commit count — run ``compact`` on long-lived tables); file skipping uses
+commit count — run ``compact`` on long-lived tables), each of at most
+Spark's parallel-listing threshold of files; file skipping uses
 partition values plus opt-in per-file min/max stats (``stats_cols`` /
 ``predicates`` / ``compact(zorder_by=...)``).  Production deployments should put
 the real jars on the classpath; every entry point in ``lakehouse``
@@ -228,10 +229,12 @@ def _scan_files(
 ) -> DataFrame:
     """The one scan of data files a table log lists.  The schema comes
     from the log, which is authoritative for the table, so building the
-    scan opens no footer and runs no Spark job; a file that predates a
-    column reads it as null.  With ``base_path``, hive ``k=v``
-    directories below it supply the partition columns, typed by
-    ``schema``."""
+    scan opens no footer; a file that predates a column reads it as
+    null.  Spark lists more than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths
+    with a Spark job, so :func:`_scan` passes at most that many.  With
+    ``base_path``, hive ``k=v`` directories below it supply the
+    partition columns, typed by ``schema``."""
     reader = spark.read.schema(schema)
     if base_path is not None:
         reader = reader.option("basePath", base_path)
@@ -239,15 +242,17 @@ def _scan_files(
 
 
 def _scan_groups(
-    entries: list[dict[str, Any]], pcols: list[str]
+    entries: list[dict[str, Any]], pcols: list[str], limit: int
 ) -> list[tuple[str | None, tuple, list[dict[str, Any]]]]:
     """Group a snapshot's files into scans: ``(base, values, entries)``.
-    An unpartitioned table is one scan.  A file whose relative path ends
+    An unpartitioned table is one group.  A file whose relative path ends
     in the hive ``k=v`` dirs of its own log partition values (parsed as
-    :func:`_parse_partition_values` does) joins the scan of the dir above
-    them, its partition-discovery ``base`` — one scan per lakelite commit
+    :func:`_parse_partition_values` does) joins the group of the dir above
+    them, its partition-discovery ``base`` — one group per lakelite commit
     dir.  Every other file (a flat or random-prefix layout) joins the
-    scan of its partition tuple, whose ``values`` are injected."""
+    group of its partition tuple, whose ``values`` are injected.  A group
+    of more than ``limit`` files is scanned ``limit`` files at a time, so
+    building a scan never runs Spark's parallel file-listing job."""
     groups: dict[tuple, list[dict[str, Any]]] = {}
     for e in entries:
         pv = e["partition_values"]
@@ -260,7 +265,11 @@ def _scan_groups(
         ):
             key = ("/".join(dirs[:n]), ())
         groups.setdefault(key, []).append(e)
-    return [(*k, g) for k, g in sorted(groups.items(), key=lambda kv: repr(kv[0]))]
+    return [
+        (*k, g[i : i + limit])
+        for k, g in sorted(groups.items(), key=lambda kv: repr(kv[0]))
+        for i in range(0, len(g), limit)
+    ]
 
 
 def _nullable(t: T.DataType) -> T.DataType:
@@ -335,7 +344,9 @@ def _scan(
     pcols = man["partition_cols"]
     data = T.StructType([f for f in schema.fields if f.name not in pcols])
     parts = []
-    for base, values, group in _scan_groups(entries, pcols):
+    threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
+    limit = max(1, int(threshold))
+    for base, values, group in _scan_groups(entries, pcols, limit):
         files = [os.path.join(root, e["path"]) for e in group]
         if base is None:
             part = _scan_files(spark, files, data)
@@ -751,15 +762,7 @@ def history(path: str) -> list[dict[str, Any]]:
     one pass over the log that builds no manifest
     (:func:`delta_log.states`); partition columns are the log's
     (logical) names."""
-    return [
-        {
-            "version": v,
-            "mode": (info.get("operationParameters") or {}).get("mode", ""),
-            "num_files": len(adds),
-            "partition_cols": list(meta.get("partitionColumns") or []),
-        }
-        for v, adds, meta, _protocol, _txns, info in dl.states(path)
-    ]
+    return [row for row, _state in dl.states(path)]
 
 
 def _key_cond(left: DataFrame, right: DataFrame, keys: list[str], match_nulls: bool):

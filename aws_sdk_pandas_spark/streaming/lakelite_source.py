@@ -23,6 +23,11 @@ Semantics mirror Delta's source contract:
   files only (``ignoreDeletes=true``);
 - ``startingVersion`` (default 0) picks up history from a given commit.
 
+A column-mapped table streams in logical names when its mapping is a
+map of top-level names (mode 'name'); mode 'id' and nested physical
+renames are refused, since the per-file reader resolves parquet
+columns by name and renames top-level columns only.
+
 Usage::
 
     from aws_sdk_pandas_spark.streaming.lakelite_source import (
@@ -94,6 +99,17 @@ def _arrow_const(value, spark_type, n: int):
     return pa.array([conv] * n, type=pa_t)
 
 
+def _streamable_snapshot(path: str) -> dict:
+    """The latest snapshot of ``path``, refused when its column mapping
+    is more than a map of top-level names."""
+    from aws_sdk_pandas_spark import delta_log as dl
+    from aws_sdk_pandas_spark import lakehouse_shim as ls
+
+    man = ls._read_manifest(path)
+    dl.refuse_beyond_top_level_names(man, "stream")
+    return man
+
+
 class _LakeliteStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, options: dict):
         self._schema = schema
@@ -105,9 +121,7 @@ class _LakeliteStreamReader(DataSourceStreamReader):
         self._ignore_deletes = str(options.get("ignoredeletes", "false")).lower() == "true"
         # logical -> physical column map of a name-mapped table (loaded
         # on the DRIVER; the pickled reader carries it to workers)
-        from aws_sdk_pandas_spark import lakehouse_shim as ls
-
-        self._log2phys: dict = ls._read_manifest(self._path)["log2phys"]
+        self._log2phys: dict = _streamable_snapshot(self._path)["log2phys"]
 
     # -- offset protocol ----------------------------------------------------
     def initialOffset(self) -> dict:
@@ -133,7 +147,7 @@ class _LakeliteStreamReader(DataSourceStreamReader):
         for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
             actions = dl._read_actions(self._path, v)
             info = next((a["commitInfo"] for a in actions if "commitInfo" in a), {})
-            mode = (info.get("operationParameters") or {}).get("mode", "")
+            mode = dl._commit_mode(info)
             removed = {a["remove"]["path"] for a in actions if "remove" in a}
             adds = sorted(
                 (a["add"] for a in actions if "add" in a), key=lambda a: a["path"]
@@ -219,7 +233,7 @@ class LakeliteStreamDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("lakelite_stream requires .option('path', <table dir>)")
-        man = ls._read_manifest(path)
+        man = _streamable_snapshot(path)
         # a name-mapped table streams in LOGICAL names like every other
         # lakelite entry point (files stay physical; the per-partition
         # reader translates)

@@ -307,14 +307,14 @@ def _md(fid, phys):
     return {"delta.columnMapping.id": fid, "delta.columnMapping.physicalName": phys}
 
 
-def test_nested_renames_read_logical_names(spark, tmp_path):
-    # a name-mapped table whose struct, array<struct> and map<string,
-    # struct> columns rename their inner fields: both readers return the
-    # logical names at every level, and writes stay refused
+def _nested_table(p, mode="name"):
+    """A column-mapped table (``mode``) whose struct, array<struct> and
+    map<string, struct> columns rename their inner fields.  Rows (k, s,
+    a, m): (1, {inner: 10}, [{x: 20}, {x: 21}], {p: {y: 30}}) and
+    (2, null, [], null)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    p = str(tmp_path / "t")
     os.makedirs(p)
     pq.write_table(pa.table({
         "col-k": pa.array([1, 2], pa.int64()),
@@ -344,11 +344,19 @@ def test_nested_renames_read_logical_names(spark, tmp_path):
         {"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}},
         {"metaData": {"id": "nested", "format": {"provider": "parquet", "options": {}},
                       "schemaString": json.dumps(schema), "partitionColumns": [],
-                      "configuration": {"delta.columnMapping.mode": "name"}}},
+                      "configuration": {"delta.columnMapping.mode": mode}}},
         {"add": {"path": "f0.parquet", "partitionValues": {}, "dataChange": True,
                  "size": os.path.getsize(os.path.join(p, "f0.parquet")),
                  "modificationTime": 0}},
     ])
+
+
+def test_nested_renames_read_logical_names(spark, tmp_path):
+    # a name-mapped table whose struct, array<struct> and map<string,
+    # struct> columns rename their inner fields: both readers return the
+    # logical names at every level, and writes stay refused
+    p = str(tmp_path / "t")
+    _nested_table(p)
     for df in (lakehouse.read_deltalake(spark, p), shim.read(spark, p)):
         assert df.schema.simpleString() == (
             "struct<k:bigint,s:struct<inner:int>,a:array<struct<x:int>>,"
@@ -361,6 +369,21 @@ def test_nested_renames_read_logical_names(spark, tmp_path):
     assert shim.read(spark, p, columns=["s"]).first().s.inner == 10
     with pytest.raises(InvalidArgument, match="NESTED"):
         lakehouse.to_deltalake(spark.range(1).selectExpr("id AS k"), p, mode="append")
+
+
+def test_stream_source_refuses_nested_renames_and_id_mode(spark, tmp_path):
+    # the streaming source resolves parquet columns by name and renames
+    # top-level columns only, so it refuses the tables it would misread
+    from aws_sdk_pandas_spark.streaming.lakelite_source import LakeliteStreamDataSource
+
+    spark.dataSource.register(LakeliteStreamDataSource)
+    for mode, match in (("name", "NESTED"), ("id", "only mode 'name'")):
+        p = str(tmp_path / mode)
+        _nested_table(p, mode)
+        with pytest.raises(InvalidArgument, match=match):
+            LakeliteStreamDataSource({"path": p}).schema()
+        with pytest.raises(Exception, match=match):
+            spark.readStream.format("lakelite_stream").option("path", p).load()
 
 
 def _flat_table(spark, p):
@@ -456,3 +479,21 @@ def test_read_plan_shape(spark, tmp_path):
     for df in (lakehouse.read_deltalake(spark, r), shim.read(spark, r)):
         assert _file_scans(df) == 3  # flat '7', flat '9', the lakelite commit dir
         assert df.count() == 4
+
+
+def test_scans_stay_within_the_listing_threshold(spark, tmp_path):
+    # Spark lists more than parallelPartitionDiscovery.threshold paths
+    # with a Spark job, so one commit of threshold + 1 files is scanned
+    # in two scans and building either read runs no job
+    from tests.test_lakehouse_lakelite import _jobs
+
+    n = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")) + 1
+    p = str(tmp_path / "t")
+    lakehouse.to_deltalake(spark.range(0, n, numPartitions=n).selectExpr("id AS k"), p)
+    assert len(dl.snapshot(p)["files"]) == n
+    for name, build in (("delta", lambda: lakehouse.read_deltalake(spark, p)),
+                        ("lakelite", lambda: shim.read(spark, p))):
+        df, jobs = _jobs(spark, f"build-{name}-{os.getpid()}-{id(tmp_path)}", build)
+        assert jobs == 0, name
+        assert _file_scans(df) == 2
+        assert sorted(r.k for r in df.collect()) == list(range(n))
