@@ -32,6 +32,18 @@ _TABLES = (
 _LOADED: dict[tuple[int, str], bool] = {}
 
 
+def _tmpdir(prefix: str) -> str:
+    """A new temp dir, removed when the interpreter exits (errors
+    ignored); every entry reads its results back before then."""
+    import atexit
+    import shutil
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
 def _load(spark: SparkSession, sf_dir: str) -> None:
     """Register every test table as a temp view for the SQL front door.
     Memoized per (session, sf_dir): repeated registration re-resolves
@@ -1897,13 +1909,11 @@ def _q_unload_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle aggregates the source table directly, so any write/read
     corruption (schema drift, partition-value mangling, lost rows)
     hash-mismatches."""
-    import tempfile
-
     from aws_sdk_pandas_spark import sql as asql
     from aws_sdk_pandas_spark.sources import read_parquet
 
     _load(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="asps-unload-") + "/orders_ds"
+    out = _tmpdir("asps-unload-") + "/orders_ds"
     asql.unload(
         spark,
         "SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority FROM orders",
@@ -1932,15 +1942,13 @@ def _q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC sink+source under the hash gate (sources/orc.py): partitioned
     ORC dataset write, read back, aggregate; oracle aggregates the source
     parquet directly."""
-    import tempfile
-
     from aws_sdk_pandas_spark.sources import read_parquet
     from aws_sdk_pandas_spark.sources.orc import read_orc, to_orc
 
     orders = read_parquet(spark, f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    out = tempfile.mkdtemp(prefix="asps-orc-") + "/orders_orc"
+    out = _tmpdir("asps-orc-") + "/orders_orc"
     to_orc(orders, out, dataset=True, partition_cols=["o_orderstatus"], mode="overwrite")
     back = read_orc(spark, out, dataset=True)
     return (
@@ -1958,15 +1966,13 @@ def _q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV sink+source under the hash gate (sources/text.py): header'd CSV
     dataset write, schema'd read-back (no inference drift), aggregate."""
-    import tempfile
-
     from aws_sdk_pandas_spark.sources import read_parquet
     from aws_sdk_pandas_spark.sources.text import read_csv, to_csv
 
     cust = read_parquet(spark, f"{sf_dir}/customer.parquet").select(
         "c_custkey", "c_acctbal", "c_mktsegment"
     )
-    out = tempfile.mkdtemp(prefix="asps-csv-") + "/customer_csv"
+    out = _tmpdir("asps-csv-") + "/customer_csv"
     to_csv(cust, out, dataset=True, mode="overwrite", header=True)
     back = read_csv(
         spark,
@@ -2065,15 +2071,13 @@ def _q_ntile_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink+source under the hash gate (sources/text.py):
     partitioned dataset write, schema'd read-back, aggregate."""
-    import tempfile
-
     from aws_sdk_pandas_spark.sources import read_parquet
     from aws_sdk_pandas_spark.sources.text import read_json, to_json
 
     ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "event_id", "event_type", "value"
     )
-    out = tempfile.mkdtemp(prefix="asps-json-") + "/events_json"
+    out = _tmpdir("asps-json-") + "/events_json"
     to_json(ev, out, dataset=True, mode="overwrite", partition_cols=["event_type"])
     back = read_json(
         spark, out, dataset=True, schema="event_id bigint, value double, event_type string"
@@ -2115,13 +2119,11 @@ def _q_fwf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.read.text + substring projection — no native Spark reader).
     The entry first renders nation as fixed-width text, then parses it
     back with declared widths and dtypes."""
-    import tempfile
-
     from aws_sdk_pandas_spark.sources import read_parquet
     from aws_sdk_pandas_spark.sources.text import read_fwf
 
     nation = read_parquet(spark, f"{sf_dir}/nation.parquet")
-    out = tempfile.mkdtemp(prefix="asps-fwf-") + "/nation_fwf"
+    out = _tmpdir("asps-fwf-") + "/nation_fwf"
     (
         nation.select(
             F.concat(
@@ -2148,14 +2150,12 @@ def _q_merge_datasets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dataset-prefix merge under the hash gate (sources/copy.py:
     merge_datasets append mode — reference s3/_copy.py:75): two disjoint
     partitioned writes merged into one prefix, read back whole."""
-    import tempfile
-
     from aws_sdk_pandas_spark.sources import read_parquet
     from aws_sdk_pandas_spark.sources.copy import merge_datasets
     from aws_sdk_pandas_spark.sources.parquet import to_parquet
 
     orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
-    root = tempfile.mkdtemp(prefix="asps-merge-")
+    root = _tmpdir("asps-merge-")
     src, dst = f"{root}/src", f"{root}/dst"
     to_parquet(
         orders.where("o_orderstatus = 'F'").select("o_orderkey", "o_orderstatus", "o_totalprice"),
@@ -2452,14 +2452,12 @@ def _q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragmented into many small files, compact each leaf to one file, read
     back and aggregate.  Oracle aggregates the source table — lost or
     duplicated rows hash-mismatch."""
-    import tempfile
-
     from aws_sdk_pandas_spark.sources import read_parquet
     from aws_sdk_pandas_spark.sources.compaction import compact_dataset
     from aws_sdk_pandas_spark.sources.parquet import to_parquet
 
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    out = tempfile.mkdtemp(prefix="asps-compact-") + "/docs_ds"
+    out = _tmpdir("asps-compact-") + "/docs_ds"
     to_parquet(
         docs.repartition(16),
         out,
@@ -2548,12 +2546,10 @@ def _q_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     footers (distributed mapInPandas), prune the file list with a range
     predicate, scan only survivors.  The oracle filters the source table
     directly, so a pruning bug that drops a needed file hash-mismatches."""
-    import tempfile
-
     from aws_sdk_pandas_spark.sources import read_parquet, read_parquet_pruned
 
     li = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
-    out = tempfile.mkdtemp(prefix="asps-skip-") + "/li_sorted"
+    out = _tmpdir("asps-skip-") + "/li_sorted"
     (
         li.select("l_orderkey", "l_quantity", "l_extendedprice", "l_shipdate")
         .orderBy("l_shipdate")
@@ -3352,7 +3348,6 @@ def _q_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     or schema-mapping bug changes values and hash-mismatches against
     DuckDB on the parquet directly."""
     import os
-    import tempfile
 
     from aws_sdk_pandas_spark.sources import read_avro, read_parquet, to_avro
 
@@ -3361,7 +3356,7 @@ def _q_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where("o_orderkey <= 800")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    d = tempfile.mkdtemp(prefix="asps-avro-")
+    d = _tmpdir("asps-avro-")
     os.makedirs(d, exist_ok=True)
     to_avro(orders.where("o_orderkey % 2 = 0"), f"{d}/even.avro")
     to_avro(orders.where("o_orderkey % 2 = 1"), f"{d}/odd.avro")
@@ -3385,8 +3380,6 @@ def _q_excel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     by status.  A cell-type, escaping, reference, or header bug in the
     codec changes values and hash-mismatches against DuckDB running the
     same aggregate on the parquet directly."""
-    import tempfile
-
     from aws_sdk_pandas_spark.sources import read_parquet, read_excel, to_excel
 
     orders = (
@@ -3394,7 +3387,7 @@ def _q_excel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where("o_orderkey <= 800")
         .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
     )
-    path = tempfile.mkdtemp(prefix="asps-xlsx-") + "/orders.xlsx"
+    path = _tmpdir("asps-xlsx-") + "/orders.xlsx"
     to_excel(orders.coalesce(1).orderBy("o_orderkey"), path, index=False)
     back = read_excel(spark, path)
     return (
@@ -5422,12 +5415,10 @@ def _q_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-merge snapshot aggregated.  The oracle recomputes the upsert
     relationally, so a lost insert, an unapplied update, or a duplicated
     carried-over file hash-mismatches."""
-    import tempfile
-
     from aws_sdk_pandas_spark import lakehouse, lakehouse_shim
 
     _load(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="asps-lakelite-") + "/orders_tbl"
+    path = _tmpdir("asps-lakelite-") + "/orders_tbl"
     base = spark.sql(
         "SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus FROM orders"
     )
@@ -5473,12 +5464,10 @@ def _q_lakehouse_iceberg_snapshots(spark: SparkSession, sf_dir: str) -> DataFram
     partition structs.  A wrong Avro encode/decode, a mis-built
     manifest diff (ADDED vs EXISTING), or a lost partition constant
     hash-mismatches against the relational oracle."""
-    import tempfile
-
     from aws_sdk_pandas_spark import iceberg_meta, lakehouse, lakehouse_shim
 
     _load(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="asps-iceberg-") + "/orders_ice"
+    path = _tmpdir("asps-iceberg-") + "/orders_ice"
     o = spark.sql("SELECT o_orderkey, o_totalprice, o_orderstatus FROM orders")
     lakehouse_shim.write(
         o.where("o_orderstatus = 'F'").repartition(4), path,
@@ -5517,12 +5506,10 @@ def _q_lakehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     version=, reference: s3/_read_deltalake.py:38): three commits by
     order status, each historical snapshot aggregated — version 0 must
     still see ONLY the first commit after two appends."""
-    import tempfile
-
     from aws_sdk_pandas_spark import lakehouse
 
     _load(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="asps-lakelite-") + "/orders_tt"
+    path = _tmpdir("asps-lakelite-") + "/orders_tt"
     o = spark.sql("SELECT o_orderkey, o_totalprice, o_orderstatus FROM orders")
     lakehouse.to_deltalake(o.where("o_orderstatus = 'F'"), path, mode="overwrite")
     lakehouse.to_deltalake(o.where("o_orderstatus = 'O'"), path, mode="append")
@@ -5547,12 +5534,10 @@ def _q_lakehouse_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lakehouse_shim.delete, reference: athena/_write_iceberg.py:715):
     customer written versioned, one segment's keys deleted, the surviving
     snapshot aggregated against a relational anti-filter oracle."""
-    import tempfile
-
     from aws_sdk_pandas_spark import lakehouse, lakehouse_shim
 
     _load(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="asps-lakelite-") + "/customer_tbl"
+    path = _tmpdir("asps-lakelite-") + "/customer_tbl"
     c = spark.sql("SELECT c_custkey, c_mktsegment, c_acctbal FROM customer")
     lakehouse.to_deltalake(c.repartition(8, "c_custkey"), path, mode="overwrite")
     victims = c.where("c_mktsegment = 'BUILDING'").select("c_custkey")
@@ -5581,12 +5566,10 @@ def _q_lakehouse_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     _metadata.row_index) — so the gate pins the DV encode, the log
     export, AND the protocol-correct read, end to end against the same
     relational anti-filter oracle as the CoW gate."""
-    import tempfile
-
     from aws_sdk_pandas_spark import delta_log, lakehouse, lakehouse_shim
 
     _load(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="asps-lakelite-dv-") + "/customer_tbl"
+    path = _tmpdir("asps-lakelite-dv-") + "/customer_tbl"
     c = spark.sql("SELECT c_custkey, c_mktsegment, c_acctbal FROM customer")
     lakehouse.to_deltalake(c.repartition(8, "c_custkey"), path, mode="overwrite")
     victims = c.where("c_mktsegment = 'MACHINERY'").select("c_custkey")
@@ -5924,13 +5907,12 @@ def _q_lakehouse_convert_mapped(spark: SparkSession, sf_dir: str) -> DataFrame:
     relationally over the same nation parquet."""
     import json
     import os as _os
-    import tempfile
 
     from aws_sdk_pandas_spark import delta_log, lakehouse_shim
     from aws_sdk_pandas_spark.sources import read_parquet
 
     nat = read_parquet(spark, f"{sf_dir}/nation.parquet")
-    base = tempfile.mkdtemp(prefix="asps-mapped-") + "/nation_tbl"
+    base = _tmpdir("asps-mapped-") + "/nation_tbl"
     _os.makedirs(_os.path.join(base, "_delta_log"))
     phys = {"n_nationkey": "col-k1", "n_name": "col-k2", "n_regionkey": "col-k3"}
     nat.select(
@@ -6013,8 +5995,6 @@ def _q_docs_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-per-tar source with the sample pivot, and re-aggregate —
     the tar layer must cancel exactly, so the oracle is the DIRECT
     relational aggregate over the same documents table."""
-    import tempfile
-
     from aws_sdk_pandas_spark.sources import read_parquet
     from aws_sdk_pandas_spark.sources.webdataset import (
         read_webdataset,
@@ -6022,7 +6002,7 @@ def _q_docs_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    out = tempfile.mkdtemp(prefix="asps-wds-") + "/wds"
+    out = _tmpdir("asps-wds-") + "/wds"
     to_webdataset(
         docs.select(
             F.col("doc_id").alias("key"),
@@ -6060,8 +6040,6 @@ def _q_docs_megatron_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     back through the partition-per-shard source, and re-aggregate —
     the binary layer must cancel exactly against the closed-form
     oracle."""
-    import tempfile
-
     from aws_sdk_pandas_spark.sources import read_parquet
     from aws_sdk_pandas_spark.sources.megatron import (
         read_megatron,
@@ -6076,7 +6054,7 @@ def _q_docs_megatron_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "i -> CAST(doc_id % 1000 + i AS INT))"
         ).alias("tokens"),
     )
-    out = tempfile.mkdtemp(prefix="asps-mmidx-") + "/mm"
+    out = _tmpdir("asps-mmidx-") + "/mm"
     to_megatron(toks, out, key_col="key", dtype="uint16", n_shards=8)
     back = read_megatron(spark, out)
     return (
@@ -6105,8 +6083,6 @@ def _q_training_pipeline_megatron(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle replays the window, the concatenation and the closed-form
     token sums relationally; the binary trainer format must cancel
     exactly."""
-    import tempfile
-
     from aws_sdk_pandas_spark.operators.packing import pack_sequences
     from aws_sdk_pandas_spark.sources import read_parquet
     from aws_sdk_pandas_spark.sources.megatron import (
@@ -6131,7 +6107,7 @@ def _q_training_pipeline_megatron(spark: SparkSession, sf_dir: str) -> DataFrame
             )
         ).alias("tokens")
     )
-    out = tempfile.mkdtemp(prefix="asps-mmpipe-") + "/mm"
+    out = _tmpdir("asps-mmpipe-") + "/mm"
     to_megatron(
         seqs.select(F.col("seq_id").cast("string").alias("key"), "tokens"),
         out,
@@ -6165,8 +6141,6 @@ def _q_media_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     cross-check the JSON sidecar against the decoded width — the tar
     layer and the byte-level parse must both cancel against the
     closed-form oracle."""
-    import tempfile
-
     from aws_sdk_pandas_spark.operators.multimodal import image_dimensions
     from aws_sdk_pandas_spark.sources import read_parquet
     from aws_sdk_pandas_spark.sources.webdataset import (
@@ -6190,7 +6164,7 @@ def _q_media_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
         payload.alias("img"),
         meta.alias("meta"),
     )
-    out = tempfile.mkdtemp(prefix="asps-wdsmedia-") + "/wds"
+    out = _tmpdir("asps-wdsmedia-") + "/wds"
     to_webdataset(
         media, out, key_col="key", columns={"png": "img", "json": "meta"},
         n_shards=8,
@@ -6744,11 +6718,9 @@ def _q_emr_spark_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet the gate reads back; the oracle recomputes the aggregation.
     An argv-parsing, step-state, or in-process-runner bug breaks the
     round trip."""
-    import tempfile
-
     from aws_sdk_pandas_spark import emr
 
-    workdir = tempfile.mkdtemp(prefix="emr_gate_")
+    workdir = _tmpdir("emr_gate_")
     script = f"{workdir}/job.py"
     out = f"{workdir}/out.parquet"
     with open(script, "w") as fh:
@@ -7005,8 +6977,6 @@ def _q_lakelite_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     events slice stream through availableNow into a memory sink; the
     oracle is the same slice as plain SQL, so a lost commit, duplicated
     batch, or mis-injected partition value hash-mismatches."""
-    import tempfile
-
     from aws_sdk_pandas_spark import lakehouse_shim as shim
     from aws_sdk_pandas_spark.sources import read_parquet
     from aws_sdk_pandas_spark.streaming.lakelite_source import (
@@ -7018,7 +6988,7 @@ def _q_lakelite_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where("event_id < 2000")
         .select("event_id", "user_id", "event_type", "value")
     )
-    path = tempfile.mkdtemp(prefix="lakelite_stream_gate_")
+    path = _tmpdir("lakelite_stream_gate_")
     # three commits, partitioned by event_type (exercises value injection)
     shim.write(ev.where("event_id < 700"), path, mode="overwrite",
                partition_cols=["event_type"])
@@ -7674,8 +7644,6 @@ def _q_training_pipeline_sft(spark: SparkSession, sf_dir: str) -> DataFrame:
     produced the analytic token count (contents are space-free, so
     tokens = 2 per turn), and the permutation + running-sum packing
     agree bit-for-bit."""
-    import tempfile
-
     from aws_sdk_pandas_spark import lakehouse_shim as shim
     from aws_sdk_pandas_spark.functions.text import token_count
     from aws_sdk_pandas_spark.operators.conversations import render_conversations
@@ -7688,7 +7656,7 @@ def _q_training_pipeline_sft(spark: SparkSession, sf_dir: str) -> DataFrame:
         LakeliteStreamDataSource,
     )
 
-    base = tempfile.mkdtemp(prefix="asps-pipe-")
+    base = _tmpdir("asps-pipe-")
     tbl, ck, out_dir = f"{base}/t", f"{base}/ck", f"{base}/out"
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "lang", "text"
@@ -8167,12 +8135,10 @@ def _q_lakehouse_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes each class (insert / update pre/post image) from the same
     derivation, so a missed update, phantom insert, or wrong image
     hash-mismatches."""
-    import tempfile
-
     from aws_sdk_pandas_spark import lakehouse, lakehouse_shim
 
     _load(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="asps-cdf-") + "/orders_tbl"
+    path = _tmpdir("asps-cdf-") + "/orders_tbl"
     base = spark.sql(
         "SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus FROM orders"
     )
@@ -8211,13 +8177,11 @@ def _q_lakehouse_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-clustered with per-file o_orderkey stats, a quarter-range
     predicate read must PRUNE most files (asserted in-row as a boolean
     the oracle expects TRUE) and still aggregate exactly."""
-    import tempfile
-
     from aws_sdk_pandas_spark import lakehouse_shim
     from aws_sdk_pandas_spark.sources import read_parquet
 
     _load(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="asps-skip-") + "/orders_tbl"
+    path = _tmpdir("asps-skip-") + "/orders_tbl"
     orders = read_parquet(spark, f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_totalprice"
     )
@@ -8247,11 +8211,9 @@ def _q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join WITHOUT any Exchange (Catalyst proves the bucket partitioning —
     the plan property is pinned in test_plan_quality.py; this gate pins
     the VALUES surviving the bucketed write+read+join round-trip)."""
-    import tempfile
-
     from aws_sdk_pandas_spark.sources import read_parquet, to_parquet_table
 
-    root = tempfile.mkdtemp(prefix="asps-bucketed-")
+    root = _tmpdir("asps-bucketed-")
     orders = read_parquet(spark, f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -8283,12 +8245,10 @@ def _q_quicksight_spice(spark: SparkSession, sf_dir: str) -> DataFrame:
     SPICE (real parquet snapshot), read back from the snapshot and
     aggregated; the oracle recomputes from the raw table, so a
     transformation or materialization bug hash-mismatches."""
-    import tempfile
-
     from aws_sdk_pandas_spark import quicksight as qs
 
     _load(spark, sf_dir)
-    qs.SPICE_ROOT = tempfile.mkdtemp(prefix="asps-spice-")
+    qs.SPICE_ROOT = _tmpdir("asps-spice-")
     name = "gate_customers"
     for ds_id in qs.get_dataset_ids(name):
         qs.delete_dataset(dataset_id=ds_id)

@@ -18,10 +18,12 @@ Policy choices carried over from the reference:
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Any, Iterable, Sequence
 
 import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from aws_sdk_pandas_spark.exceptions import InvalidDataType, UndetectedType
 
@@ -198,6 +200,34 @@ def cast_columns(df, dtype: dict[str, str] | None):
         if col_name in df.columns:
             df = df.withColumn(col_name, F.col(col_name).cast(athena2spark(type_string)))
     return df
+
+
+# ---------------------------------------------------------------------------
+# Small driver-side frames
+# ---------------------------------------------------------------------------
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence[Any]], schema: str | T.StructType
+) -> DataFrame:
+    """A small frame of driver-side rows (reports, descriptors, one row
+    per file) built as an Arrow table into a local relation.
+
+    Each column is converted straight to its Arrow type, so a bigint
+    next to a None keeps every bit and a NaN stays NaN, not NULL.
+    Spark scans the relation over ``min(len(rows), defaultParallelism)``
+    partitions (none for no rows), so a ``mapInPandas`` over it runs at
+    most one Python task per executor slot; no other action over it
+    starts a Python worker, where a list- or RDD-built frame unpickles
+    its rows in Python workers on every action.  Naive datetimes read
+    as UTC, the time zone of every session ``get_spark`` builds."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    if any(len(r) != len(arrow) for r in rows):
+        raise ValueError(f"every row of this frame needs {len(arrow)} values")
+    cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
 
 
 # ---------------------------------------------------------------------------

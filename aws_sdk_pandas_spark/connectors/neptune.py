@@ -15,6 +15,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aws_sdk_pandas_spark._types import local_frame
 from aws_sdk_pandas_spark.exceptions import InvalidArgument
 
 _V_REQUIRED = ("~id", "~label")
@@ -540,9 +541,7 @@ def k_hop_neighbors(
     e.count()
 
     spark = edges.sparkSession
-    visited = spark.createDataFrame(
-        [(s, 0) for s in seeds], "id string, hops int"
-    ).localCheckpoint()
+    visited = local_frame(spark, [(s, 0) for s in seeds], "id string, hops int").localCheckpoint()
     frontier = visited.select("id")
     for hop in range(1, k + 1):
         nxt = (

@@ -72,6 +72,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aws_sdk_pandas_spark._types import local_frame
 from aws_sdk_pandas_spark.exceptions import InvalidArgument
 
 _RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -564,7 +565,7 @@ def _pattern_frame(
             inverted = True
         seeds = None
         if node[0] in ("plus", "star") and s.kind == "const":
-            seeds = spark.createDataFrame([(str(s.value),)], "s string")
+            seeds = local_frame(spark, [(str(s.value),)], "s string")
         df = _compile_path_pairs(triples_df, node, seeds=seeds)
         if inverted:
             df = df.select(F.col("o").alias("s"), F.col("s").alias("o"))
@@ -710,7 +711,7 @@ def compile_sparql(query: str, triples: DataFrame) -> DataFrame:
             triples,
         )
         exists = inner.count() > 0  # bounded: LIMIT 1 solution
-        return triples.sparkSession.createDataFrame([(exists,)], "ask boolean")
+        return local_frame(triples.sparkSession, [(exists,)], "ask boolean")
 
     cons = re.match(r"CONSTRUCT\s*\{", q, re.I)
     if cons:
@@ -810,10 +811,10 @@ def compile_sparql(query: str, triples: DataFrame) -> DataFrame:
                 partial_frames.append(("values", (list(var), list(vals))))
                 continue
             schema = ", ".join(f"`{v}` string" for v in var)
-            vdf = spark.createDataFrame(list(vals), schema)
+            vdf = local_frame(spark, vals, schema)
             frames.append((vdf, list(var)))
         else:
-            vdf = spark.createDataFrame([(str(v),) for v in vals], f"`{var}` string")
+            vdf = local_frame(spark, [(str(v),) for v in vals], f"`{var}` string")
             frames.append((vdf, [var]))
     union_frames = []
     for branches in unions:
@@ -920,7 +921,7 @@ def compile_sparql(query: str, triples: DataFrame) -> DataFrame:
                     parts.extend([cur] * len(grows))
                     continue
                 schema = ", ".join(f"`{v}` string" for v in mask)
-                gdf = F.broadcast(spark.createDataFrame(grows, schema))
+                gdf = F.broadcast(local_frame(spark, grows, schema))
                 shared = [v for v in mask if v in bound]
                 parts.append(
                     cur.join(gdf, on=shared) if shared else cur.crossJoin(gdf)

@@ -21,6 +21,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aws_sdk_pandas_spark._types import local_frame
 from aws_sdk_pandas_spark.exceptions import InvalidArgument
 
 
@@ -245,8 +246,9 @@ def evaluate_ruleset(df: DataFrame, rules: list[dict[str, Any]] | list[Rule]) ->
         results.append(
             (t, p, rule.expression, value, bool(passed))
         )
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(results, 1),
+    return local_frame(
+        spark,
+        results,
         "rule_type string, parameter string, expression string, value double, passed boolean",
     )
 
@@ -500,8 +502,9 @@ def profile_table(
                 row.get(f"{c}__p50"),
             )
         )
-    return df.sparkSession.createDataFrame(
-        df.sparkSession.sparkContext.parallelize(out_rows, 1),
+    return local_frame(
+        df.sparkSession,
+        out_rows,
         "column string, dtype string, n_rows bigint, n_nonnull bigint, "
         "completeness double, n_distinct bigint, min_value double, "
         "max_value double, avg_value double, p50_value double",
@@ -544,8 +547,9 @@ def suggest_keys(
         )
         for c in cols
     ]
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(out, 1),
+    return local_frame(
+        spark,
+        out,
         "column string, n_rows bigint, n_distinct bigint, n_nulls bigint, "
         "uniqueness double, is_candidate_key boolean",
     )
@@ -575,18 +579,16 @@ def fk_containment(
     n_child = ck.count()
     n_match = matched.count()
     spark = child.sparkSession
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [
-                (
-                    n_child,
-                    n_match,
-                    round(n_match / n_child, 6) if n_child else 1.0,
-                    n_child - n_match,
-                )
-            ],
-            1,
-        ),
+    return local_frame(
+        spark,
+        [
+            (
+                n_child,
+                n_match,
+                round(n_match / n_child, 6) if n_child else 1.0,
+                n_child - n_match,
+            )
+        ],
         "n_child_keys bigint, n_matched bigint, containment double, n_orphans bigint",
     )
 
@@ -736,8 +738,9 @@ def near_zero_variance(
                 bool(second == 0 or (ratio > freq_ratio_cutoff and unique_pct < unique_pct_cutoff)),
             )
         )
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(out, 1),
+    return local_frame(
+        spark,
+        out,
         "column string, n bigint, n_distinct bigint, top_value string, "
         "freq_ratio double, unique_pct double, nzv boolean",
     )

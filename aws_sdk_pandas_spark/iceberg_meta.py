@@ -72,6 +72,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from aws_sdk_pandas_spark import avro_ocf
+from aws_sdk_pandas_spark._types import local_frame
 from aws_sdk_pandas_spark.exceptions import InvalidArgument
 
 _META_DIR = "metadata"
@@ -783,7 +784,7 @@ def export_snapshot(path: str, manifest: dict[str, Any]) -> bool:
             )
         spark = SparkSession.getActiveSession()
         if spark is not None:
-            tdf = ls._driver_frame(
+            tdf = local_frame(
                 spark,
                 [(dp, fp, dvj) for dp, fp, dvj, _p in tasks],
                 "__d string, __fp string, __dvj string",
@@ -1218,12 +1219,12 @@ def read_iceberg_meta(
         ]
     )
     if snap_id is None:
-        df = ls._driver_frame(spark, [], st)
+        df = local_frame(spark, [], st)
         return df.select(*columns) if columns else df
 
     entries, del_entries = _live_entries(path, meta, snap_id)
     if not entries:
-        df = ls._driver_frame(spark, [], st)
+        df = local_frame(spark, [], st)
         return df.select(*columns) if columns else df
 
     fields_by_id = {f["id"]: f for f in ice_schema["fields"]}
@@ -1344,7 +1345,7 @@ def read_iceberg_meta(
             deletes = dparts[0]
             for p in dparts[1:]:
                 deletes = deletes.unionByName(p)
-        seq_map = ls._driver_frame(
+        seq_map = local_frame(
             spark,
             [(p, s) for p, s in sorted(file_seq.items())],
             "__fp string, __fseq long",

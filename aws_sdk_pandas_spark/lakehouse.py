@@ -10,9 +10,8 @@ this container), the entry points FALL BACK to ``lakehouse_shim`` — an
 in-repo versioned parquet table format whose only commit log is a Delta
 ``_delta_log/``, with file-level copy-on-write — so append/overwrite/
 time-travel/MERGE/DELETE semantics are executable and tested rather
-than a classpath-probe error branch.  Pass
-``require_native=True`` (or set ``lakehouse.ALLOW_SHIM = False``) to get
-the old raise-if-no-jar behavior.
+than a classpath-probe error branch.  Pass ``require_native=True`` to
+get the old raise-if-no-jar behavior.
 """
 
 from __future__ import annotations
@@ -42,10 +41,6 @@ def _format_available(spark: SparkSession, fmt: str) -> bool:
     return ok
 
 
-# module knob: set False to forbid the shim fallback globally
-ALLOW_SHIM = True
-
-
 def _require(spark: SparkSession, fmt: str) -> None:
     if not _format_available(spark, fmt):
         jar = "delta-spark" if fmt == "delta" else "iceberg-spark-runtime"
@@ -57,11 +52,11 @@ def _require(spark: SparkSession, fmt: str) -> None:
 
 def _use_native(spark: SparkSession, fmt: str, require_native: bool) -> bool:
     """True -> native jar path; False -> lakehouse_shim fallback.
-    Raises (the old behavior) when the jar is missing and the shim is
-    disallowed."""
+    Raises (the old behavior) when the jar is missing and
+    ``require_native`` is set."""
     if _format_available(spark, fmt):
         return True
-    if require_native or not ALLOW_SHIM:
+    if require_native:
         _require(spark, fmt)
     return False
 

@@ -36,9 +36,10 @@ Design (the same shape as the real formats, scaled down to a shim):
   vector (roaring bitmap of deleted row indexes) instead of a rewrite.
   Reads decode the bitmaps on executors from O(files) descriptors the
   driver ships, spread over ``min(files, defaultParallelism)``
-  partitions (:func:`_driver_frame`): one Python task per executor
-  slot, each decoding its files one at a time, so per-task memory is
-  one file's deleted-row list and the driver never holds row indexes.
+  partitions by the package's one builder of small driver-side frames
+  (:func:`_types.local_frame`): one Python task per executor slot,
+  each decoding its files one at a time, so per-task memory is one
+  file's deleted-row list and the driver never holds row indexes.
 - ``merge_condition='ignore'`` is an insert-only fast path: unmatched
   source rows become a new commit, NO existing file is read or written.
 - Time travel = replay the log to an older version.
@@ -86,6 +87,7 @@ from pyspark.sql import types as T
 
 from aws_sdk_pandas_spark import delta_log as dl
 from aws_sdk_pandas_spark import iceberg_meta
+from aws_sdk_pandas_spark._types import local_frame
 from aws_sdk_pandas_spark.exceptions import InvalidArgument
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
@@ -328,7 +330,7 @@ def _scan(
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     if not entries:
         types = {"file_path": "string", "row_index": "bigint"}
-        df = _driver_frame(spark, [], schema)
+        df = local_frame(spark, [], schema)
         return df.select(*cols, *[F.lit(None).cast(types[f]).alias(n) for n, f in meta.items()])
     missing = [e["path"] for e in entries if not os.path.exists(os.path.join(root, e["path"]))]
     if missing:
@@ -830,30 +832,6 @@ def _touched_files(
 _DV_BROADCAST_MAX_ROWS = 4_000_000
 
 
-def _driver_frame(
-    spark: SparkSession, rows: list[tuple], schema: str | T.StructType
-) -> DataFrame:
-    """A small driver-side frame (descriptors, one row per file) built
-    through Arrow into a local relation.  Spark scans a local relation
-    over ``min(len(rows), defaultParallelism)`` partitions, so a
-    ``mapInPandas`` over it runs at most one Python task per executor
-    slot, each handling its rows one at a time.  Broadcasting it still
-    runs one job of that many tasks (the exchange collects its rows).
-    A list-built frame is a pickled Python RDD that
-    starts Python workers on every execution, one task per slice.
-    With no rows the frame is an ``emptyRDD`` (zero partitions, no
-    task runs), whatever the schema's types."""
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    if not rows:
-        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame.from_records(rows, columns=schema.fieldNames()), schema
-    )
-
-
 def _uri_path(spark: SparkSession, path: str) -> str:
     """The absolute ``path`` as the path of the URI Spark's
     ``_metadata.file_path`` carries (Hadoop ``Path.toUri``: a partition
@@ -870,10 +848,10 @@ def _dv_deletes_df(
 ) -> tuple[DataFrame | None, int]:
     """The (file, row_index) rows named by the entries' deletion vectors,
     decoded ON EXECUTORS: the driver ships only O(files) descriptors
-    (:func:`_driver_frame`, one Python task per executor slot, not one
-    per file); each task opens and decodes its files' bitmaps one file
-    at a time (the DV bins live next to the data on shared storage,
-    like the parquet itself).
+    (:func:`~aws_sdk_pandas_spark._types.local_frame`, one Python task
+    per executor slot, not one per file); each task opens and decodes
+    its files' bitmaps one file at a time (the DV bins live next to the
+    data on shared storage, like the parquet itself).
     Returns ``(DataFrame['__dfp','__dpos'], total_cardinality)`` with
     ``__dfp`` the file's URI path (:func:`_uri_path`), or ``(None, 0)``
     with no DVs.
@@ -888,7 +866,7 @@ def _dv_deletes_df(
     if not descs:
         return None, 0
     total = sum(int((e["dv"].get("cardinality")) or 0) for e in entries if e.get("dv"))
-    desc_df = _driver_frame(spark, descs, "__dfp string, __dvj string")
+    desc_df = local_frame(spark, descs, "__dfp string, __dvj string")
 
     def decode(batches):
         import pandas as pd  # runs in the Python worker
@@ -939,7 +917,9 @@ def _write_dvs_distributed(
     indexes, serializes the roaring bitmap and writes the new DV bin
     (executor-side writes to table storage, like Delta's own DV
     writers; bins orphaned by task retries are vacuumed).  The driver
-    collects only O(files) descriptors.  Returns
+    ships the O(files) old descriptors as a broadcast local frame
+    (:func:`~aws_sdk_pandas_spark._types.local_frame`) and collects
+    only O(files) new ones.  Returns
     ``{manifest_path: (dv_descriptor, newly_deleted_count)}``."""
     desc_rows = [
         (
@@ -952,7 +932,7 @@ def _write_dvs_distributed(
     ]
     if not desc_rows:
         return {}
-    desc = _driver_frame(spark, desc_rows, "__f string, __p string, __olddv string")
+    desc = local_frame(spark, desc_rows, "__f string, __p string, __olddv string")
     joined = doomed.join(F.broadcast(desc), "__f", "inner")
 
     def per_file(pdf):

@@ -42,6 +42,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from aws_sdk_pandas_spark._types import local_frame
+
 _PLAN_MODE_MAX_BITS = 1 << 24  # 2 MiB of plan literal; beyond this, broadcast
 
 
@@ -288,10 +290,9 @@ def save_bloom(bloom: BloomFilter, path: str, spark=None) -> None:
         raise RuntimeError(
             "no active SparkSession on this thread — pass save_bloom(..., spark=...)"
         )
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(bloom.m_bits, bloom.k, bloom.n_items, bloom.words)], 1
-        ),
+    df = local_frame(
+        spark,
+        [(bloom.m_bits, bloom.k, bloom.n_items, bloom.words)],
         "m_bits long, k int, n_items long, words array<long>",
     )
     df.coalesce(1).write.mode("overwrite").parquet(path)

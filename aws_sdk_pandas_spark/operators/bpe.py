@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aws_sdk_pandas_spark._types import local_frame
+
 END_OF_WORD = "</w>"
 
 # ASCII-only whitespace, matching the JVM side's Java-regex \s+ used by
@@ -191,11 +193,8 @@ def save_bpe(merges: list[tuple[str, str]], path: str, spark=None) -> None:
     spark = spark or SparkSession.getActiveSession()
     if spark is None:
         raise RuntimeError("no active SparkSession — pass save_bpe(..., spark=...)")
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(i, a, b) for i, (a, b) in enumerate(merges)], 1
-        ),
-        "rank int, a string, b string",
+    df = local_frame(
+        spark, [(i, a, b) for i, (a, b) in enumerate(merges)], "rank int, a string, b string"
     )
     df.coalesce(1).write.mode("overwrite").parquet(path)
 

@@ -58,7 +58,11 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_sdk_pandas_spark._types import local_frame
 from aws_sdk_pandas_spark.exceptions import InvalidArgument
+
+# the (feature, weight) table a model joins its hashed features against
+_WEIGHTS = "feature bigint, weight double"
 
 
 def hashed_text_features(
@@ -92,24 +96,6 @@ def hashed_text_features(
     )
 
 
-def _weight_frame(spark: SparkSession, rows: list) -> DataFrame:
-    """(feature, weight) rows -> DataFrame via the Arrow path.
-
-    ``createDataFrame(list)`` parallelizes the local rows across
-    ``defaultParallelism`` slices and launches one Python worker per
-    slice to unpickle them — ~32 tasks x ~200 ms for a table that is
-    rebuilt EVERY training iteration.  A pandas input rides the Arrow
-    converter instead: batches are handed to the JVM directly, no
-    Python exec tasks, and float64/int64 values are bit-identical.
-    """
-    import pandas as pd
-
-    pdf = pd.DataFrame(rows, columns=["feature", "weight"]).astype(
-        {"feature": "int64", "weight": "float64"}
-    )
-    return spark.createDataFrame(pdf, "feature bigint, weight double")
-
-
 @dataclass
 class TextClassifier:
     """Trained model: dense weight vector (numpy, length ``dim``),
@@ -129,7 +115,7 @@ class TextClassifier:
         rows = [(int(i), float(self.weights[i])) for i in idx]
         if not rows:
             rows = [(0, 0.0)]
-        return _weight_frame(spark, rows)
+        return local_frame(spark, rows, _WEIGHTS)
 
 
 def train_text_classifier(
@@ -186,9 +172,10 @@ def train_text_classifier(
     for _ in range(iterations):
         # the -1 bias row is always present so the sigmoid's +b happens
         # inside the same per-doc weight sum (every doc carries feature -1)
-        wf = _weight_frame(
+        wf = local_frame(
             spark,
             [(-1, float(b))] + [(int(i), float(w[i])) for i in np.flatnonzero(w)],
+            _WEIGHTS,
         )
         scored = (
             feats.join(F.broadcast(wf), "feature", "left")

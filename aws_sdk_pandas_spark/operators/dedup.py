@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_sdk_pandas_spark._types import local_frame
 from aws_sdk_pandas_spark.functions.text import document_fingerprint, ngrams, tokens
 
 # Mersenne prime 2^31-1 for minhash universal hashing: operands stay below
@@ -1313,9 +1314,8 @@ def semantic_dedup(
         df, vector_col=vector_col, n_clusters=n_clusters, metric="cosine", seed=seed
     )
     spark = assigned.sparkSession
-    centroid_df = spark.createDataFrame(
-        spark.sparkContext.parallelize([(int(c), v) for c, v in centroids], 1),
-        "__cluster int, __centroid array<float>",
+    centroid_df = local_frame(
+        spark, [(int(c), v) for c, v in centroids], "__cluster int, __centroid array<float>"
     )
     scored = (
         assigned.join(F.broadcast(centroid_df), "__cluster")

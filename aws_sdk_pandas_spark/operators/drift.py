@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from aws_sdk_pandas_spark._types import local_frame
 from aws_sdk_pandas_spark.operators.sampling import _hashed_grams
 
 
@@ -165,11 +166,8 @@ def psi_numeric(
         for i in range(n_bins)
     }
     spark = df_base.sparkSession
-    bounds = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(i, lo, hi) for i, (lo, hi) in lo_hi.items()], 1
-        ),
-        "bin int, lo double, hi double",
+    bounds = local_frame(
+        spark, [(i, lo, hi) for i, (lo, hi) in lo_hi.items()], "bin int, lo double, hi double"
     )
     base_c = binned(df_base).withColumnRenamed("c", "cb")
     new_c = binned(df_new).withColumnRenamed("c", "cn")

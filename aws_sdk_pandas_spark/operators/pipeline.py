@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from aws_sdk_pandas_spark._types import local_frame
 from aws_sdk_pandas_spark.functions.text import token_count
 from aws_sdk_pandas_spark.operators.dedup import (
     dedup_fingerprint,
@@ -371,7 +372,8 @@ def curation_funnel(
         pct = round(100.0 * removed / n_prev, 4) if n_prev else 0.0
         report_rows.append((name, i, n, t, removed, pct))
         n_prev = n
-    report = spark.createDataFrame(
+    report = local_frame(
+        spark,
         report_rows,
         "stage string, stage_idx int, rows long, tokens long, "
         "rows_removed long, pct_removed double",

@@ -11,6 +11,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from aws_sdk_pandas_spark._types import local_frame
+
 
 def cap_per_group(
     df: DataFrame,
@@ -390,8 +392,8 @@ def global_prefix_sum(
     zero = 0.0 if flt else 0
     offsets, acc = [], [zero] * len(value_cols)
     for pid in range(max(totals, default=-1) + 1):
-        # a float column must ship float offsets throughout (the Python
-        # int 0 placeholder fails createDataFrame's DoubleType verifier)
+        # a float column ships float offsets throughout (Arrow refuses
+        # an int that a double cannot hold exactly)
         offsets.append((pid, *([float(a) for a in acc] if flt else acc)))
         t = totals.get(pid)
         if t:
@@ -411,11 +413,7 @@ def global_prefix_sum(
     if offsets and len(offsets) <= 64:
         # few partitions (the common case now that AQE sizes the range
         # shuffle): attach each partition's offset as a JVM literal-map
-        # lookup.  createDataFrame(local_list) would parallelize the
-        # handful of rows across defaultParallelism slices and launch a
-        # Python worker PER SLICE just to deserialize them (measured:
-        # 32 tasks x ~200 ms per prefix-sum pass), then pay a broadcast
-        # exchange + join — all replaced by a constant-folded lookup.
+        # lookup, constant-folded: no broadcast exchange and no join.
         for i, oc in enumerate(out_cols):
             kv = []
             for off in offsets:
@@ -425,14 +423,11 @@ def global_prefix_sum(
             )
     elif offsets:
         # many partitions: a literal map would bloat the expression tree
-        # (guide on giant plans), so keep the broadcast join — built from
-        # ONE slice so exactly one Python worker ships the local rows
+        # (guide on giant plans), so keep the broadcast join
         schema = "__pid int, " + ", ".join(
             f"__off{i} {typ}" for i in range(len(value_cols))
         )
-        off_df = spark.createDataFrame(
-            spark.sparkContext.parallelize(offsets, 1), schema
-        )
+        off_df = local_frame(spark, offsets, schema)
         out = out.join(F.broadcast(off_df), "__pid")
         for i, oc in enumerate(out_cols):
             out = out.withColumn(oc, F.col(f"__local{i}") + F.col(f"__off{i}"))

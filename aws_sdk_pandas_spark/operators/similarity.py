@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from aws_sdk_pandas_spark._types import local_frame
 from aws_sdk_pandas_spark.exceptions import InvalidArgument
 from aws_sdk_pandas_spark.functions.vectors import (
     cosine_similarity,
@@ -925,12 +926,7 @@ def diverse_subset(
             # byte-identical across rounds and Spark's codegen cache hits —
             # with literals every round paid a fresh whole-stage compile
             # (~0.5s/round measured, larger than the actual 500-row scan).
-            # ONE slice: the default createDataFrame(list) would spread
-            # this single row across defaultParallelism slices and launch
-            # a Python worker per slice, every round.
-            cdf = spark.createDataFrame(
-                spark.sparkContext.parallelize([(cvec,)], 1), "__c array<float>"
-            )
+            cdf = local_frame(spark, [(cvec,)], "__c array<float>")
             cur = (
                 cur.crossJoin(F.broadcast(cdf))
                 .select(
@@ -945,10 +941,9 @@ def diverse_subset(
     finally:
         for ids in round_ids:
             _free(ids)
-    sel = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(c[0], i, round(c[2], 6)) for i, c in enumerate(chosen)], 1
-        ),
+    sel = local_frame(
+        spark,
+        [(c[0], i, round(c[2], 6)) for i, c in enumerate(chosen)],
         f"__id {df.schema[id_col].dataType.simpleString()}, sel_order int, sel_distance double",
     )
     return (

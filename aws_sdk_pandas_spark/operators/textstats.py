@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from aws_sdk_pandas_spark._types import local_frame
 from aws_sdk_pandas_spark.functions.text import tokens
 from aws_sdk_pandas_spark.operators.dedup import _ensure_parallelism, _ngram_hash_kernel
 
@@ -296,11 +297,8 @@ def hashed_ngram_score(
 
     spark = df.sparkSession
     if isinstance(weights, dict):
-        weights = spark.createDataFrame(
-            spark.sparkContext.parallelize(
-                [(int(b), float(w)) for b, w in weights.items()], 1
-            ),
-            "bucket int, weight double",
+        weights = local_frame(
+            spark, [(int(b), float(w)) for b, w in weights.items()], "bucket int, weight double"
         )
     wdf = weights.select(
         F.col("bucket").cast("long").alias("__bucket"), F.col("weight").alias("__w")
@@ -402,10 +400,7 @@ def fit_hashed_ngram_classifier(
     rows = [(int(i), float(co[int(i)])) for i in co.indices] if hasattr(co, "indices") else [
         (i, float(v)) for i, v in enumerate(co) if v != 0.0
     ]
-    weights_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows or [(0, 0.0)], 1),
-        "bucket int, weight double",
-    )
+    weights_df = local_frame(spark, rows or [(0, 0.0)], "bucket int, weight double")
     return weights_df, float(model.intercept)
 
 

@@ -43,6 +43,7 @@ from typing import Any, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_sdk_pandas_spark._types import local_frame
 from aws_sdk_pandas_spark.exceptions import InvalidArgument
 
 _MAGIC = b"MMIDIDX\x00\x00"
@@ -183,9 +184,7 @@ def read_megatron(spark: SparkSession, path: str) -> DataFrame:
     if not idxs:
         raise InvalidArgument(f"no .idx shards under {path!r}")
 
-    files = spark.createDataFrame([(i,) for i in idxs], "idx string").repartition(
-        len(idxs)
-    )
+    files = local_frame(spark, [(i,) for i in idxs], "idx string").repartition(len(idxs))
 
     def gen(batches) -> Iterator:
         import numpy as np

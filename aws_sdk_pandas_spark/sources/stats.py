@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_sdk_pandas_spark._types import local_frame
+
 _PA_TO_SPARK: dict[str, T.DataType] = {
     "int8": T.ByteType(),
     "int16": T.ShortType(),
@@ -142,9 +144,9 @@ def collect_file_stats(
                 rows.append(row)
             yield pd.DataFrame(rows, columns=out_names)
 
-    paths_df = spark.createDataFrame([(f,) for f in files], "file string")
-    n_part = min(len(files), spark.sparkContext.defaultParallelism)
-    return paths_df.repartition(n_part).mapInPandas(_read_footers, schema)
+    return local_frame(spark, [(f,) for f in files], "file string").mapInPandas(
+        _read_footers, schema
+    )
 
 
 def prune_files(

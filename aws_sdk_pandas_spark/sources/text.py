@@ -147,9 +147,9 @@ def _read_csv_pandas_fallback(
                 # align to the sampled schema's column order
                 yield out[[f.name for f in sdf_schema.fields]]
 
-    paths_df = spark.createDataFrame([(p,) for p in local], "path string")
-    n = min(len(local), spark.sparkContext.defaultParallelism)
-    df = paths_df.repartition(n).mapInPandas(_read, schema=sdf_schema)
+    df = _types.local_frame(spark, [(p,) for p in local], "path string").mapInPandas(
+        _read, schema=sdf_schema
+    )
     return df.limit(int(nrows_total)) if nrows_total else df
 
 

@@ -40,6 +40,7 @@ from typing import Any, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_sdk_pandas_spark._types import local_frame
 from aws_sdk_pandas_spark.exceptions import InvalidArgument
 
 
@@ -177,9 +178,7 @@ def read_webdataset(
     if not tars:
         raise InvalidArgument(f"no .tar shards under {path!r}")
 
-    files = spark.createDataFrame([(t,) for t in tars], "tar string").repartition(
-        len(tars)
-    )
+    files = local_frame(spark, [(t,) for t in tars], "tar string").repartition(len(tars))
 
     def gen(batches) -> Iterator:
         import pandas as pd

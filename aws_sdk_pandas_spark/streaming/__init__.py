@@ -16,6 +16,8 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_sdk_pandas_spark._types import local_frame
+
 
 def _read_state_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     """Read a state/target dataset, returning None ONLY when the path
@@ -673,13 +675,7 @@ def drift_monitor_stream(
             .persist()
         )
         t_batch = ca.agg(F.sum("n_a")).first()[0] or 0
-        # one slice: the default path would spread these local rows over
-        # defaultParallelism slices, launching a Python worker per slice
-        # EVERY micro-batch
-        base_counts = spark.createDataFrame(
-            spark.sparkContext.parallelize(base_hist or [(0, 0)], 1),
-            "bucket long, n_b long",
-        )
+        base_counts = local_frame(spark, base_hist or [(0, 0)], "bucket long, n_b long")
         j = (
             all_buckets.join(ca, "bucket", "left")
             .join(base_counts, "bucket", "left")
@@ -695,10 +691,9 @@ def drift_monitor_stream(
             F.sum((p * F.log(p / m) + q * F.log(q / m)) / 2).alias("js_total"),
             F.sum((p - q) * F.log(p / q)).alias("psi_total"),
         ).first()
-        metrics = spark.createDataFrame(
-            spark.sparkContext.parallelize(
-                [(int(batch_id), int(n_docs), float(row["js_total"]), float(row["psi_total"]))], 1
-            ),
+        metrics = local_frame(
+            spark,
+            [(int(batch_id), int(n_docs), float(row["js_total"]), float(row["psi_total"]))],
             "batch_id long, n_docs long, js_total double, psi_total double",
         )
         write_dataset(metrics, metrics_path, "parquet", mode="append")

@@ -18,31 +18,33 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def _patch_local_frames(spark):
-    """Route simple list+schema ``createDataFrame`` calls through pandas.
+    """Route simple list+schema ``createDataFrame`` calls through the
+    package's builder of small driver-side frames
+    (``_types.local_frame``).
 
     The plain list path builds a pickled Python RDD, so EVERY action that
     materializes the frame pays Python-worker round trips (~270 ms per
-    action measured at 32 cores); the pandas path ships the same rows as
-    one Arrow batch into a local relation (~40 ms) and never touches a
-    Python worker again.  Tests build ~500 such fixture frames.  Only the
-    trivially-safe shape is rerouted — list of flat tuples of scalar
-    values WITH an explicit schema (no Rows, no nested lists/dicts/
-    structs, no numpy scalars, no kwargs) — everything else falls through
-    to the stock path, so coercion semantics for the exotic cases are
-    unchanged.  Values are kept in object-dtype pandas columns so None
-    survives (a typed column would turn None into NaN/NaT).  A float NaN
-    also falls through: pandas treats object-column NaN as MISSING, so
-    the Arrow path would silently turn a real NaN value into NULL.
+    action measured at 32 cores); the builder ships the same rows as an
+    Arrow table into a local relation and never touches a Python worker
+    again.  Tests build ~500 such fixture frames, so they also exercise
+    the builder the package itself uses.  Only the trivially-safe shape
+    is rerouted — list of flat tuples of scalar values WITH an explicit
+    schema (no Rows, no nested lists/dicts/structs, no numpy scalars, no
+    kwargs) — everything else falls through to the stock path, so
+    coercion semantics for the exotic cases are unchanged.  A float NaN
+    also falls through, as it did when this patch converted through
+    pandas (which read a NaN as missing).
     Plan-shape tests opt back into the stock path (``fast._orig``): a
-    pandas local frame plans as a constant-folded ``LocalRelation``,
-    which hides the scan/filter nodes those tests assert on.
+    local frame plans as a constant-folded ``LocalRelation``, which
+    hides the scan/filter nodes those tests assert on.
     """
     import datetime
     import decimal
     import math
 
-    import pandas as pd
     from pyspark.sql.types import StructType
+
+    from aws_sdk_pandas_spark._types import local_frame
 
     orig = spark.createDataFrame
     _SIMPLE = (bool, int, float, str, bytes, bytearray,
@@ -67,19 +69,7 @@ def _patch_local_frames(spark):
         ):
             ncol = len(data[0])
             if ncol and all(len(r) == ncol for r in data):
-                pdf = pd.DataFrame(
-                    {i: pd.Series([r[i] for r in data], dtype=object) for i in range(ncol)}
-                )
-                names = (
-                    schema.fieldNames()
-                    if isinstance(schema, StructType)
-                    else None
-                )
-                if names is not None:
-                    pdf.columns = names
-                else:
-                    pdf.columns = [f"_{i}" for i in range(ncol)]
-                return orig(pdf, schema)
+                return local_frame(spark, data, schema)
         return orig(data, schema, **kw)
 
     fast._orig = orig
