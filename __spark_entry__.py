@@ -10,6 +10,7 @@ the weaker rows-only check.
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,7 +30,9 @@ _TABLES = (
 )
 
 
-_LOADED: dict[tuple[int, str], bool] = {}
+# session -> the sf_dirs whose views it holds; weak, so a session that is
+# dropped takes its entry with it and a new one registers again
+_LOADED: weakref.WeakKeyDictionary[SparkSession, set[str]] = weakref.WeakKeyDictionary()
 
 
 def _tmpdir(prefix: str) -> str:
@@ -46,16 +49,17 @@ def _tmpdir(prefix: str) -> str:
 
 def _load(spark: SparkSession, sf_dir: str) -> None:
     """Register every test table as a temp view for the SQL front door.
-    Memoized per (session, sf_dir): repeated registration re-resolves
-    every parquet footer on the driver for no reason."""
+    Memoized per (session, sf_dir): temp views live in their session, so
+    a session registers them once; ``read_parquet`` caches the schemas,
+    so a later session's registration runs no Spark job."""
     from aws_sdk_pandas_spark.sources import read_parquet
 
-    key = (id(spark), sf_dir)
-    if _LOADED.get(key):
+    loaded = _LOADED.setdefault(spark, set())
+    if sf_dir in loaded:
         return
     for t in _TABLES:
         read_parquet(spark, f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
-    _LOADED[key] = True
+    loaded.add(sf_dir)
 
 
 def _sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:

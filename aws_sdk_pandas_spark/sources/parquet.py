@@ -7,10 +7,31 @@ Arrow concatenation (lifecycle SURVEY §3.1).  In Spark those are the
 built-in InMemoryFileIndex + PartitionPruning + vectorized parquet reader
 + Tungsten, so the operators here only translate the API surface and keep
 the plan declarative so Catalyst sees everything.
+
+Schema inference runs once per file listing.  Spark infers a parquet
+source's schema with a one-task footer job every time a reader loads it
+(about 100 ms on a warm JVM, against 12-16 ms for the same load with a
+known schema).  ``read_parquet`` keeps, process-wide, one entry per key
+(path list, ``basePath``, reader options and the session confs that
+inference reads, ``_INFERENCE_CONFS``): the local listing of the files
+(sorted path, size and mtime_ns, taken with ``os.walk``/``os.stat``) and
+the ``StructType`` Spark inferred for it.  A read whose listing equals
+the stored one loads with that schema and runs no job; any other read
+infers as before and replaces the entry, so a changed file set is never
+served a stale schema.  The key names no session, so a session restarted
+in the same process reuses the entries.  A caller-given ``schema``,
+``validate_schema=True`` (its ``mergeSchema`` job), globs and non-local
+schemes bypass the cache and infer on every call.  The reference reads
+footers on the client instead (awswrangler/s3/_read.py:186-307); here
+Spark's own inference stays the one source of truth.
 """
 
 from __future__ import annotations
 
+import os
+import re
+import threading
+from collections import OrderedDict
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -19,6 +40,31 @@ from aws_sdk_pandas_spark import _types
 from aws_sdk_pandas_spark.exceptions import InvalidArgument, NoFilesFound
 from aws_sdk_pandas_spark.sources._write import write_dataset
 from aws_sdk_pandas_spark.sources.layout import PartitionFilter, apply_partition_filter
+
+# Session confs that change what Spark infers from the same files: the
+# parquet footer mapping, which files are read, and the partition
+# columns' types (these are part of the stored schema and win over
+# inference on a cached load)
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.timestampType",
+    "spark.sql.caseSensitive",
+)
+# Hadoop's glob characters (Spark globs a path that holds any of them)
+_GLOB_CHARS = frozenset("{}[]*?\\")
+_SCHEME = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
+# key -> (listing, inferred schema, or None when a load with it does not
+# give that schema back); least recently used first
+_SCHEMAS: OrderedDict[tuple, tuple[tuple, Any]] = OrderedDict()
+_SCHEMAS_MAX = 1024
+_SCHEMAS_LOCK = threading.Lock()
 
 
 def read_parquet(
@@ -46,6 +92,22 @@ def read_parquet(
                               hand, awswrangler/s3/_read.py:186-307).
     - chunked iteration    -> inherent: the returned DataFrame is lazy; use
                               ``toLocalIterator()`` for the iterator form.
+
+    The inferred schema is cached per file listing (module docstring): a
+    repeated read of unchanged local files runs no Spark job.  The key is
+    the path list, ``basePath`` (``dataset`` with one path), ``options``
+    and the session's ``_INFERENCE_CONFS``; it holds at most one entry,
+    the latest listing and its schema.  ``schema``, ``validate_schema``,
+    globs and paths with a scheme other than ``file:`` infer every time.
+    A path without a scheme is local, as in the package's other footer
+    reads.
+
+    TIMESTAMP(NANOS) columns, which Spark refuses, are read through
+    ``spark.sql.legacy.parquet.nanosAsLong`` (set on the session, as
+    Spark offers it) and rebuilt floored to microseconds with Spark's
+    microsecond typing: ``timestamp_ntz`` for a column without a zone
+    when ``inferTimestampNTZ`` is on, with no session-zone shift, else
+    ``timestamp``.
     """
     def _build_reader():
         reader = spark.read.format("parquet")
@@ -53,19 +115,24 @@ def read_parquet(
             reader = reader.schema(schema)
         if validate_schema:
             reader = reader.option("mergeSchema", "true")
-        if dataset and isinstance(path, str):
-            reader = reader.option("basePath", path)
+        if base_path is not None:
+            reader = reader.option("basePath", base_path)
         for k, v in (options or {}).items():
             reader = reader.option(k, v)
         return reader
 
+    def _load() -> DataFrame:
+        if schema is not None or validate_schema:
+            return _build_reader().load(paths)
+        return _load_cached(spark, paths, base_path, options, _build_reader)
+
     paths = [path] if isinstance(path, str) else list(path)
     if not paths:
         raise NoFilesFound("empty path list")
+    base_path = path if dataset and isinstance(path, str) else None
     try:
-        df = _build_reader().load(paths)
-        df.schema  # force footer/schema resolution now so fallbacks trigger here
-        if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true":
+        df = _load()
+        if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true":
             # conf is sticky session-wide: a previous nanos fallback leaves
             # ns columns reading as longs — rebuild them here too
             df = _convert_nanos_columns(spark, df, paths)
@@ -74,7 +141,8 @@ def read_parquet(
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
             raise NoFilesFound(msg) from exc
         if "PARQUET_TYPE_ILLEGAL" in msg and "NANOS" in msg:
-            df = _read_with_nanos(spark, paths, _build_reader)
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            df = _convert_nanos_columns(spark, _load(), paths)
         else:
             raise
     if dataset and partition_filter is not None and isinstance(path, str):
@@ -91,44 +159,102 @@ def read_parquet(
     return df
 
 
-def _read_with_nanos(spark: SparkSession, paths: list[str], build_reader) -> DataFrame:
-    """Nanosecond-timestamp fallback: Spark's parquet reader rejects
-    TIMESTAMP(NANOS) (PARQUET_TYPE_ILLEGAL).  Re-read with
-    ``spark.sql.legacy.parquet.nanosAsLong`` and rebuild the timestamp
-    columns with exact integer ``div 1000`` (micros), identified from the
-    parquet footer."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def _load_cached(
+    spark: SparkSession,
+    paths: list[str],
+    base_path: str | None,
+    options: dict[str, Any] | None,
+    build_reader,
+) -> DataFrame:
+    """Load with the schema inferred for the same key and file listing,
+    or infer (one Spark job) and store it (module docstring)."""
+    listing = _local_listing(paths)
+    if listing is None:
+        return build_reader().load(paths)
+    key = (
+        tuple(paths),
+        base_path,
+        tuple(sorted((str(k), str(v)) for k, v in (options or {}).items())),
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    with _SCHEMAS_LOCK:
+        entry = _SCHEMAS.get(key)
+        if entry is not None:
+            _SCHEMAS.move_to_end(key)
+    if entry is not None and entry[0] == listing:
+        if entry[1] is None:
+            return build_reader().load(paths)
+        df = build_reader().schema(entry[1]).load(paths)
+        if df.schema == entry[1]:
+            return df
+        # a partition column that the files also hold keeps its data
+        # position when inferred but moves last under a given schema:
+        # such a listing infers every time
+        inferred = None
+    else:
+        inferred = build_reader().load(paths)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[key] = (listing, None if inferred is None else inferred.schema)
+        _SCHEMAS.move_to_end(key)
+        while len(_SCHEMAS) > _SCHEMAS_MAX:
+            _SCHEMAS.popitem(last=False)
+    return build_reader().load(paths) if inferred is None else inferred
 
-    from pyspark.sql import functions as F
 
-    sample = _first_parquet_file(spark, paths)
-    ns_cols: list[str] = []
-    if sample is not None:
-        try:
-            footer = pq.read_schema(sample)
-            ns_cols = [
-                f.name
-                for f in footer
-                if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-            ]
-        except Exception:
-            ns_cols = []
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = build_reader().load(paths)
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
+def _local_listing(paths: list[str]) -> tuple[tuple[str, int, int], ...] | None:
+    """Sorted (path, size, mtime_ns) of every file under each path; None
+    when a path is a glob, has a non-local scheme or does not exist (the
+    read then infers, and Spark raises for a missing path)."""
+    files: list[tuple[str, int, int]] = []
+    try:
+        for p in paths:
+            root = _local_path(p)
+            if root is None:
+                return None
+            if os.path.isdir(root):
+                for dirpath, _dirs, names in os.walk(root, followlinks=True):
+                    for name in names:
+                        f = os.path.join(dirpath, name)
+                        st = os.stat(f)
+                        files.append((f, st.st_size, st.st_mtime_ns))
+            else:
+                st = os.stat(root)
+                files.append((root, st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    files.sort()
+    return tuple(files)
+
+
+def _local_path(path: str) -> str | None:
+    """The absolute local path Spark reads for ``path`` (None for globs
+    and other schemes).  Hadoop takes ``%`` in a path literally."""
+    if any(ch in _GLOB_CHARS for ch in path):
+        return None
+    if path.startswith("file:"):
+        rest = path[len("file:"):]
+        if rest.startswith("//"):  # file:///abs; file://host/... is remote
+            rest = rest[2:]
+        return rest if rest.startswith("/") else None
+    if _SCHEME.match(path):
+        return None
+    return os.path.abspath(path)
 
 
 def _convert_nanos_columns(spark: SparkSession, df: DataFrame, paths: list[str]) -> DataFrame:
-    """Rebuild timestamp columns that the nanosAsLong conf turned into
-    longs (footer says ns, Spark type is long)."""
+    """Rebuild the timestamp columns that the nanosAsLong conf turned into
+    longs (footer says ns, Spark type is long): floor to microseconds,
+    then type them as Spark types a microsecond column of the same footer
+    (``timestamp_ntz`` without a zone when ``inferTimestampNTZ`` is on)."""
+    from pyspark.sql import types as T
+
+    longs = {f.name for f in df.schema.fields if isinstance(f.dataType, T.LongType)}
+    if not longs:
+        return df
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     sample = _first_parquet_file(spark, paths)
     if sample is None:
@@ -137,14 +263,18 @@ def _convert_nanos_columns(spark: SparkSession, df: DataFrame, paths: list[str])
         footer = pq.read_schema(sample)
     except Exception:
         return df
-    spark_types = {f.name: f.dataType for f in df.schema.fields}
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
     for f in footer:
-        if (
-            pa.types.is_timestamp(f.type)
-            and f.type.unit == "ns"
-            and isinstance(spark_types.get(f.name), T.LongType)
-        ):
-            df = df.withColumn(f.name, F.timestamp_micros(F.expr(f"`{f.name}` div 1000")))
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns" and f.name in longs:
+            micros = f"(`{f.name}` - pmod(`{f.name}`, 1000)) div 1000"
+            if f.type.tz is None and ntz:
+                # wall-clock micros: adding them to the NTZ epoch involves
+                # no zone, where timestamp_micros -> timestamp_ntz shifts
+                # by the session zone (and loses a DST fall-back hour)
+                col = F.expr(f"timestampadd(MICROSECOND, {micros}, TIMESTAMP_NTZ'1970-01-01 00:00:00')")
+            else:
+                col = F.timestamp_micros(F.expr(micros))
+            df = df.withColumn(f.name, col)
     return df
 
 
@@ -256,7 +386,9 @@ def read_parquet_metadata(
 ) -> tuple[dict[str, str], dict[str, str] | None]:
     """Infer (columns_types, partitions_types) as Athena-style type strings
     (reference: s3/_read_parquet.py:765).  Footer-only — Spark resolves the
-    schema without scanning data."""
+    schema without scanning data, in one job on the first call; a
+    repeated call on unchanged local files takes the schema
+    ``read_parquet`` cached and runs no job."""
     df = read_parquet(spark, path, dataset=dataset)
     partitions: dict[str, str] = {}
     columns: dict[str, str] = {}

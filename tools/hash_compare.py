@@ -1,7 +1,9 @@
 """Hash registry query outputs for result-identity checks across trees.
 
-Usage: python tools/hash_compare.py <repo_root> <sf_dir> name [name ...]
-Prints "<name> <rowcount> <md5>" per query (sorted-row md5).
+Usage: python tools/hash_compare.py <repo_root> <sf_dir> [name ...]
+Prints "<name> <rowcount> <md5>" per query (sorted-row md5); with no
+names, every registry entry.  A failing entry prints
+"<name> ERROR <exception>" and the run goes on.
 """
 
 from __future__ import annotations
@@ -27,10 +29,10 @@ def main() -> int:
     import aws_sdk_pandas_spark as asps
 
     sf_dir = sys.argv[2]
-    names = sys.argv[3:]
+    qs = entrymod.queries()
+    names = sys.argv[3:] or list(qs)
     spark = asps.get_spark(app_name="hash_compare")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
     for name in names:
         try:
             df = qs[name](spark, sf_dir)
@@ -38,7 +40,11 @@ def main() -> int:
             h = hashlib.md5(repr(rows).encode()).hexdigest()
             print(f"{name} {len(rows)} {h}", flush=True)
         except Exception as exc:  # noqa: BLE001
-            print(f"{name} ERROR {type(exc).__name__}: {exc}", flush=True)
+            first = (str(exc).splitlines() or [""])[0][:200]
+            print(f"{name} ERROR {type(exc).__name__}: {first}", flush=True)
+        finally:
+            # caches an entry leaves behind would pile up over a full sweep
+            spark.catalog.clearCache()
     return 0
 
 
