@@ -18,8 +18,12 @@ inference reads, ``_INFERENCE_CONFS``): the local listing of the files
 the ``StructType`` Spark inferred for it.  A read whose listing equals
 the stored one loads with that schema and runs no job; any other read
 infers as before and replaces the entry, so a changed file set is never
-served a stale schema.  The key names no session, so a session restarted
-in the same process reuses the entries.  A caller-given ``schema``,
+served a stale schema (except by a rewrite in place that keeps the
+file's size and lands within the filesystem's mtime granularity, a few
+ms).  At most ``_SCHEMAS_MAX`` keys are kept, the
+least recently used dropped first.  The key names no session, so a
+session restarted in the same process reuses the entries.  A
+caller-given ``schema``,
 ``validate_schema=True`` (its ``mergeSchema`` job), globs and non-local
 schemes bypass the cache and infer on every call.  The reference reads
 footers on the client instead (awswrangler/s3/_read.py:186-307); here

@@ -191,3 +191,60 @@ def test_registry_views_register_again_in_a_fresh_session(spark, sf_dir):
     entry._load(fresh, sf_dir)
     assert fresh.catalog.tableExists("region")
     assert fresh.sql("SELECT COUNT(*) FROM region").collect()[0][0] == 5
+
+
+def test_cache_stays_consistent_under_concurrent_reads(tmp_path, monkeypatch):
+    """Threads (more than cores) read through the cache with a bound small
+    enough to evict all the time: every read gets its own path's schema
+    and the cache never holds more keys than its bound.  Spark is faked:
+    a load returns the given schema or, when inferring, the path's."""
+    import sys
+    import threading
+    from types import SimpleNamespace
+
+    from aws_sdk_pandas_spark.sources import parquet
+
+    monkeypatch.setattr(parquet, "_SCHEMAS", type(parquet._SCHEMAS)())
+    monkeypatch.setattr(parquet, "_SCHEMAS_MAX", 3)
+    files = []
+    for i in range(8):
+        f = str(tmp_path / f"f{i}.parquet")
+        open(f, "wb").write(b"x" * (i + 1))
+        files.append(f)
+    spark = SimpleNamespace(conf=SimpleNamespace(get=lambda key: "false"))
+
+    class Reader:
+        given = None
+
+        def schema(self, s):
+            self.given = s
+            return self
+
+        def load(self, paths):
+            return SimpleNamespace(schema=self.given or f"schema of {paths[0]}")
+
+    errors: list[BaseException] = []
+
+    def work(seed):
+        try:
+            for n in range(300):
+                f = files[(seed * 7 + n) % len(files)]
+                df = parquet._load_cached(spark, [f], None, None, Reader)
+                assert df.schema == f"schema of {f}"
+                with parquet._SCHEMAS_LOCK:
+                    assert len(parquet._SCHEMAS) <= 3
+        except BaseException as exc:  # noqa: BLE001 - reported below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(i,)) for i in range(2 * (os.cpu_count() or 2))]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
