@@ -37,6 +37,7 @@ import re
 import threading
 from collections import OrderedDict
 from typing import Any
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -103,15 +104,15 @@ def read_parquet(
     and the session's ``_INFERENCE_CONFS``; it holds at most one entry,
     the latest listing and its schema.  ``schema``, ``validate_schema``,
     globs and paths with a scheme other than ``file:`` infer every time.
-    A path without a scheme is local, as in the package's other footer
-    reads.
+    A path without a scheme is local.
 
     TIMESTAMP(NANOS) columns, which Spark refuses, are read through
     ``spark.sql.legacy.parquet.nanosAsLong`` (set on the session, as
     Spark offers it) and rebuilt floored to microseconds with Spark's
     microsecond typing: ``timestamp_ntz`` for a column without a zone
     when ``inferTimestampNTZ`` is on, with no session-zone shift, else
-    ``timestamp``.
+    ``timestamp``.  The footer that names those columns is read from the
+    first local file the load listed.
     """
     def _build_reader():
         reader = spark.read.format("parquet")
@@ -139,14 +140,14 @@ def read_parquet(
         if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true":
             # conf is sticky session-wide: a previous nanos fallback leaves
             # ns columns reading as longs — rebuild them here too
-            df = _convert_nanos_columns(spark, df, paths)
+            df = _convert_nanos_columns(spark, df)
     except Exception as exc:
         msg = str(exc)
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
             raise NoFilesFound(msg) from exc
         if "PARQUET_TYPE_ILLEGAL" in msg and "NANOS" in msg:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = _convert_nanos_columns(spark, _load(), paths)
+            df = _convert_nanos_columns(spark, _load())
         else:
             raise
     if dataset and partition_filter is not None and isinstance(path, str):
@@ -245,7 +246,7 @@ def _local_path(path: str) -> str | None:
     return os.path.abspath(path)
 
 
-def _convert_nanos_columns(spark: SparkSession, df: DataFrame, paths: list[str]) -> DataFrame:
+def _convert_nanos_columns(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Rebuild the timestamp columns that the nanosAsLong conf turned into
     longs (footer says ns, Spark type is long): floor to microseconds,
     then type them as Spark types a microsecond column of the same footer
@@ -260,7 +261,9 @@ def _convert_nanos_columns(spark: SparkSession, df: DataFrame, paths: list[str])
 
     from pyspark.sql import functions as F
 
-    sample = _first_parquet_file(spark, paths)
+    # a local sample from the files the load already listed
+    uris = (urlsplit(f) for f in df.inputFiles())
+    sample = next((unquote(u.path) for u in uris if u.scheme == "file"), None)
     if sample is None:
         return df
     try:
@@ -280,21 +283,6 @@ def _convert_nanos_columns(spark: SparkSession, df: DataFrame, paths: list[str])
                 col = F.timestamp_micros(F.expr(micros))
             df = df.withColumn(f.name, col)
     return df
-
-
-def _first_parquet_file(spark: SparkSession, paths: list[str]) -> str | None:
-    """A local sample file for footer inspection (None if not local)."""
-    from aws_sdk_pandas_spark.sources import fs as _fs
-
-    for p in paths:
-        candidates = [p] if p.endswith(".parquet") and _fs._is_file(spark, p) else _fs.list_objects(
-            spark, p, suffix=".parquet"
-        )
-        for c in candidates:
-            local = c.removeprefix("file:")
-            if local.startswith("/"):
-                return local
-    return None
 
 
 def read_parquet_table(

@@ -170,6 +170,21 @@ def test_nanosecond_timestamps_read_like_microsecond_ones(spark, tmp_path):
     assert _rows(after) == _rows(before)
 
 
+def test_nanosecond_columns_rebuilt_through_a_glob_and_escaped_names(spark, tmp_path):
+    """The footer sample is taken from the files the load listed, so a
+    glob (which bypasses the schema cache) and a directory whose name
+    Spark escapes in file URIs still get their ns columns rebuilt."""
+    d = tmp_path / "ns dir%20x"
+    d.mkdir()
+    wall = [dt.datetime(2024, 1, 2, 3, 4, 5, 678901)]
+    ns = [(wall[0] - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1) * 1000 + 999]
+    pq.write_table(pa.table({"ts": pa.array(ns, pa.timestamp("ns"))}), str(d / "part-0.parquet"))
+    session = spark.newSession()
+    df = read_parquet(session, str(d / "*.parquet"))
+    assert df.dtypes == [("ts", "timestamp_ntz")]
+    assert [r.ts for r in df.collect()] == wall
+
+
 def test_registry_views_register_again_in_a_fresh_session(spark, sf_dir):
     """The view memo holds sessions weakly: a dropped session's entry goes
     with it, so a fresh session (which may reuse the dropped one's id)
