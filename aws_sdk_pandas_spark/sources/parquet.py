@@ -22,7 +22,10 @@ served a stale schema (except by a rewrite in place that keeps the
 file's size and lands within the filesystem's mtime granularity, a few
 ms).  At most ``_SCHEMAS_MAX`` keys are kept, the
 least recently used dropped first.  The key names no session, so a
-session restarted in the same process reuses the entries.  A
+session restarted in the same process reuses the entries.  The cache
+pays only where one process reads unchanged files again (a repeated
+query over the same inputs, or a restarted session); files that are
+new at each read, such as a batch landed just before, always miss.  A
 caller-given ``schema``,
 ``validate_schema=True`` (its ``mergeSchema`` job), globs and non-local
 schemes bypass the cache and infer on every call.  The reference reads
